@@ -162,10 +162,11 @@ def main() -> None:
 
         pipe.stage("st_join", st_join)
 
+        knn_stats: dict = {}
         pipe.stage("knn", lambda: knn_cells(
-            prepared, queries.where(F.col("kind") == "point"), k=5))
-        from rustac_spark.geo.knn import LAST_STATS
-        print(f"# knn fallback stats: {LAST_STATS}", file=sys.stderr)
+            prepared, queries.where(F.col("kind") == "point"), k=5,
+            stats_out=knn_stats))
+        print(f"# knn fallback stats: {knn_stats}", file=sys.stderr)
 
         pipe.stage("tiles", lambda: (
             explode_tiles(explode_tiles(

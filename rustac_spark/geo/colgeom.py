@@ -8,12 +8,13 @@ time, which measures as the join stage's scaling ceiling at high
 parallelism (the Column-only join runs ~3x faster at local[16] on the
 bench input than the same join with the Arrow refine attached).
 
-Since the broadcast-join path already captures every polygon's pieces
-driver-side (geo/join.py:190-199), small geometries — the common STAC
-search contract: a handful of query polygons with tens of vertices —
-can instead be compiled into a boolean Column expression evaluated
-inside WholeStageCodegen: zero Python, zero Arrow, short-circuited
-per row.
+The spatial join captures every polygon's pieces driver-side, and a
+search has one literal geometry, so small geometries — the common
+STAC search contract: a handful of polygons with tens of vertices —
+compile into a boolean Column expression evaluated inside generated
+code: zero Python, zero Arrow, short-circuited per row.
+geometry_predicate is that one predicate; spatial_join
+(compile_refine_predicate) and build_plan / CQL2 s_intersects use it.
 
 Physical form matters: a direct Column transliteration of the
 ray-cast + on-edge kernels produced ~900 expression nodes per polygon
@@ -56,12 +57,10 @@ round 6.
 RE-MEASURED, round 7: the multi-rect inscribed covers
 (predicates.inscribed_rects, up to 3 verified interior rects per
 polygon) absorb ~94% of polygon candidates BEFORE any SAT block
-runs, which flips the economics: compiled now beats the memoized
-refine at every parallelism level (sf0.1 build+write interleaved
-A/B: local[8] 2.39 vs 3.35 s, local[16] 1.75 vs 2.62 s, local[32]
-1.63 vs 2.75 s), with zero eager Spark jobs at plan build. The
-compiled predicate is therefore the spatial_join DEFAULT since
-round 7 (geo/join.py), with the memo as the out-of-budget fallback.
+runs, which flips the economics: compiled beat the (since deleted)
+reject-memo refine at every parallelism level (sf0.1 build+write
+interleaved A/B: local[8] 2.39 vs 3.35 s, local[16] 1.75 vs 2.62 s,
+local[32] 1.63 vs 2.75 s), with zero eager Spark jobs at plan build.
 The analysis below of WHERE generated code breaks remains
 load-bearing for any future Column geometry work.
 
@@ -77,8 +76,13 @@ crates/duckdb/src/client.rs:343-359 / crates/core/src/item.rs:457-468.
 
 from __future__ import annotations
 
+import hashlib
+import pickle
+
 import numpy as np
 from pyspark.sql import Column, functions as F
+
+from .predicates import inscribed_rects
 
 # Per-query vertex cap: past this, per-row evaluation cost stops
 # paying for itself against the Arrow kernel's vectorized batches.
@@ -86,7 +90,7 @@ DEFAULT_VERTEX_BUDGET = 96
 
 # Total estimated expression nodes across ALL compiled queries.
 # Because the refine Filter is deliberately kept OUT of whole-stage
-# codegen (see compile_refine_predicate), its CASE branches are
+# codegen (see anchored), its CASE branches are
 # generated as separate split methods and the old single-method
 # Janino ceiling (~2-4k nodes, measured) no longer binds; this cap
 # bounds generated-class size and plan/compile latency instead.
@@ -306,19 +310,16 @@ def _n_vertices(pieces) -> int:
 
 def compile_pieces_predicate(pieces, rx0: Column, ry0: Column,
                              rx1: Column, ry1: Column,
-                             vertex_budget: int | None = None,
                              ) -> tuple[Column, int] | None:
     """(expr, node estimate): does the per-row rect intersect ANY
     piece — the Column twin of predicates.rects_intersect_pieces
     (union semantics of Multi*/GeometryCollection, search.rs:236-251).
 
-    Returns None when the geometry exceeds ``vertex_budget`` vertices
-    or a ring cannot be triangulated — the caller keeps the Arrow
-    kernel for that query.
+    Returns None when the geometry exceeds DEFAULT_VERTEX_BUDGET
+    vertices or a ring cannot be triangulated — the caller keeps the
+    Arrow kernel for that geometry.
     """
-    if vertex_budget is None:
-        vertex_budget = DEFAULT_VERTEX_BUDGET
-    if _n_vertices(pieces) > vertex_budget:
+    if _n_vertices(pieces) > DEFAULT_VERTEX_BUDGET:
         return None
     out: Column = F.lit(False)
     nodes = 0
@@ -359,130 +360,157 @@ def compile_pieces_predicate(pieces, rx0: Column, ry0: Column,
     return out, nodes
 
 
-# Compiled-predicate cache: building the SAT Column tree is DRIVER
-# work — thousands of py4j round trips (~4-6 s measured for the
-# 17-polygon bench set) paid identically at every parallelism level,
-# i.e. pure serial cost on every fresh spatial_join over the same
-# query set. Geometries are content-hashed (pickle of the numpy
-# pieces) and the finished Column reused: a Column is an immutable
-# expression tree, safe to splice into any number of plans.
-_COMPILE_CACHE: dict[tuple, "Column | None"] = {}
-_COMPILE_CACHE_MAX = 32
+def _content_key(pieces) -> str:
+    return hashlib.sha256(pickle.dumps(pieces)).hexdigest()
 
 
-def _compile_cache_key(pieces_by_qid, inner_by_qid, cols, budgets):
-    import hashlib
-    import pickle
-    geo = hashlib.sha256(pickle.dumps(
-        (sorted(pieces_by_qid.items()),
-         sorted((inner_by_qid or {}).items())))).hexdigest()
-    return (geo, tuple(str(c) for c in cols), budgets)
+# Max inscribed rects per polygon for the containment accept
+# (predicates.inscribed_rects): the accept is `inside ANY rect`, so
+# more rects = fewer candidates paying the exact test, at 4 extra
+# comparisons per rect per row.
+_INNER_K = 3
+
+# Driver-side geometry work, memoized on geometry CONTENT (pickle
+# hash of the pieces) so an entry can never go stale. It holds:
+# - inscribed covers: the anchor-grid search costs ~6 ms of driver
+#   numpy per polygon;
+# - compiled Columns, per geometry and the join's whole refine CASE:
+#   building the SAT Column tree is thousands of py4j round trips
+#   (~4-6 s measured for the 17-polygon bench set), and even
+#   re-assembling the CASE from cached geometries is ~100 calls —
+#   pure serial cost on every plan build. A Column is an immutable
+#   expression tree, safe to splice into any number of plans.
+# Per-request callers (HTTP server, bench pass) hit it every time.
+# Cleared wholesale when full and only read with .get: server threads
+# share it, and single dict operations cannot race into an exception.
+_CACHE: dict[tuple, object] = {}
+_CACHE_MAX = 256
 
 
-def _cache_put(key, value) -> None:
-    if len(_COMPILE_CACHE) >= _COMPILE_CACHE_MAX:
-        _COMPILE_CACHE.pop(next(iter(_COMPILE_CACHE)))
-    _COMPILE_CACHE[key] = value
+def _cached(key: tuple, build):
+    """build() memoized in _CACHE; a None result (over budget) is not
+    cached — the budget checks fail fast."""
+    out = _CACHE.get(key)
+    if out is None:
+        out = build()
+        if out is not None:
+            if len(_CACHE) >= _CACHE_MAX:
+                _CACHE.clear()
+            _CACHE[key] = out
+    return out
 
 
-def compile_refine_predicate(pieces_by_qid: dict[int, list],
-                             inner_by_qid: dict[int, tuple] | None,
-                             qid: Column, kind: Column | None,
-                             rx0: Column, ry0: Column,
-                             rx1: Column, ry1: Column,
-                             vertex_budget: int | None = None,
-                             node_budget: int | None = None,
-                             ) -> Column | None:
-    """The whole refine filter as one Column, or None if ANY query's
-    geometry exceeds a budget (all-or-nothing: a partial compile
-    would still drag the full stream through Arrow for the rest, so
-    there is nothing to win).
+def inscribed_cover(pieces) -> list[tuple]:
+    """Up to _INNER_K axis-aligned rects strictly inside the geometry
+    (empty unless it is one hole-free polygon): a rect wholly inside
+    any of them intersects the geometry by containment."""
+    return _cached(("cover", _content_key(pieces)),
+                   lambda: inscribed_rects(pieces, _INNER_K))
 
-    Matches _mixed_refine row semantics: non-polygon kinds pass (rect
-    overlap is already exact for them), polygon kinds take the
-    compiled exact test, with the inscribed-rect containment accept
-    short-circuiting ahead of it (geo/join.py:96-101).
 
-    ``node_budget`` bounds the ESTIMATED expression-node total across
-    all queries: the CASE chain lands in one generated method, and
-    past the JVM's 64 KB bytecode ceiling Janino fails and Spark
-    falls back to interpreted evaluation — slower than the Arrow
-    kernel this compiler exists to beat.
+def geometry_predicate(pieces, rx0: Column, ry0: Column,
+                       rx1: Column, ry1: Column,
+                       ) -> tuple[Column, int] | None:
+    """(expr, node estimate): the engine's ONE rect × geometry
+    intersects predicate — the multi-rect inscribed-cover accept
+    OR-ed ahead of the compiled SAT test. spatial_join's polygon
+    refine (via compile_refine_predicate) and build_plan's
+    ``intersects`` / CQL2 ``s_intersects`` refine both build it here.
+
+    None only when the geometry is over DEFAULT_VERTEX_BUDGET or a
+    ring cannot be triangulated; the caller then keeps the Arrow
+    kernel for that geometry.
     """
-    if node_budget is None:
-        node_budget = DEFAULT_NODE_BUDGET
-    ckey = _compile_cache_key(
-        pieces_by_qid, inner_by_qid,
-        (qid, kind if kind is not None else "<nokind>",
-         rx0, ry0, rx1, ry1),
-        (vertex_budget, node_budget))
-    if ckey in _COMPILE_CACHE:
-        return _COMPILE_CACHE[ckey]
-    case: Column | None = None
-    total_nodes = 0
-    for q, pieces in pieces_by_qid.items():
-        compiled = compile_pieces_predicate(pieces, rx0, ry0, rx1, ry1,
-                                            vertex_budget)
+    def build():
+        compiled = compile_pieces_predicate(pieces, rx0, ry0, rx1, ry1)
         if compiled is None:
-            _cache_put(ckey, None)
             return None
         expr, nodes = compiled
-        total_nodes += nodes
-        if total_nodes > node_budget:
-            _cache_put(ckey, None)
-            return None
-        # r7: entries may be a single rect tuple (legacy) or a LIST
-        # of inscribed rects — inside ANY of them short-circuits the
-        # exact test
-        irs = (inner_by_qid or {}).get(q)
-        if isinstance(irs, tuple):
-            irs = [irs]
-        for ir in (irs or []):
+        for ir in inscribed_cover(pieces):
             inside_ir = ((rx0 >= F.lit(float(ir[0])))
                          & (ry0 >= F.lit(float(ir[1])))
                          & (rx1 <= F.lit(float(ir[2])))
                          & (ry1 <= F.lit(float(ir[3]))))
             expr = inside_ir | expr
-        case = (F.when(qid == F.lit(q), expr) if case is None
-                else case.when(qid == F.lit(q), expr))
-    polygon_ok = F.lit(False) if case is None else case.otherwise(
-        F.lit(False))
-    # kind=None: the caller's frame is polygon rows only (the memoized
-    # refine's hard-candidate frame), so the pass-through term drops
-    pred = (polygon_ok if kind is None
-            else (kind != F.lit("polygon")) | polygon_ok)
-    # WSCG escape hatch: inlined into a WholeStageCodegen consume()
-    # (or merged into the broadcast join's condition) this CASE chain
-    # lands in ONE Java method and Janino fails past ~2-4k nodes
-    # (measured), silently degrading the WHOLE join stage to
-    # interpreted execution. The always-true anchor below keeps the
-    # predicate a standalone Filter with split-method codegen:
-    # - every conjunct is NONDETERMINISTIC, because the join pushdown
-    #   rule PARTITIONS conjuncts by determinism and merges every
-    #   deterministic one into the join condition — so the CASE chain
-    #   is fused into ONE conjunct by OR-ing an always-false
-    #   nondeterministic term. `rand() < -1` does NOT work (the
-    #   optimizer range-folds rand comparisons and the OR collapses,
-    #   verified); `spark_partition_id() < 0` survives and costs one
-    #   int compare;
-    # - the anchor conjunct contains a higher-order function
-    #   (CodegenFallback), which excludes just this Filter from
-    #   whole-stage codegen — the scan / explode / broadcast-join
-    #   below keep WSCG, and the standalone Filter's predicate goes
-    #   through GeneratePredicate in INPUT_ROW mode, where Spark CAN
-    #   split the CASE branches into separate (JIT-able) methods.
-    # Cost: the predicate conjunct runs first, so only ACCEPTED rows
-    # pay the anchor's interpreted 1-element array probe (&& short-
-    # circuits); rejected rows pay one extra int compare.
-    # FIXED seed: F.rand() draws a fresh seed per call, making the
-    # expression tree differ between otherwise-identical plans — every
-    # fresh spatial_join then misses the codegen cache and re-Janinos
-    # the whole CASE predicate (~5 s/pass measured in the bench
-    # pipeline). rand(42) is still flagged nondeterministic (which is
-    # all the anchor needs) but keeps the tree — and the generated
-    # code — identical across plan builds, so compilation is paid once
-    # per session.
+        return expr, nodes
+
+    return _cached((_content_key(pieces),
+                    tuple(str(c) for c in (rx0, ry0, rx1, ry1))), build)
+
+
+def anchored(pred: Column) -> Column:
+    """``pred`` wrapped so it stays a standalone, split-method Filter.
+
+    WSCG escape hatch: inlined into a WholeStageCodegen consume() (or
+    merged into the broadcast join's condition) a large CASE chain
+    lands in ONE Java method and Janino fails past ~2-4k nodes
+    (measured), silently degrading the WHOLE stage to interpreted
+    execution. The always-true anchor keeps the predicate a
+    standalone Filter with split-method codegen:
+    - every conjunct is NONDETERMINISTIC, because the join pushdown
+      rule PARTITIONS conjuncts by determinism and merges every
+      deterministic one into the join condition — so the predicate
+      is fused into ONE conjunct by OR-ing an always-false
+      nondeterministic term. `rand() < -1` does NOT work (the
+      optimizer range-folds rand comparisons and the OR collapses,
+      verified); `spark_partition_id() < 0` survives and costs one
+      int compare;
+    - the anchor conjunct contains a higher-order function
+      (CodegenFallback), which excludes just this Filter from
+      whole-stage codegen — the scan / explode / broadcast-join
+      below keep WSCG, and the standalone Filter's predicate goes
+      through GeneratePredicate in INPUT_ROW mode, where Spark CAN
+      split the CASE branches into separate (JIT-able) methods.
+    Cost: the predicate conjunct runs first, so only ACCEPTED rows
+    pay the anchor's interpreted 1-element array probe (&& short-
+    circuits); rejected rows pay one extra int compare.
+    FIXED seed: F.rand() draws a fresh seed per call, making the
+    expression tree differ between otherwise-identical plans — every
+    fresh plan then misses the codegen cache and re-Janinos the whole
+    predicate (~5 s/pass measured in the bench pipeline). rand(42) is
+    still flagged nondeterministic (which is all the anchor needs)
+    but keeps the generated code identical across plan builds, so
+    compilation is paid once per session.
+    """
     anchor = F.exists(F.array(F.rand(42)), lambda x: x >= F.lit(-1.0))
-    out = (pred | (F.spark_partition_id() < F.lit(0))) & anchor
-    _cache_put(ckey, out)
-    return out
+    return (pred | (F.spark_partition_id() < F.lit(0))) & anchor
+
+
+def compile_refine_predicate(pieces_by_qid: dict[int, list],
+                             qid: Column, kind: Column,
+                             rx0: Column, ry0: Column,
+                             rx1: Column, ry1: Column) -> Column | None:
+    """The spatial join's whole refine filter as one anchored Column,
+    or None if ANY query's geometry is out of budget (all-or-nothing:
+    a partial compile would still drag the full stream through Arrow
+    for the rest, so there is nothing to win).
+
+    Matches _mixed_refine row semantics: non-polygon kinds pass (rect
+    overlap is already exact for them), polygon kinds take
+    geometry_predicate in a CASE over the query id.
+
+    DEFAULT_NODE_BUDGET bounds the ESTIMATED expression-node total
+    across all queries: past the JVM's 64 KB bytecode ceiling Janino
+    fails and Spark falls back to interpreted evaluation — slower
+    than the Arrow kernel this compiler exists to beat.
+    """
+    def build():
+        case: Column | None = None
+        total_nodes = 0
+        for q, pieces in pieces_by_qid.items():
+            compiled = geometry_predicate(pieces, rx0, ry0, rx1, ry1)
+            if compiled is None:
+                return None
+            expr, nodes = compiled
+            total_nodes += nodes
+            if total_nodes > DEFAULT_NODE_BUDGET:
+                return None
+            case = (F.when(qid == F.lit(q), expr) if case is None
+                    else case.when(qid == F.lit(q), expr))
+        polygon_ok = F.lit(False) if case is None else case.otherwise(
+            F.lit(False))
+        return anchored((kind != F.lit("polygon")) | polygon_ok)
+
+    return _cached((_content_key(sorted(pieces_by_qid.items())),
+                    tuple(str(c) for c in (qid, kind, rx0, ry0, rx1, ry1))),
+                   build)

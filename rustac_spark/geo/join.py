@@ -21,8 +21,9 @@ Scale design (10^12 pages, 1000 executors):
   is counted only in the cell that contains the top-left corner of the
   bbox-intersection — pure Column math;
 - bbox/point queries finish exactly in Column ops (rect overlap is
-  exact for our rectangular footprints); only irregular polygons take
-  the Arrow-batched numpy refine kernel.
+  exact for our rectangular footprints); irregular polygons take the
+  compiled Column predicate (colgeom), and only geometries over its
+  budget take the Arrow-batched numpy refine kernel.
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from . import cells as default_grid
-from .cells import DEFAULT_RES, cell_of_point, cover_bbox
+from .cells import DEFAULT_RES
+from .colgeom import compile_refine_predicate, inscribed_cover
 from .predicates import rects_intersect_pieces
 from .wkbio import geometry_pieces, parse_wkb
 
@@ -82,330 +84,28 @@ def _reference_point_dedup(res: int, hot: set[int] | None = None,
     return F.col("cell") == ref
 
 
-# Upper bound on REJECTED (footprint, polygon) verdict pairs for the
-# memoized refine: past this the broadcast back onto the candidate
-# stream stops being clearly safe (~50 B/row -> ~100 MB) and the
-# caller falls back to the inline Arrow refine.
-MEMO_VERDICT_CAP = 2_000_000
-
-# Below this many rejects the set is collected driver-side (Arrow)
-# and rebroadcast from a LocalRelation, so no persisted frame
-# outlives the plan build (~40 B/row -> ≤8 MB driver transfer).
-MEMO_COLLECT_CAP = 200_000
-
-# Collected reject sets are memoized per (applicationId, pages-plan
-# semantic hash, pages DATA VERSION, geometry content hash) so a
-# long-lived caller — the HTTP server answering repeated searches
-# over the same snapshot with the same intersects geometry — pays the
-# eager reject computation once, not per request (same rationale as
-# colgeom's _COMPILE_CACHE). semanticHash only identifies the PLAN
-# (it is unchanged when the files at the same path are overwritten),
-# so the key also carries a per-leaf data version — see
-# _data_version. Entries are small pandas frames (≤MEMO_COLLECT_CAP
-# rows); OVER_CAP decisions are cached too (the fallback verdict is
-# equally deterministic).
-_REJECT_CACHE: dict[tuple, "pd.DataFrame | None"] = {}
-_REJECT_CACHE_MAX = 8
-_OVER_CAP = None  # cache sentinel: reject count exceeded the cap
-
-# Max inscribed rects per polygon for the containment-accept shortcut
-# (predicates.inscribed_rects): the accept is `inside ANY rect`, so
-# more rects = fewer candidates paying the exact kernel, at 4 extra
-# codegen comparisons per rect per row.
-_INNER_K = 3
-
-
-def _rect_list(v) -> list[tuple]:
-    """Normalize an inner-rect entry: None → [], a single (x0,y0,
-    x1,y1) tuple (pre-r7 callers) → [rect], else the list as-is."""
-    if v is None:
-        return []
-    if isinstance(v, tuple):
-        return [v]
-    return list(v)
-
-
-# inscribed_rects memo keyed on the geometry's WKB BYTES — the
-# content itself, so an entry can never go stale — because the
-# anchor-grid search costs ~6 ms of driver numpy per polygon and a
-# per-request caller (HTTP server, bench pass) re-derives identical
-# rects every time. Bounded; cleared wholesale when full.
-_RECTS_CACHE: dict[bytes, list[tuple]] = {}
-_RECTS_CACHE_MAX = 256
-
-
-def _reject_cache_put(key: tuple, value) -> None:
-    if len(_REJECT_CACHE) >= _REJECT_CACHE_MAX:
-        _REJECT_CACHE.pop(next(iter(_REJECT_CACHE)))
-    _REJECT_CACHE[key] = value
-
-
-def _data_version(pages: DataFrame) -> str | None:
-    """Data-version token for the pages frame — the piece semanticHash
-    alone cannot provide: overwriting the parquet at the same path
-    yields an identical analyzed plan, so a long-lived session
-    re-reading an updated snapshot would otherwise get a stale cache
-    HIT (round-6 advisor finding, verified). Per leaf of the
-    cache-substituted plan:
-
-    - file scans: the sorted concrete part-file list (``inputFiles``)
-      — overwrite/append changes part-file names, cheap driver-side
-      metadata;
-    - ``InMemoryRelation`` (a ``.cache()``-ed frame, the HTTP-server /
-      driver-gate pattern): the cached RDD id — unique per
-      SparkContext for the lifetime of the app, so a re-cache after a
-      data change can never alias the old entry (unlike object
-      identityHashCode);
-    - ``LocalRelation``/``Range``: the rows live in the plan itself,
-      so semanticHash already covers the data.
-
-    Any other leaf (streaming, JDBC, ...) → None → no caching."""
-    files = sorted(pages.inputFiles())
-    toks = ["files:" + "\n".join(files)] if files else []
-    plan = pages._jdf.queryExecution().withCachedData()
-    leaves = plan.collectLeaves()
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        nm = leaf.getClass().getSimpleName()
-        if nm == "InMemoryRelation":
-            toks.append(
-                f"rdd:{leaf.cacheBuilder().cachedColumnBuffers().id()}")
-        elif nm in ("LocalRelation", "OneRowRelation", "Range"):
-            toks.append("local")
-        elif nm == "LogicalRelation":
-            if not files:
-                return None  # file-backed leaf with no listable files
-            toks.append("file")
-        else:
-            return None
-    return "|".join(toks)
-
-
-def _reject_cache_key(pages: DataFrame, bbox_by_qid, pieces_by_qid,
-                      inner_by_qid) -> tuple | None:
-    import hashlib
-    import pickle
-    try:
-        plan_hash = pages._jdf.queryExecution().analyzed().semanticHash()
-        version = _data_version(pages)
-        if version is None:
-            return None
-        app = pages.sparkSession.sparkContext.applicationId
-    except Exception:
-        return None  # unidentifiable input: skip caching
-    geo = hashlib.sha256(pickle.dumps(
-        (sorted(bbox_by_qid.items()), sorted(pieces_by_qid.items()),
-         sorted((inner_by_qid or {}).items())))).hexdigest()
-    return (app, plan_hash,
-            hashlib.sha256(version.encode()).hexdigest(), geo)
-
-
-def _memo_refine(joined: DataFrame, pages: DataFrame,
-                 bbox_by_qid: dict[int, tuple],
-                 pieces_by_qid: dict[int, list],
-                 inner_by_qid: dict[int, tuple] | None,
-                 ) -> DataFrame | None:
-    """Exact polygon residual via REJECT-side memoization.
-
-    The candidate stream's polygon rows already passed the rect ×
-    query-bbox overlap, and the bbox is a good filter: with the
-    inscribed-rect shortcut, ~99% of bbox-overlap candidates pass the
-    exact kernel on crawl-shaped data (measured at sf0.4: 1,933,860
-    of 1,952,529). So the SMALL side — the right side to broadcast —
-    is the REJECTED pair set, not the accepted one: rejects broadcast
-    back onto the candidate stream as a left join + null check. The
-    multi-million-row stream never crosses Arrow and stays entirely
-    in whole-stage codegen; the broadcast is O(rejects) — ~19k rows
-    at sf0.4 where the earlier accepted-side variant built a 1.9M-row
-    (~77 MB) broadcast, ran a full-corpus distinct, and blew past its
-    own cap at sf1.0 (accepted grows with the corpus; rejects only
-    with the bbox-vs-polygon slack).
-
-    Reject computation runs on a slim (query_id + 4 doubles, no url
-    bytes) projection, in three Column-first steps:
-      1. the polygon-kind slice of the CANDIDATE STREAM itself
-         (Catalyst prunes the page payload columns out of the eager
-         job, so only the cell equi-join's key/bbox columns are
-         computed): the stream's pair set is exactly the
-         bbox-overlap pairs — the reference-point dedup emits each
-         overlapping pair once at any resolution — so rejects cover
-         every stream row by construction. (Rounds 2-6 instead
-         re-joined pages × query bboxes as a broadcast NESTED-LOOP
-         join: |pages| × |polygons| condition evals and a second
-         independent pages scan per cache miss — measured 1.4-1.7 s
-         of the bench's join stage vs ~0.4 s for the hash-join
-         stream slice; guide §3.1.);
-      2. the inscribed-rect accept as a pure COLUMN prefilter — on an
-         N-core-pinned executor the JVM Arrow writer and the Python
-         worker contend for the same cores, so every row that crosses
-         Arrow costs double (measured: the full 1.95M-candidate frame
-         through mapInPandas is 9-16 s at a pinned local[8] vs ~1 s
-         for the same scan JVM-side); interior candidates — the vast
-         majority — never leave the JVM;
-      3. the surviving HARD rows (outside the inscribed rect) get the
-         exact test: the compiled SAT predicate (colgeom — zero
-         Python; per-row eval cost is irrelevant on this small frame)
-         when every geometry is in compile budget, else the numpy
-         winding kernel over just the hard rows.
-
-    Scale guard: if the reject count exceeds MEMO_VERDICT_CAP (thin
-    or concave polygons where the bbox is a poor filter), returns
-    None and the caller keeps the inline Arrow refine, which carries
-    no broadcast. The count is one small eager job at plan-build
-    time, same contract as the driver-side geometry capture this
-    mode already implies.
-
-    Verdicts come from the same kernels as the inline refine
-    (inscribed-rect accept + rects_intersect_pieces / the SAT
-    equivalent, identical accepted sets per tests/test_colgeom.py),
-    so accepted row sets match by construction.
-    """
-    spark = joined.sparkSession
-
-    def apply_rejects(pdf: "pd.DataFrame") -> DataFrame:
-        schema = ("query_id long, xmin double, ymin double, "
-                  "xmax double, ymax double")
-        local = (spark.createDataFrame(pdf, schema=schema) if len(pdf)
-                 else spark.createDataFrame([], schema))
-        marked = F.broadcast(local.withColumn("__pip_bad", F.lit(True)))
-        keys = ["query_id", "xmin", "ymin", "xmax", "ymax"]
-        return (joined.join(marked, keys, "left")
-                .where((F.col("kind") != F.lit("polygon"))
-                       | F.col("__pip_bad").isNull())
-                .drop("__pip_bad"))
-
-    ckey = _reject_cache_key(pages, bbox_by_qid, pieces_by_qid,
-                             inner_by_qid)
-    if ckey is not None and ckey in _REJECT_CACHE:
-        cached = _REJECT_CACHE[ckey]
-        return None if cached is _OVER_CAP else apply_rejects(cached)
-
-    # one row per polygon with up to _INNER_K inscribed rects as
-    # null-padded column groups (NOT one row per rect — that would
-    # duplicate hard candidates through the join); inside ANY rect ⇒
-    # containment accept, so the hard remainder shrinks with the
-    # union coverage (3.2× fewer hard rows than the single-rect r6
-    # shape on the bench probe set)
-    recs = []
-    for q in bbox_by_qid:
-        rects = _rect_list((inner_by_qid or {}).get(q))[:_INNER_K]
-        flat: list = []
-        for i in range(_INNER_K):
-            flat += ([float(v) for v in rects[i]] if i < len(rects)
-                     else [None] * 4)
-        recs.append((int(q), *flat))
-    qb_cols = ", ".join(
-        f"ix0_{i} double, iy0_{i} double, ix1_{i} double, iy1_{i} double"
-        for i in range(_INNER_K))
-    qb = spark.createDataFrame(recs, f"query_id long, {qb_cols}")
-    inside_inner = F.lit(False)
-    for i in range(_INNER_K):
-        inside_inner = inside_inner | (
-            F.col(f"ix0_{i}").isNotNull()
-            & (F.col("xmin") >= F.col(f"ix0_{i}"))
-            & (F.col("ymin") >= F.col(f"iy0_{i}"))
-            & (F.col("xmax") <= F.col(f"ix1_{i}"))
-            & (F.col("ymax") <= F.col(f"iy1_{i}")))
-    hard = (joined
-            .where(F.col("kind") == F.lit("polygon"))
-            .select("query_id", "xmin", "ymin", "xmax", "ymax")
-            .join(F.broadcast(qb), "query_id")
-            .where(~inside_inner)
-            .select("query_id", "xmin", "ymin", "xmax", "ymax"))
-
-    from .colgeom import compile_refine_predicate
-    compiled = compile_refine_predicate(
-        pieces_by_qid, None, F.col("query_id"), None,
-        F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))
-    if compiled is not None:
-        rejected = hard.where(~compiled)
-    else:
-        schema = ("query_id long, xmin double, ymin double, "
-                  "xmax double, ymax double")
-
-        def rejects(batches: Iterator[pd.DataFrame]
-                    ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pdf
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                for qid in pdf["query_id"].unique():
-                    m = (pdf["query_id"] == qid).to_numpy()
-                    keep[m] = rects_intersect_pieces(
-                        pdf.loc[m, "xmin"].to_numpy(),
-                        pdf.loc[m, "ymin"].to_numpy(),
-                        pdf.loc[m, "xmax"].to_numpy(),
-                        pdf.loc[m, "ymax"].to_numpy(),
-                        pieces_by_qid[qid])
-                yield pdf[~keep]
-
-        rejected = hard.mapInPandas(rejects, schema=schema)
-
-    # The caps are applied to the RAW (pre-dedup) reject count so the
-    # guard job needs no shuffle at all: duplicates — pages sharing an
-    # identical footprint, rare by construction — only make the caps
-    # marginally conservative. Dedup happens where it is O(rejects)
-    # and free of a shuffle: driver-side drop_duplicates for the
-    # collected path, a distinct over the (small) persisted frame for
-    # the broadcast path. (Round-6 shape ran distinct→shuffle→count →
-    # toPandas — one whole exchange more per cache miss for the same
-    # reject set; guide §2.4.) Uniqueness of the reject rows is what
-    # keeps the left join from multiplying stream rows, so both paths
-    # still dedup before the join.
-    rejected = rejected.persist()
-    n_rejected = rejected.count()
-    if n_rejected > MEMO_VERDICT_CAP:
-        rejected.unpersist()
-        if ckey is not None:
-            _reject_cache_put(ckey, _OVER_CAP)
-        return None
-    if n_rejected <= MEMO_COLLECT_CAP:
-        # land the reject set driver-side (Arrow toPandas) so the
-        # broadcast builds from a LocalRelation: no persisted frame
-        # outlives the call (a long-lived session — e.g. the HTTP
-        # server — would otherwise leak one cached RDD per search),
-        # and execution doesn't re-touch the cached subtree at all
-        pdf = rejected.toPandas().drop_duplicates(ignore_index=True)
-        rejected.unpersist()
-        if ckey is not None:
-            _reject_cache_put(ckey, pdf)
-        return apply_rejects(pdf)
-    # COLLECT_CAP < n ≤ VERDICT_CAP: broadcast the persisted frame
-    # directly (too big to hold driver-side; not cached — the frame
-    # must stay persisted for the plan's lifetime)
-    marked = F.broadcast(
-        rejected.distinct().withColumn("__pip_bad", F.lit(True)))
-    keys = ["query_id", "xmin", "ymin", "xmax", "ymax"]
-    return (joined.join(marked, keys, "left")
-            .where((F.col("kind") != F.lit("polygon"))
-                   | F.col("__pip_bad").isNull())
-            .drop("__pip_bad"))
-
-
 def _mixed_refine(joined: DataFrame,
                   pieces_by_qid: dict[int, list] | None = None,
-                  inner_by_qid: dict[int, tuple] | None = None,
                   ) -> DataFrame:
     """Exact residual over the mixed candidate stream: non-polygon
     kinds pass through (rect overlap already exact), polygon kinds get
     the rect × polygon kernel. One pass — the pages subplan is never
     duplicated. Arrow-batched; rings parsed once per distinct query
-    per batch.
+    per batch. The fallback for geometries colgeom cannot compile.
 
     Two modes:
     - ``pieces_by_qid`` given (broadcast/small query side): geometries
       were captured driver-side, so the candidate stream does NOT
       carry a per-row WKB column — the dominant Arrow payload of the
-      refine stage at bench scale. ``inner_by_qid`` optionally maps a
-      query to an axis-aligned rect strictly inside its polygon:
-      candidates wholly inside it are accepted WITHOUT the kernel
-      (most interior candidates take this O(4-compare) path).
-    - otherwise the legacy carry mode: the stream carries `geometry`
-      per row (the shuffle-join fallback, where the query side is too
-      big to collect driver-side).
+      refine stage at bench scale. Candidates wholly inside one of a
+      polygon's inscribed-cover rects are accepted WITHOUT the kernel.
+    - otherwise the carry mode: the stream carries `geometry` per row
+      (the shuffle-join fallback, where the query side is too big to
+      collect driver-side).
     """
     schema = joined.schema
+    inner_by_qid = {q: inscribed_cover(p)
+                    for q, p in (pieces_by_qid or {}).items()}
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pieces: dict[int, list] = dict(pieces_by_qid or {})
@@ -429,7 +129,7 @@ def _mixed_refine(joined: DataFrame,
                 y1 = pdf.loc[m, "ymax"].to_numpy()
                 res = np.zeros(len(x0), dtype=bool)
                 need = np.ones(len(x0), dtype=bool)
-                for ir in _rect_list((inner_by_qid or {}).get(qid)):
+                for ir in inner_by_qid.get(qid, []):
                     inside = ((x0 >= ir[0]) & (y0 >= ir[1])
                               & (x1 <= ir[2]) & (y1 <= ir[3]))
                     res[inside] = True
@@ -450,8 +150,6 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
                  page_cols: list[str] | None = None,
                  subdivide_threshold: int | None = None,
                  has_polygons: bool | None = None,
-                 compile_polygons: bool | None = None,
-                 refine_memo: bool | None = None,
                  grid=default_grid) -> DataFrame:
     """pages ⋈_ST_Intersects queries → (query_id, kind, *page_cols).
 
@@ -460,39 +158,25 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
 
     If the query set contains no polygons the whole join is pure
     Column math (zero Python). With polygons and a broadcast query
-    side the DEFAULT residual (round 7) is the COMPILED predicate:
-    in-budget geometries become a Column expression (colgeom.py,
-    ear-clip + separating-axis) with the multi-rect inscribed-cover
-    accept short-circuiting ahead of the SAT blocks — zero Python,
-    zero Arrow, zero eager Spark jobs, one action. Rounds 5-6 kept
-    compilation opt-in because it anti-scaled at 16 threads; the
-    round-7 multi-rect covers (predicates.inscribed_rects) absorb
-    ~94% of polygon candidates before any SAT block runs, and the
-    re-measured ordering is now compiled < memo at EVERY parallelism
-    (local[8] 2.39 vs 3.35 s, local[16] 1.75 vs 2.62 s, local[32]
-    1.63 vs 2.75 s per build+write at sf0.1). When compilation is
-    out of budget the residual falls back to the MEMOIZED refine
-    (_memo_refine): rejected pairs computed once on the polygon
-    slice of the stream and broadcast back as a left-join null
-    check. ``compile_polygons=False`` forces that memo path (the
-    reject-cache tests use it); ``compile_polygons=True`` keeps its
-    old meaning (compile, with the memo as the out-of-budget
-    fallback). ``refine_memo=False`` disables the memo, so
-    ``compile_polygons=False, refine_memo=False`` selects the inline
-    Arrow-batched refine, which also serves the shuffle-join mode
-    where geometries ride per row. All paths
-    accept identical candidate sets outside the kernels' 1e-12
-    on-edge shell (tests/test_colgeom.py, test_spatial.py).
+    side the residual is the COMPILED predicate
+    (colgeom.compile_refine_predicate over colgeom.geometry_predicate,
+    the same predicate search/CQL2 `intersects` use): the multi-rect
+    inscribed-cover accept short-circuiting ahead of ear-clip +
+    separating-axis blocks — zero Python, zero Arrow, zero eager
+    Spark jobs beyond the geometry collect, one action. Only when a
+    geometry is over colgeom's budget, or in the
+    ``broadcast_queries=False`` carry mode where geometries ride per
+    row, does the residual take the Arrow-batched numpy kernel
+    (_mixed_refine). Both accept identical candidate sets outside
+    the kernel's 1e-12 on-edge shell (tests/test_colgeom.py,
+    test_spatial.py).
 
-    Behavior change (round 5): when geometries are in colgeom's
-    compile budget, default refine verdicts come from exact
+    Behavior change (round 5): compiled verdicts come from exact
     closed-set separating-axis math — a footprint separated from a
-    polygon by < 1e-12 is now REJECTED, where the earlier numpy
-    winding kernel's on-edge tolerance shell accepted it. SAT is the
-    more correct (closed-set) semantics; only borderline inputs
-    inside that shell can observe the difference. (Unchanged by the
-    round-7 default flip: the memo path's verdicts already came from
-    the same compiled predicate.)
+    polygon by < 1e-12 is REJECTED, where the numpy winding kernel's
+    on-edge tolerance shell accepts it. SAT is the more correct
+    (closed-set) semantics; only borderline inputs inside that shell
+    can observe the difference.
 
     has_polygons: pass True/False to skip the small plan-time probe of
     the query side (a `.limit(1).count()` on the queries table). The
@@ -501,13 +185,10 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
     should supply the flag. Note that with has_polygons=True and a
     broadcast query side the builder still runs ONE bounded eager
     collect (the polygon WKBs, captured driver-side so the candidate
-    stream carries no per-row geometry); the compiled default adds
-    NO further eager work (predicate construction is driver-side and
-    content-cached), while the memo fallback adds one small eager
-    job (reject count, the MEMO_VERDICT_CAP guard) cached per
-    (geometry, pages-plan, data version). Fully-lazy iterative
-    callers should pass has_polygons=False when their probes are
-    rect/point only (action-free plan building).
+    stream carries no per-row geometry); predicate construction adds
+    no further eager work (driver-side and content-cached).
+    Fully-lazy iterative callers should pass has_polygons=False when
+    their probes are rect/point only (action-free plan building).
     """
     page_cols = page_cols or [c for c in pages.columns
                               if c not in ("html", "text")]
@@ -515,38 +196,16 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
         has_polygons = bool(
             queries.where(F.col("kind") == "polygon").limit(1).count())
 
-    # geometry handling for the polygon refine: with a broadcast
-    # (small-by-contract) query side, polygon WKBs are captured
-    # driver-side ONCE — the candidate stream then carries no per-row
-    # geometry bytes (the dominant Arrow payload of the refine), and
-    # each polygon gets an inscribed-rect accept shortcut so interior
-    # candidates skip the winding kernel entirely. The shuffle-join
-    # fallback keeps the legacy carry-the-WKB-column mode.
+    # with a broadcast (small-by-contract) query side, polygon WKBs
+    # are captured driver-side ONCE — the candidate stream then
+    # carries no per-row geometry bytes. The shuffle-join fallback
+    # keeps the carry-the-WKB-column mode.
     pieces_by_qid: dict[int, list] | None = None
-    inner_by_qid: dict[int, list[tuple]] | None = None
-    bbox_by_qid: dict[int, tuple] = {}
     if has_polygons and broadcast_queries:
-        from .predicates import inscribed_rects
-        pieces_by_qid, inner_by_qid = {}, {}
-        for r in (queries.where(F.col("kind") == "polygon")
-                  .select("query_id", "geometry",
-                          "qxmin", "qymin", "qxmax", "qymax").collect()):
-            wkb = bytes(r["geometry"])
-            pcs = geometry_pieces(parse_wkb(wkb))
-            pieces_by_qid[r["query_id"]] = pcs
-            bbox_by_qid[r["query_id"]] = (r["qxmin"], r["qymin"],
-                                          r["qxmax"], r["qymax"])
-            # up to _INNER_K interior rects per polygon (r7): the
-            # union covers several times the old single centroid
-            # rect, so far fewer candidates pay the exact kernel
-            irs = _RECTS_CACHE.get(wkb)
-            if irs is None:
-                irs = inscribed_rects(pcs, _INNER_K)
-                if len(_RECTS_CACHE) >= _RECTS_CACHE_MAX:
-                    _RECTS_CACHE.clear()
-                _RECTS_CACHE[wkb] = irs
-            if irs:
-                inner_by_qid[r["query_id"]] = irs
+        pieces_by_qid = {
+            r["query_id"]: geometry_pieces(parse_wkb(bytes(r["geometry"])))
+            for r in (queries.where(F.col("kind") == "polygon")
+                      .select("query_id", "geometry").collect())}
 
     carry_geometry = has_polygons and pieces_by_qid is None
     qcols = QUERY_COLS if carry_geometry else [c for c in QUERY_COLS
@@ -587,24 +246,12 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
               .where(_reference_point_dedup(res, hot, grid)))
     if has_polygons:
         refined = None
-        memoed = None
-        if compile_polygons is not False and pieces_by_qid is not None:
-            from .colgeom import compile_refine_predicate
+        if pieces_by_qid is not None:
             refined = compile_refine_predicate(
-                pieces_by_qid, inner_by_qid,
-                F.col("query_id"), F.col("kind"),
-                F.col("xmin"), F.col("ymin"),
-                F.col("xmax"), F.col("ymax"))
-        if refined is None and pieces_by_qid is not None and (
-                refine_memo is not False):
-            memoed = _memo_refine(joined, pages, bbox_by_qid,
-                                  pieces_by_qid, inner_by_qid)
-        if refined is not None:
-            joined = joined.where(refined)
-        elif memoed is not None:
-            joined = memoed
-        else:
-            joined = _mixed_refine(joined, pieces_by_qid, inner_by_qid)
+                pieces_by_qid, F.col("query_id"), F.col("kind"),
+                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))
+        joined = (joined.where(refined) if refined is not None
+                  else _mixed_refine(joined, pieces_by_qid))
     out_cols = ["query_id", "kind"] + page_cols
     return joined.select(*out_cols)
 

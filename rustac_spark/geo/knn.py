@@ -27,14 +27,6 @@ from .cells import (DEFAULT_RES, cell_of_point, cell_size_deg, cover_bbox,
 
 EARTH_RADIUS_KM = 6371.0088
 
-# Diagnostics from the most recent knn_cells plan build (driver-side
-# only, no plan change): how many queries the ring disk satisfied
-# outright, how many needed the bounded-band redo (dmax > safe), how
-# many underflowed (< k candidates → escalating banded redo), and how
-# many escalation iterations the underflow redo took. bench.py prints
-# this per pass so fallback-trigger cost is visible.
-LAST_STATS: dict[str, int] = {}
-
 # Half the earth's circumference: a search radius at or beyond this
 # covers every point, so the banded redo is provably complete.
 _HALF_EARTH_KM = math.pi * EARTH_RADIUS_KM
@@ -268,12 +260,12 @@ def knn_cells(pages: DataFrame, queries: DataFrame, k: int = 5,
             # (candidates ⊆ pages) — re-run over that band only
             flagged[r["query_id"]] = float(dmax)
             bands.append((r["qlon"], r["qlat"], float(dmax)))
-    # per-call stats land in the caller-owned stats_out dict (the
-    # race-free path for concurrent jobs, e.g. the HTTP server on a
-    # FAIR pool — round-6 verdict item #4); the module-level
-    # LAST_STATS mirror stays for existing callers (bench.py) but is
-    # shared mutable state, so concurrent callers should pass
-    # stats_out
+    # per-call diagnostics (driver-side only, no plan change) land in
+    # the caller-owned stats_out dict — race-free for concurrent jobs,
+    # e.g. the HTTP server on a FAIR pool: how many queries the ring
+    # disk satisfied outright, how many needed the bounded-band redo
+    # (dmax > safe), how many underflowed (< k candidates → escalating
+    # banded redo), and the underflow redo's escalation iterations
     stats_dict = {
         "queries": len(qrows),
         "banded": n_banded,
@@ -284,8 +276,6 @@ def knn_cells(pages: DataFrame, queries: DataFrame, k: int = 5,
     if stats_out is not None:
         stats_out.clear()
         stats_out.update(stats_dict)
-    LAST_STATS.clear()
-    LAST_STATS.update(stats_dict)
     out_cols = ["query_id", "rank", "url", "dist_km"]
     if not flagged:
         return (spark.createDataFrame(topk_rows, topk_schema)
@@ -320,7 +310,6 @@ def knn_cells(pages: DataFrame, queries: DataFrame, k: int = 5,
         rows, iters = _redo_underflow(pages, underflow, k, dmax0)
         if stats_out is not None:
             stats_out["underflow_iters"] = iters
-        LAST_STATS["underflow_iters"] = iters
         uf_schema = "query_id long, rank int, url string, dist_km double"
         parts.append(spark.createDataFrame(rows, uf_schema) if rows
                      else spark.createDataFrame([], uf_schema))

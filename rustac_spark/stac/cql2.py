@@ -17,7 +17,8 @@ crates/duckdb/src/client.rs:386-394):
   (crates/duckdb/src/client.rs:386-394); here they compile to the
   engine's bbox-overlap Column (point / axis-aligned-rect literals,
   valid anywhere in the boolean tree) or, for general geometries, a
-  bbox prefilter Column + exact Arrow-batched refine. General-geometry
+  bbox prefilter Column + exact refine (colgeom's compiled predicate;
+  Arrow-batched only past its budget). General-geometry
   s_intersects must sit in a conjunctive (top-level AND) position —
   refines are conjunctive; under OR/NOT the compiler raises.
 - Plan-time empty-result short-circuit: if any referenced property is
@@ -714,8 +715,8 @@ def compile_filter(filt, columns: list[str]):
 
     refines: for each top-level-AND s_intersects conjunct whose
     geometry is not point/rect, the Column part carries only its bbox
-    prefilter and the caller must apply the exact rect×geometry refine
-    (search._geometry_refine) with the returned pieces.
+    prefilter; build_plan applies the exact rect×geometry refine
+    (colgeom.geometry_predicate) with the returned pieces.
     """
     ast = parse(filt)
     missing = properties(ast) - set(columns)

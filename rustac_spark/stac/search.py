@@ -27,8 +27,8 @@ Spark-first notes: every predicate is a Column expression, so
 Catalyst pushes it into the parquet scan (bbox-struct min/max column
 stats ⇒ row-group skipping — the covering-index effect of the
 reference's GeoParquet `covering` metadata, geoparquet.rs:397-435).
-Only non-rectangular `intersects` polygons add an Arrow-batched refine
-kernel after the bbox prefilter.
+Non-rectangular `intersects` geometries add a compiled Column refine
+after the bbox prefilter (Arrow-batched only past colgeom's budget).
 """
 
 from __future__ import annotations
@@ -40,8 +40,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..geo.colpreds import (bbox_overlap_col, pieces_column_pred,
-                            point_in_bbox_col)
+from ..geo.colgeom import anchored, geometry_predicate
+from ..geo.colpreds import bbox_overlap_col, pieces_column_pred
 from ..geo.predicates import rects_intersect_pieces
 from ..geo.wkbio import geojson_to_wkb, geometry_pieces, parse_wkb, wkb_bounds
 from . import cql2
@@ -141,17 +141,17 @@ def _geojson_to_wkb(g: dict) -> bytes:
         raise SearchValidationError(str(e)) from e
 
 
-# shared pushdown-friendly bbox predicates live in geo/colpreds
-_bbox_overlap = bbox_overlap_col
-_point_in_bbox = point_in_bbox_col
-
-
 def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
-    """Exact refine for non-rectangular intersects geometries:
-    vectorized rect×geometry kernel over the bbox struct,
-    Arrow-batched. `pieces` is wkbio.geometry_pieces output — the row
-    survives if its bbox intersects ANY piece (Multi* union
-    semantics)."""
+    """Exact refine of the bbox struct against a geometry:
+    colgeom.geometry_predicate as an anchored Filter, or — only for a
+    geometry over colgeom's budget — the Arrow-batched numpy kernel.
+    `pieces` is wkbio.geometry_pieces output — the row survives if
+    its bbox intersects ANY piece (Multi* union semantics)."""
+    compiled = geometry_predicate(
+        pieces, F.col("bbox.xmin"), F.col("bbox.ymin"),
+        F.col("bbox.xmax"), F.col("bbox.ymax"))
+    if compiled is not None:
+        return df.where(anchored(compiled[0]))
     schema = df.schema
 
     def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -171,11 +171,20 @@ def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
     return df.mapInPandas(refine, schema=schema)
 
 
-_pieces_column_pred = pieces_column_pred
-
-
 def build_plan(df: DataFrame, search: Search) -> DataFrame:
-    """Compile a Search into a lazy DataFrame plan."""
+    """Compile a Search into a lazy DataFrame plan.
+
+    Point and axis-aligned-rect ``intersects`` geometries (and CQL2
+    ``s_intersects`` literals) compile to bbox-struct Columns. Any
+    other geometry gets a pushdown bbox prefilter, then the exact
+    refine: colgeom.geometry_predicate — the same compiled predicate
+    spatial_join uses — and mapInPandas only for a geometry over its
+    budget. Compiled verdicts use closed-set separating-axis math, so
+    an item bbox separated from the geometry by less than 1e-12 is
+    rejected, where the numpy kernel's on-edge tolerance shell
+    accepts it (the join's round-5 change); only rects within 1e-12
+    of the geometry can see the difference.
+    """
     search.validate()
     columns = df.columns
     refines: list[list] = []  # each entry: geometry pieces to refine on
@@ -198,16 +207,16 @@ def build_plan(df: DataFrame, search: Search) -> DataFrame:
         b = list(search.bbox)
         if len(b) == 6:
             b = [b[0], b[1], b[3], b[4]]
-        preds.append(_bbox_overlap(*b))
+        preds.append(bbox_overlap_col(*b))
     if search.intersects is not None:
         wkb = (search.intersects if isinstance(search.intersects, bytes)
                else _geojson_to_wkb(search.intersects))
         pieces = geometry_pieces(parse_wkb(wkb))
-        col = _pieces_column_pred(pieces)
+        col = pieces_column_pred(pieces)
         if col is not None:
             preds.append(col)
         else:
-            preds.append(_bbox_overlap(*wkb_bounds(wkb)))  # prefilter
+            preds.append(bbox_overlap_col(*wkb_bounds(wkb)))  # prefilter
             refines.append(pieces)
     if search.datetime is not None:
         start, end = parse_interval(search.datetime)

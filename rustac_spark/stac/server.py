@@ -38,10 +38,12 @@ repo's own client pages against this server in tests.
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 import base64
@@ -418,13 +420,22 @@ class _Handler(BaseHTTPRequestHandler):
                         app.post_item(parts[1], body or {}), status=201)
             self._error(404, f"no route {method} {parsed.path}")
         except (SearchValidationError, QueryNotImplemented,
-                ValueError, KeyError, TypeError, IndexError) as e:
+                ValueError, KeyError, TypeError, IndexError,
+                AnalysisException) as e:
             # KeyError/TypeError cover malformed request documents
-            # (e.g. POST /collections without "id") — a bad request
-            # must answer 400, never abort the connection
+            # (e.g. POST /collections without "id"), AnalysisException
+            # a plan naming a column the table lacks (e.g. an unknown
+            # sortby field) — a bad request must answer 400, never
+            # abort the connection
             self._error(400, f"{type(e).__name__}: {e}")
         except PermissionError as e:
             self._error(405, str(e))
+        except Exception as e:
+            # an engine failure must still answer, never drop the
+            # connection
+            logging.getLogger(__name__).exception(
+                "%s %s failed", method, self.path)
+            self._error(500, f"{type(e).__name__}: {e}")
 
     def do_GET(self):
         self._route("GET", None)

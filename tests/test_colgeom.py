@@ -1,8 +1,9 @@
-"""Column-compiled polygon refine (geo/colgeom.py): accept-set
+"""Column-compiled geometry predicate (geo/colgeom.py): accept-set
 equality vs the numpy kernels (exact closed-set SAT — identical
 outside the kernels' 1e-12 on-edge shell, which random + exact-
-boundary soups never probe), spatial_join path equivalence, budget
-fallback, ear-clip triangulation, and the zero-Python plan shape the
+boundary soups never probe) for the join and for search
+`intersects`, spatial_join path equivalence, budget fallback,
+ear-clip triangulation, and the zero-Python plan shape the
 compilation exists for."""
 
 import numpy as np
@@ -15,7 +16,10 @@ from rustac_spark.geo.colgeom import (DEFAULT_VERTEX_BUDGET,
                                       compile_refine_predicate)
 from rustac_spark.geo.join import spatial_join
 from rustac_spark.geo.predicates import rects_intersect_pieces
+from rustac_spark.geo.wkbio import (geometrycollection_wkb, linestring_wkb,
+                                    point_wkb, polygon_wkb)
 from rustac_spark.geocode import with_geocode
+from rustac_spark.stac.search import Search, build_plan
 
 RNG = np.random.default_rng(1234)
 
@@ -38,6 +42,24 @@ RECTILINEAR = [("poly", [np.array(  # axis-parallel edges: p == 0 paths
      (0.0, 6.0), (0.0, 0.0)])])]
 
 GEOMS = [IRREGULAR, WITH_HOLE, MULTI, LINE, POINT, RECTILINEAR]
+
+
+def _circle(cx, cy, r, n=120):
+    """Closed n-gon ring: over DEFAULT_VERTEX_BUDGET, so every caller
+    must take the Arrow kernel for it."""
+    t = np.linspace(0, 2 * np.pi, n, endpoint=False)
+    ring = np.column_stack([cx + r * np.cos(t), cy + r * np.sin(t)])
+    return np.vstack([ring, ring[:1]])
+
+
+CIRCLE = [("poly", [_circle(4.0, 4.0, 5.0)])]
+
+
+def _pieces_wkb(pieces) -> bytes:
+    wkbs = [point_wkb(*d) if k == "point"
+            else linestring_wkb(d) if k == "line"
+            else polygon_wkb(*d) for k, d in pieces]
+    return wkbs[0] if len(wkbs) == 1 else geometrycollection_wkb(wkbs)
 
 
 def _random_rects(n=400):
@@ -87,6 +109,22 @@ def test_compiled_predicate_bit_equals_numpy_kernel(rects_df, gi):
     assert np.array_equal(got, expected)
 
 
+@pytest.mark.parametrize("gi", range(len(GEOMS) + 1))
+def test_search_intersects_bit_equals_numpy_kernel(rects_df, gi):
+    """The rect soup as an item bbox struct through build_plan: the
+    in-budget geometries take the compiled predicate, the 120-vertex
+    circle the Arrow kernel — both must accept exactly the numpy
+    kernel's set."""
+    df, (rx0, ry0, rx1, ry1) = rects_df
+    pieces = (GEOMS + [CIRCLE])[gi]
+    items = df.select("rid", F.struct("xmin", "ymin", "xmax", "ymax")
+                      .alias("bbox"))
+    got = {r["rid"] for r in build_plan(
+        items, Search(intersects=_pieces_wkb(pieces))).collect()}
+    expected = rects_intersect_pieces(rx0, ry0, rx1, ry1, pieces)
+    assert got == set(np.nonzero(expected)[0].tolist())
+
+
 def test_vertex_budget_returns_none(spark):
     big_ring = np.column_stack([
         np.cos(np.linspace(0, 2 * np.pi, DEFAULT_VERTEX_BUDGET + 10)),
@@ -96,7 +134,7 @@ def test_vertex_budget_returns_none(spark):
         F.lit(1.0), F.lit(1.0)) is None
     # refine compile is all-or-nothing: one over-budget query kills it
     assert compile_refine_predicate(
-        {1: IRREGULAR, 2: [("poly", [big_ring])]}, None,
+        {1: IRREGULAR, 2: [("poly", [big_ring])]},
         F.lit(1), F.lit("polygon"), F.lit(0.0), F.lit(0.0),
         F.lit(1.0), F.lit(1.0)) is None
 
@@ -105,7 +143,7 @@ def test_node_budget_returns_none(spark):
     # many in-budget queries can still exceed the generated-code cap
     many = {q: IRREGULAR for q in range(200)}
     assert compile_refine_predicate(
-        many, None, F.lit(1), F.lit("polygon"), F.lit(0.0),
+        many, F.lit(1), F.lit("polygon"), F.lit(0.0),
         F.lit(0.0), F.lit(1.0), F.lit(1.0)) is None
 
 
@@ -132,23 +170,54 @@ def pages_geo(spark):
     return df
 
 
+# the polygon query whose bbox hosts the over-budget circle probe
+CIRCLE_HOST_QID = 4
+CIRCLE_QID = 10_000
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _with_circle(spark, queries_df):
+    """queries_df plus one 120-vertex circle inscribed in a polygon
+    query's bbox."""
+    b = queries_df.where(F.col("query_id") == CIRCLE_HOST_QID).first()
+    cx, cy = (b["qxmin"] + b["qxmax"]) / 2, (b["qymin"] + b["qymax"]) / 2
+    r = min(b["qxmax"] - b["qxmin"], b["qymax"] - b["qymin"]) / 2
+    ring = _circle(cx, cy, r)
+    row = {**b.asDict(), "query_id": CIRCLE_QID,
+           "qxmin": float(ring[:, 0].min()), "qymin": float(ring[:, 1].min()),
+           "qxmax": float(ring[:, 0].max()), "qymax": float(ring[:, 1].max()),
+           "geometry": bytearray(polygon_wkb(ring))}
+    return queries_df.unionByName(
+        spark.createDataFrame([row], queries_df.schema))
+
+
 def test_join_compiled_memo_arrow_paths_agree(spark, pages_geo,
                                               queries_df):
-    compiled = spatial_join(pages_geo, queries_df, page_cols=["url"])
-    arrow = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                         compile_polygons=False, refine_memo=False)
-    memo = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                        compile_polygons=False)
-    a = sorted(map(tuple, compiled.collect()))
-    b = sorted(map(tuple, arrow.collect()))
-    c = sorted(map(tuple, memo.collect()))
-    assert a == b == c and len(a) > 0
+    """The compiled default, the carry-mode Arrow refine
+    (broadcast_queries=False) and the over-budget fallback
+    (_mixed_refine over driver-side pieces) accept the same pairs."""
+    compiled = _rows(spatial_join(pages_geo, queries_df, page_cols=["url"]))
+    carry = _rows(spatial_join(pages_geo, queries_df, page_cols=["url"],
+                               broadcast_queries=False))
+    assert compiled == carry and len(compiled) > 0
+    # one over-budget polygon sends the whole set through _mixed_refine
+    qs = _with_circle(spark, queries_df)
+    fallback = spatial_join(pages_geo, qs, page_cols=["url"])
+    assert "MapInPandas" in (
+        fallback._jdf.queryExecution().executedPlan().toString())
+    got = _rows(fallback)
+    assert [r for r in got if r[0] != CIRCLE_QID] == compiled
+    assert any(r[0] == CIRCLE_QID for r in got)
+    assert got == _rows(spatial_join(pages_geo, qs, page_cols=["url"],
+                                     broadcast_queries=False))
 
 
 def test_compiled_join_plan_has_no_python_stage(spark, pages_geo,
                                                 queries_df):
-    compiled = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                            compile_polygons=True)
+    compiled = spatial_join(pages_geo, queries_df, page_cols=["url"])
     plan = compiled._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan and "Python" not in plan
     assert "BroadcastHashJoin" in plan
@@ -157,82 +226,8 @@ def test_compiled_join_plan_has_no_python_stage(spark, pages_geo,
     # for the whole stage) — locked by the join line staying small
     bhj = [l for l in plan.splitlines() if "BroadcastHashJoin" in l][0]
     assert "CASE WHEN" not in bhj
-    # the round-7 DEFAULT path IS the compiled one: no Python stage
-    # anywhere and no reject broadcast left join in the plan
-    default = spatial_join(pages_geo, queries_df, page_cols=["url"])
-    dplan = default._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in dplan
-    # the explicit memo fallback still rides a broadcast LEFT join
-    # over the stream, also Python-free (its reject verdicts run the
-    # same compiled SAT predicate)
-    memo = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                        compile_polygons=False)
-    mplan = memo._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in mplan
-    assert any("BroadcastHashJoin" in l and "LeftOuter" in l
-               for l in mplan.splitlines())
-    # the explicit Arrow path still drives the whole stream through it
-    arrow = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                         compile_polygons=False, refine_memo=False)
+    # the carry-mode Arrow path still drives the whole stream through it
+    carry = spatial_join(pages_geo, queries_df, page_cols=["url"],
+                         broadcast_queries=False)
     assert "MapInPandas" in (
-        arrow._jdf.queryExecution().executedPlan().toString())
-
-
-def test_reject_set_cached_across_calls(spark, pages_geo, queries_df):
-    """Repeated spatial_join over the same pages plan + geometry set
-    (the HTTP-server-per-request shape) reuses the memoized reject
-    set: the second build runs no eager Spark job."""
-    from rustac_spark.geo import join as join_mod
-    join_mod._REJECT_CACHE.clear()
-    first = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                         compile_polygons=False)
-    assert len(join_mod._REJECT_CACHE) == 1
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    second = spatial_join(pages_geo, queries_df, page_cols=["url"],
-                          has_polygons=True, compile_polygons=False)
-    # plan build must be action-free on the cache hit (the polygon
-    # WKB collect still runs; allow only that single bounded job)
-    after = tracker.getJobIdsForGroup(None)
-    assert len(after) - len(before) <= 1
-    assert len(join_mod._REJECT_CACHE) == 1
-    a = sorted(map(tuple, first.collect()))
-    b = sorted(map(tuple, second.collect()))
-    assert a == b and len(a) > 0
-
-
-def test_reject_cache_not_stale_after_overwrite(spark, queries_df,
-                                                tmp_path):
-    """Overwriting the pages parquet at the SAME path must not replay
-    the previous snapshot's memoized reject set (round-6 advisor
-    finding: the analyzed plan's semanticHash is identical for a
-    fresh read of the same path, so the key must carry a data
-    version — the concrete part-file list)."""
-    from rustac_spark.geo import join as join_mod
-
-    path = str(tmp_path / "pages.parquet")
-    base = spark.read.parquet(f"{DATA_DIR}/pages_sf0.001.parquet") \
-        .select("url")
-    join_mod._REJECT_CACHE.clear()
-
-    base.limit(400).write.mode("overwrite").parquet(path)
-    first_geo = with_geocode(spark.read.parquet(path))
-    first = sorted(map(tuple, spatial_join(
-        first_geo, queries_df, page_cols=["url"],
-        compile_polygons=False).collect()))
-    assert len(join_mod._REJECT_CACHE) == 1
-
-    # same path, different data (and different part files)
-    base.write.mode("overwrite").parquet(path)
-    second_geo = with_geocode(spark.read.parquet(path))
-    got = sorted(map(tuple, spatial_join(
-        second_geo, queries_df, page_cols=["url"],
-        compile_polygons=False).collect()))
-    # fresh data must produce the fresh (memo-free) answer
-    want = sorted(map(tuple, spatial_join(
-        second_geo, queries_df, page_cols=["url"],
-        compile_polygons=False, refine_memo=False).collect()))
-    assert got == want
-    assert len(got) > len(first)  # 1000 > 400 rows joined
-    # and the overwrite produced a distinct cache entry, not a hit
-    assert len(join_mod._REJECT_CACHE) == 2
+        carry._jdf.queryExecution().executedPlan().toString())

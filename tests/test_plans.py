@@ -72,24 +72,33 @@ def test_spatial_join_is_broadcast_and_single_scan(spark, queries_df):
     plan = _physical(out)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # round-7 default: the polygon residual is the COMPILED predicate
-    # (a standalone Filter), so the big (pages) side is scanned
-    # exactly once and there is no reject side at all
+    # the polygon residual is the COMPILED predicate (a standalone
+    # Filter), so the big (pages) side is scanned exactly once
     assert plan.count("pages_sf0.001.parquet") == 1
     # no shuffle on the pages side: the only Exchanges are broadcasts
     assert "Exchange hashpartitioning" not in plan
-    # the explicit memo fallback still lands its reject set as a
-    # LocalRelation (collected driver-side at build; over-cap sets
-    # ride as an InMemoryRelation whose toString embeds the pre-cache
-    # subtree — count scans outside that description)
-    memo = spatial_join(pages, queries_df, page_cols=["url"],
-                        compile_polygons=False)
-    mplan = _physical(memo)
-    live = mplan.split("InMemoryRelation")[0]
-    assert live.count("pages_sf0.001.parquet") == 1
-    assert ("LocalTableScan" in mplan or "Scan ExistingRDD" in mplan
-            or "InMemoryTableScan" in mplan)
-    assert "Exchange hashpartitioning" not in live
+
+
+def test_intersects_polygon_refine_is_python_free_in_budget(stac_items):
+    # an in-budget polygon (search intersects and CQL2 s_intersects)
+    # refines through the compiled Column predicate: no Python stage
+    hexagon = {"type": "Polygon", "coordinates": [[
+        [-106.10, 40.55], [-106.05, 40.50], [-105.98, 40.52],
+        [-105.97, 40.58], [-106.04, 40.62], [-106.10, 40.55]]]}
+    for s in (Search(intersects=hexagon),
+              Search(filter={"op": "s_intersects", "args": [
+                  {"property": "geometry"}, hexagon]})):
+        plan = _physical(build_plan(stac_items, s))
+        assert "MapInPandas" not in plan and "Python" not in plan
+        assert "bbox.xmin" in plan.split("PushedFilters")[1][:400]
+    # an over-budget one (120 vertices) keeps the Arrow kernel
+    import math
+    ring = [[-106.0 + 0.05 * math.cos(2 * math.pi * i / 120),
+             40.55 + 0.05 * math.sin(2 * math.pi * i / 120)]
+            for i in range(120)]
+    circle = {"type": "Polygon", "coordinates": [ring + [ring[0]]]}
+    plan = _physical(build_plan(stac_items, Search(intersects=circle)))
+    assert "MapInPandas" in plan
 
 
 def test_tiles_is_narrow_until_aggregation(spark):
@@ -231,7 +240,7 @@ def test_knn_bounded_redo_scan_pushes_lat_band(spark, tmp_path):
     (test_spatial.test_knn_cells_polar_band_single_join)."""
     import pandas as pd
 
-    from rustac_spark.geo.knn import LAST_STATS, knn_bruteforce, knn_cells
+    from rustac_spark.geo.knn import knn_bruteforce, knn_cells
 
     # 5 pages ~55.7 km from the probe: inside the 4-ring (0.5 < 0.70
     # deg) so they fill the top-k, but beyond the cos(40.7)-scaled
@@ -244,9 +253,10 @@ def test_knn_bounded_redo_scan_pushes_lat_band(spark, tmp_path):
     pages = spark.read.parquet(path)
     q = spark.createDataFrame(
         [(1, 10.0, 40.0)], "query_id long, qxmin double, qymin double")
-    out = knn_cells(pages, q, k=5)
-    assert LAST_STATS["redo_bounded"] == 1
-    assert LAST_STATS.get("redo_underflow", 0) == 0
+    stats: dict = {}
+    out = knn_cells(pages, q, k=5, stats_out=stats)
+    assert stats["redo_bounded"] == 1
+    assert stats.get("redo_underflow", 0) == 0
     plan = _physical(out)
     # the redo branch exists and its parquet scan pushes the band
     fallback = plan.split("Union")[-1]
@@ -321,11 +331,10 @@ def test_semdedup_no_python_capped_pairs(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_memo_refine_leaves_no_persisted_rdds(spark, queries_df):
-    """The reject set is collected driver-side and rebroadcast from a
-    LocalRelation, so building (and running) the default polygon join
-    must leave NO persisted RDD behind — a long-lived session (the
-    HTTP server) would otherwise leak one cached frame per search."""
+def test_polygon_join_leaves_no_persisted_rdds(spark, queries_df):
+    """Building (and running) the default polygon join must leave NO
+    persisted RDD behind — a long-lived session (the HTTP server)
+    would otherwise leak one cached frame per search."""
     from rustac_spark import DATA_DIR
     from rustac_spark.geocode import with_geocode
     spark.catalog.clearCache()

@@ -163,6 +163,34 @@ def test_malformed_requests_get_400_not_dropped_connection(server):
     assert e.value.code == 400
 
 
+def test_engine_errors_answer_json_not_dropped_connection(
+        spark, stac_items, monkeypatch):
+    """An analysis error (unknown sortby field) is the request's fault
+    → 400; any other engine exception → 500. Both carry the JSON
+    error body."""
+    srv, base = serve(items=stac_items, background=True)
+    try:
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(f"{base}/search", {"sortby": "no_such_field"})
+        assert e.value.code == 400
+        err = json.loads(e.value.read().decode())
+        assert err["code"] == 400 and "no_such_field" in err["description"]
+
+        def boom(*a, **k):
+            raise RuntimeError("engine down")
+
+        monkeypatch.setattr(srv.RequestHandlerClass.app, "search", boom)
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(f"{base}/search", {})
+        assert e.value.code == 500
+        err = json.loads(e.value.read().decode())
+        assert err == {"code": 500,
+                       "description": "RuntimeError: engine down"}
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_get_prev_link_is_query_param(server):
     st, fc = _get(f"{server}/search?limit=5&skip=10&sortby=id")
     prv = next(l for l in fc["links"] if l["rel"] == "prev")
