@@ -19,7 +19,11 @@ same commit discipline, swappable for real Iceberg later:
   data files that actually contain matching rows are rewritten
   (located via one metadata-cheap ``input_file_name()`` aggregation);
   untouched files are carried into the new snapshot by reference —
-  at 100 TB a targeted delete rewrites megabytes, not the table.
+  at 100 TB a targeted delete rewrites megabytes, not the table;
+- every write goes through one commit routine: an upsert's rewritten
+  survivors and its new rows are staged in one parquet write and
+  published as ONE snapshot, so no reader sees a key missing or
+  doubled.
 
 Filesystem access reuses lineage's backend split: plain paths use the
 fast local path, scheme URIs go through the Hadoop FileSystem JVM API.
@@ -30,8 +34,10 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .lineage import _fs_for
 
@@ -47,6 +53,35 @@ def _meta(table_dir: str) -> str:
 
 def _data(table_dir: str) -> str:
     return f"{table_dir}/data"
+
+
+def _tail2(path: str) -> str:
+    return "/".join(path.rstrip("/").split("/")[-2:])
+
+
+def _align(df: DataFrame, schema: StructType) -> DataFrame:
+    """Project `df` onto the table schema: missing columns become
+    NULL, extra columns are dropped, types are cast. Writes must not
+    fork the table schema (the snapshot reader has no mergeSchema
+    pass — by design: a 10^12-row table wants one authoritative
+    schema, with evolution as an explicit migration)."""
+    return df.select(*[
+        (F.col(f.name) if f.name in df.columns else F.lit(None))
+        .cast(f.dataType).alias(f.name) for f in schema.fields])
+
+
+_KEY_SEP = "\x1f"        # cannot appear in STAC ids/collection ids
+_KEY_NULL = "\x00null"   # distinct from every real value, incl. ''
+
+
+def _key_column(keys: list[str]) -> Column:
+    """NULL-safe composite key string. Each part is coalesced to a
+    sentinel that is NOT '' before joining, so concat_ws never skips
+    a NULL part (a NULL-collection item would otherwise key as its
+    bare id) and a NULL key never collides with an '' key."""
+    return F.concat_ws(_KEY_SEP, *[
+        F.coalesce(F.col(k).cast("string"), F.lit(_KEY_NULL))
+        for k in keys])
 
 
 class SnapshotTable:
@@ -169,16 +204,14 @@ class SnapshotTable:
 
     # ------------------------------------------------------- writing
 
-    def _stage_files(self, df: DataFrame) -> tuple[list[str], int]:
+    def _stage_files(self, df: DataFrame) -> list[str]:
         """Write df's rows as new immutable data files; returns their
-        paths + row count. Files are invisible until a manifest
-        referencing them is published."""
+        paths. Files are invisible until a manifest referencing them
+        is published."""
         batch = uuid.uuid4().hex[:12]
         out = f"{_data(self.dir)}/batch-{batch}"
         df.write.mode("error").parquet(out)
-        files = [p for p, _ in self.fs.list_parquet(out)]
-        n = sum(self.fs.parquet_rows(p) for p in files)
-        return files, n
+        return [p for p, _ in self.fs.list_parquet(out)]
 
     def _publish(self, parent: int | None, files: list[str],
                  operation: str, extra: dict | None = None) -> int:
@@ -203,57 +236,66 @@ class SnapshotTable:
         self.fs.write_text_atomic(f"{_meta(self.dir)}/CURRENT", str(sid))
         return sid
 
-    def create(self, df: DataFrame, extra: dict | None = None) -> int:
-        self.fs.mkdirs(_data(self.dir))
-        files, _ = self._stage_files(df)
-        return self._publish(None, files, "create", extra)
+    def _commit(self, operation: str, drop: Column | None = None,
+                add: DataFrame | None = None,
+                extra: dict | None = None) -> int:
+        """The one write path. Reads CURRENT once as the parent, drops
+        the parent's rows where `drop` is TRUE (file-granular
+        copy-on-write: only files holding such rows are rewritten, the
+        rest carry over by reference), adds `add`'s rows aligned to
+        the parent's schema, stages survivors and added rows in ONE
+        parquet write and publishes ONE manifest. A commit on a table
+        with no CURRENT is its first snapshot ("create")."""
+        parent = self.current_snapshot_id()
+        if parent is None and add is not None:
+            return self._publish(None, self._stage_files(add), "create",
+                                 extra)
+        keep = self.manifest(parent)["files"]  # no CURRENT: raises
+        cur = self.spark.read.parquet(*keep)
+        parts = []
+        if drop is not None:
+            # input_file_name returns URIs (file:///…); manifests hold
+            # fs-local paths — compare on the last two path components,
+            # unique by construction (uuid batch dir + part file name)
+            touched = {_tail2(r["f"]) for r in
+                       (cur.where(drop)
+                        .select(F.input_file_name().alias("f"))
+                        .distinct().collect())}
+            rewrite = [p for p in keep if _tail2(p) in touched]
+            keep = [p for p in keep if _tail2(p) not in touched]
+            if rewrite:
+                # SQL / Iceberg DELETE removes only rows where the
+                # condition is TRUE; rows where it evaluates NULL must
+                # survive. `~drop` alone would drop NULL-evaluating
+                # rows (and only in touched files — file-layout-
+                # dependent), so keep NOT TRUE explicitly.
+                parts.append(self.spark.read.parquet(*rewrite)
+                             .where(F.coalesce(~drop, F.lit(True))))
+        if add is not None:
+            parts.append(_align(add, cur.schema))
+        staged = (self._stage_files(reduce(DataFrame.unionByName, parts))
+                  if parts else [])
+        return self._publish(parent, keep + staged, operation, extra)
 
     def append(self, df: DataFrame, extra: dict | None = None) -> int:
-        parent = self.current_snapshot_id()
-        old = self.manifest(parent)["files"]
-        files, _ = self._stage_files(df)
-        return self._publish(parent, old + files, "append", extra)
+        """Add df's rows (the first commit creates the table)."""
+        return self._commit("append", add=df, extra=extra)
 
     def delete_where(self, condition) -> int:
-        """Copy-on-write delete: rewrite ONLY files containing rows
-        matching `condition` (a Column or SQL string); all other
-        files carry over by reference."""
-        parent = self.current_snapshot_id()
-        old = self.manifest(parent)["files"]
+        """Copy-on-write delete of the rows where `condition` (a Column
+        or SQL string) is TRUE."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        cur = self.spark.read.parquet(*old)
-        touched = {r["f"] for r in
-                   (cur.where(cond)
-                    .select(F.input_file_name().alias("f"))
-                    .distinct().collect())}
-        # input_file_name returns URIs (file:///…); manifests hold
-        # fs-local paths — compare on the last two path components,
-        # unique by construction (uuid batch dir + part file name)
-        def tail2(p: str) -> str:
-            return "/".join(p.rstrip("/").split("/")[-2:])
+        return self._commit("delete", drop=cond)
 
-        touched_tails = {tail2(t) for t in touched}
-        keep = [p for p in old if tail2(p) not in touched_tails]
-        rewrite = [p for p in old if tail2(p) in touched_tails]
-        new_files: list[str] = []
-        if rewrite:
-            # SQL / Iceberg DELETE removes only rows where the
-            # condition is TRUE; rows where it evaluates NULL must
-            # survive. `~cond` alone would drop NULL-evaluating rows
-            # (and only in touched files — file-layout-dependent), so
-            # keep NOT TRUE explicitly.
-            survivors = (self.spark.read.parquet(*rewrite)
-                         .where(F.coalesce(~cond, F.lit(True))))
-            new_files, _ = self._stage_files(survivors)
-        return self._publish(parent, keep + new_files, "delete")
-
-    def upsert(self, df: DataFrame, key: str) -> int:
-        """MERGE by key: delete existing rows whose `key` appears in
-        df (file-granular COW), then append df — one new snapshot
-        each; the pair is the classic two-commit merge."""
-        keys = [r[0] for r in df.select(key).distinct().collect()]
-        self.delete_where(F.col(key).isin(keys))
-        return self.append(df)
+    def upsert(self, df: DataFrame, keys: list[str]) -> int:
+        """MERGE by the composite `keys`: ONE snapshot ("upsert") that
+        drops every row whose key appears in df and adds df, so no
+        reader ever sees the key missing or doubled. The drop is ONE
+        flat isin (Catalyst InSet) over the batch's distinct keys: a
+        10k-row batch stays an O(1)-depth plan."""
+        key = _key_column(keys)
+        batch = [r[0] for r in df.select(key).distinct().collect()]
+        return self._commit("upsert", drop=key.isin(batch), add=df)
 
     # ---------------------------------------------- streaming sink
 
@@ -264,20 +306,15 @@ class SnapshotTable:
         micro-batch (after a crash between the table commit and the
         checkpoint advance) is recognized and skipped. Returns the new
         snapshot id, or None if this batch was already committed."""
-        cur = self.current_snapshot_id()
-        if cur is not None:
-            sid = cur
-            while sid is not None:
-                m = self.manifest(sid)
-                if m.get("batch_id") == batch_id:
-                    return None  # replay of an already-committed batch
-                sid = m["parent"]
-        extra = {"batch_id": batch_id}
+        sid = self.current_snapshot_id()
+        while sid is not None:
+            m = self.manifest(sid)
+            if m.get("batch_id") == batch_id:
+                return None  # replay of an already-committed batch
+            sid = m["parent"]
         # the batch id rides IN the manifest, written before the
         # pointer flip — no crash window between commit and stamp
-        if cur is None:
-            return self.create(df, extra)
-        return self.append(df, extra)
+        return self.append(df, {"batch_id": batch_id})
 
 
 def stream_to_table(prepared: DataFrame, table_dir: str,

@@ -9,7 +9,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from .search import Search, build_plan, parse_sortby
+from .search import Search, _q, build_plan, parse_sortby
 
 DEFAULT_LIMIT = 10  # crates/server/src/lib.rs:57
 
@@ -111,10 +111,6 @@ def search_page_keyset(df: DataFrame, search: Search,
     return Page(rows=rows, number_matched=matched,
                 number_returned=len(rows), next_token=nxt,
                 prev_token=None)
-
-
-def _q(name: str) -> str:
-    return f"`{name}`" if (":" in name or "." in name) else name
 
 
 CONFORMANCE_CLASSES = [

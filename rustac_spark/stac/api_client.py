@@ -18,7 +18,9 @@ from __future__ import annotations
 
 import json
 import os
+import queue
 import tempfile
+import threading
 import urllib.request
 from typing import Iterator
 
@@ -42,48 +44,50 @@ def fetch_search_features(url: str, search_body: dict | None = None,
     the link may carry its own href/body; ``merge: true`` means the
     link body overlays the original search body.
 
-    Page n+1 is PREFETCHED on a single background thread as soon as
-    page n's next link is known, while the caller consumes page n's
-    features — the one-ahead analogue of the reference's buffered
-    page channel (api.rs:23,419-448). Remote latency then overlaps
-    parse/spool time instead of adding to it, page for page. The
-    protocol itself stays serial (each next link comes from the
-    previous response), so one worker is the maximum useful depth.
-    Note the look-ahead means one page beyond what the caller
-    consumes may be requested; a caller that abandons the generator
-    early does NOT wait for that in-flight request — the pool is
-    released without joining it (round-6 advice: the context-manager
-    form blocked in ``__exit__`` for up to ``timeout`` seconds)."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    Page n+1 is PREFETCHED on a daemon thread as soon as page n's
+    next link is known, while the caller consumes page n's features —
+    the one-ahead analogue of the reference's buffered page channel
+    (api.rs:23,419-448). Remote latency then overlaps parse/spool time
+    instead of adding to it, page for page. The protocol itself stays
+    serial (each next link comes from the previous response), so one
+    request in flight is the maximum useful depth. The look-ahead
+    means one page beyond what the caller consumes may be requested;
+    a caller that abandons the generator early never waits for that
+    request, and because the thread is a daemon, neither does the
+    interpreter at exit."""
     base_body = dict(search_body or {})
-    page_url = url.rstrip("/") + "/search"
-    body = base_body
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        fut = pool.submit(_post_json, page_url, body, timeout)
-        for page_no in range(max_pages):
-            doc = fut.result()
-            nxt = next((l for l in doc.get("links", [])
-                        if l.get("rel") == "next"), None)
-            if nxt is not None and page_no + 1 < max_pages:
-                # launch the next fetch BEFORE yielding this page so
-                # the download runs while the caller processes rows
-                page_url = nxt["href"]
-                body = dict(nxt.get("body") or {})
-                if nxt.get("merge"):
-                    merged = dict(base_body)
-                    merged.update(body)
-                    body = merged
-                fut = pool.submit(_post_json, page_url, body, timeout)
+    pending = _prefetch(url.rstrip("/") + "/search", base_body, timeout)
+    for page_no in range(max_pages):
+        doc, err = pending.get()
+        if err is not None:
+            raise err
+        nxt = next((l for l in doc.get("links", [])
+                    if l.get("rel") == "next"), None)
+        if nxt is None or page_no + 1 >= max_pages:
             yield from doc.get("features", [])
-            if nxt is None or page_no + 1 >= max_pages:
-                return
-    finally:
-        # wait=False: never block a caller that stopped iterating on
-        # the in-flight prefetch; the daemon-less worker thread just
-        # finishes its request and exits
-        pool.shutdown(wait=False)
+            return
+        # launch the next fetch BEFORE yielding this page so the
+        # download runs while the caller processes rows
+        body = dict(nxt.get("body") or {})
+        if nxt.get("merge"):
+            body = {**base_body, **body}
+        pending = _prefetch(nxt["href"], body, timeout)
+        yield from doc.get("features", [])
+
+
+def _prefetch(url: str, body: dict, timeout: float) -> queue.Queue:
+    """POST on a daemon thread; the queue receives (doc, None) or
+    (None, exception) — errors re-raise where the page is consumed."""
+    out: queue.Queue = queue.Queue(maxsize=1)
+
+    def run() -> None:
+        try:
+            out.put((_post_json(url, body, timeout), None))
+        except Exception as e:  # noqa: BLE001 — handed to the consumer
+            out.put((None, e))
+
+    threading.Thread(target=run, daemon=True).start()
+    return out
 
 
 def read_stac_api(spark, url: str, search_body: dict | None = None,

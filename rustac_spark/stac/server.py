@@ -138,33 +138,10 @@ class StacApp:
         search = _params_to_search(params)
         page = search_page(self.items_df(), search, skip=skip)
         features = [row_to_item(r) for r in page.rows]
-        links = []
-        if page.next_token is not None:
-            nxt = page.next_token["skip"]
-            if method == "POST":
-                links.append({"rel": "next",
-                              "href": f"{self.root}/search",
-                              "method": "POST",
-                              "body": {"skip": nxt}, "merge": True})
-            else:
-                q = urllib.parse.urlencode({**params, "skip": nxt})
-                links.append({"rel": "next",
-                              "href": f"{self.root}/search?{q}",
-                              "method": "GET"})
-        if page.prev_token is not None:
-            prv = page.prev_token["skip"]
-            if method == "POST":
-                links.append({"rel": "prev",
-                              "href": f"{self.root}/search",
-                              "method": "POST",
-                              "body": {"skip": prv}, "merge": True})
-            else:
-                # GET clients carry no body — the token must ride the
-                # query string, like the GET next link
-                q = urllib.parse.urlencode({**params, "skip": prv})
-                links.append({"rel": "prev",
-                              "href": f"{self.root}/search?{q}",
-                              "method": "GET"})
+        links = [self._page_link(rel, method, params, tok)
+                 for rel, tok in (("next", page.next_token),
+                                  ("prev", page.prev_token))
+                 if tok is not None]
         return {
             "type": "FeatureCollection",
             "features": features,
@@ -172,6 +149,18 @@ class StacApp:
             "numberReturned": page.number_returned,
             "links": links,
         }
+
+    def _page_link(self, rel: str, method: str, params: dict,
+                   token: dict) -> dict:
+        """A paging link carrying `token`: POST links put it in a body
+        the client merges into its search; GET clients carry no body,
+        so the token rides the query string next to the search params."""
+        if method == "POST":
+            return {"rel": rel, "href": f"{self.root}/search",
+                    "method": "POST", "body": token, "merge": True}
+        q = urllib.parse.urlencode({**params, **token})
+        return {"rel": rel, "href": f"{self.root}/search?{q}",
+                "method": "GET"}
 
     def _search_keyset(self, params: dict, method: str) -> dict:
         """Cursor (keyset) paging — the 100 TB path: each page filters
@@ -187,19 +176,9 @@ class StacApp:
         search = _params_to_search(params)
         after = {"keys": _decode_cursor(tok)} if tok else None
         page = search_page_keyset(self.items_df(), search, after=after)
-        links = []
-        if page.next_token is not None:
-            nxt = _encode_cursor(page.next_token["keys"])
-            if method == "POST":
-                links.append({"rel": "next",
-                              "href": f"{self.root}/search",
-                              "method": "POST",
-                              "body": {"cursor": nxt}, "merge": True})
-            else:
-                q = urllib.parse.urlencode({**params, "cursor": nxt})
-                links.append({"rel": "next",
-                              "href": f"{self.root}/search?{q}",
-                              "method": "GET"})
+        links = ([] if page.next_token is None else [self._page_link(
+            "next", method, params,
+            {"cursor": _encode_cursor(page.next_token["keys"])})])
         return {
             "type": "FeatureCollection",
             "features": [row_to_item(r) for r in page.rows],

@@ -11,9 +11,10 @@ concurrency for free.
 
 Scale posture: ``add_items`` appends parquet files without rewriting
 the table (O(batch) work); ``upsert_items`` is the file-granular COW
-merge (only files containing a replaced (collection, id) are
-rewritten). Collection extents are DERIVED from the item table by the
-same aggregation the reference runs in
+merge, committed as one snapshot (only files containing a replaced
+(collection, id) are rewritten, in the same write as the batch).
+Collection extents are DERIVED from the item table by the same
+aggregation the reference runs in
 ``Client::collections`` (crates/duckdb/src/client.rs:123-181) — no
 separately-maintained extent rows to drift out of sync.
 """
@@ -28,21 +29,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..pipeline.snapshots import SnapshotTable
 from .api import collections as derive_collections
 from .search import Search, build_plan
-
-
-def _align(df: DataFrame, target: DataFrame) -> DataFrame:
-    """Project `df` onto `target`'s schema: missing columns become
-    NULL, extra columns are dropped, types are cast. Transactional
-    appends must not fork the table schema (the snapshot reader has
-    no mergeSchema pass — by design: a 10^12-row table wants one
-    authoritative schema, with evolution as an explicit migration)."""
-    cols = []
-    for f in target.schema.fields:
-        if f.name in df.columns:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
 
 
 class TransactionClient:
@@ -108,9 +94,7 @@ class TransactionClient:
         schema-aligned to the table; ids are not checked for
         uniqueness (STAC POST semantics — use upsert_items for
         idempotent ingest)."""
-        if self.table.current_snapshot_id() is None:
-            return self.table.create(items)
-        return self.table.append(_align(items, self.read()))
+        return self.table.append(items)
 
     def add_item(self, item: dict) -> int:
         """Single STAC item dict → one-row commit (POST
@@ -125,31 +109,10 @@ class TransactionClient:
         return self.add_items(self._items_df(items))
 
     def upsert_items(self, items: DataFrame) -> int:
-        """MERGE by (collection, id): existing versions of the
-        incoming items are deleted (file-granular COW), then the batch
-        appends — PUT semantics. Two snapshots: delete + append.
-        The delete predicate is ONE isin over composite keys (Catalyst
-        InSet — flat hash lookup), not a chained OR: a 10k-item batch
-        stays an O(1)-depth plan."""
-        if self.table.current_snapshot_id() is None:
-            return self.table.create(items)  # PUT on an empty table
-        aligned = _align(items, self.read())
-        sep = "\x1f"  # cannot appear in STAC ids/collection ids
-        null_sentinel = "\x00null"  # distinct from every real id, incl. ''
-        # NULL collections must key identically on both sides:
-        # concat_ws SKIPS nulls (yielding a sep-less 'id' that a
-        # Python-side 'None\x1fid' would never match, leaving stale
-        # versions behind). Map NULL to a sentinel that is NOT '' so a
-        # NULL-collection item and an ''-collection item sharing an id
-        # never delete each other.
-        keys = [(null_sentinel if r["collection"] is None
-                 else r["collection"]) + sep + r["id"]
-                for r in aligned.select("collection", "id").collect()]
-        self.table.delete_where(
-            F.concat(F.coalesce(F.col("collection"), F.lit(null_sentinel)),
-                     F.lit(sep), F.col("id"))
-            .isin(keys))
-        return self.table.append(aligned)
+        """MERGE by (collection, id) — PUT semantics: existing versions
+        of the incoming items are replaced in ONE atomic snapshot
+        (file-granular COW; see SnapshotTable.upsert)."""
+        return self.table.upsert(items, ["collection", "id"])
 
     def upsert_item(self, item: dict) -> int:
         """Single STAC item dict create-or-replace — the PUT
@@ -212,8 +175,8 @@ def items_dataframe(spark: SparkSession, items: list[dict]) -> DataFrame:
     geometry → WKB bytes, bbox struct derived from the geometry when
     the item carries none, properties.* hoisted, datetime-family
     strings parsed to naive-UTC timestamps (the fixture/table
-    convention). Types are inferred per key and appenders cast to the
-    table schema via `_align` — building directly against a table
+    convention). Types are inferred per key and the table's commit
+    casts them to its schema — building directly against a table
     schema would make createDataFrame's strict verifier reject e.g. a
     JSON integer for a double column (ints are valid JSON numbers)."""
     from datetime import datetime
@@ -287,7 +250,7 @@ def items_dataframe(spark: SparkSession, items: list[dict]) -> DataFrame:
             # mixing JSON ints and floats (eo:cloud_cover 10 then
             # 10.5) must infer DoubleType, or createDataFrame's
             # strict verifier rejects the float row and fails the
-            # whole ingest — mirror the _align cast direction
+            # whole ingest — mirror the commit's cast direction
             if isinstance(t, LongType) and any(
                     isinstance(v, float) for v in vals):
                 t = DoubleType()

@@ -203,3 +203,60 @@ def test_fetch_early_exit_does_not_block_on_prefetch(mock_api):
     gen.close()  # GeneratorExit inside the yield loop
     assert time.time() - t0 < 2.0
     assert first["id"] == "item-0"
+
+
+def test_abandoned_prefetch_does_not_hold_process_exit():
+    """A process that takes page 1 and exits must not wait for the
+    prefetch of page 2: Python joins non-daemon threads at exit, which
+    would hold the process for up to `timeout`."""
+    import os
+    import subprocess
+    import sys
+    import time
+    from http.server import ThreadingHTTPServer
+
+    release = threading.Event()
+
+    class _Slow(BaseHTTPRequestHandler):
+        def do_POST(self):
+            n = int(self.headers.get("Content-Length", 0))
+            page = int(json.loads(self.rfile.read(n) or b"{}")
+                       .get("page", 0))
+            if page >= 1:
+                release.wait(10)  # page 2 hangs until teardown
+            base = f"http://{self.headers['Host']}"
+            doc = {"type": "FeatureCollection",
+                   "features": [_item(2 * page)],
+                   "links": [{"rel": "next", "href": f"{base}/search",
+                              "body": {"page": page + 1}}]}
+            out = json.dumps(doc).encode()
+            self.send_response(200)
+            self.send_header("Content-Length", str(len(out)))
+            self.end_headers()
+            self.wfile.write(out)
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _Slow)
+    srv.daemon_threads = True
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    child = (
+        "import sys\n"
+        "from rustac_spark.stac.api_client import fetch_search_features\n"
+        "gen = fetch_search_features(sys.argv[1], timeout=10)\n"
+        "print(next(gen)['id'], flush=True)\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.Popen(
+        [sys.executable, "-c", child,
+         f"http://127.0.0.1:{srv.server_address[1]}"],
+        stdout=subprocess.PIPE, text=True, cwd=root)
+    try:
+        assert proc.stdout.readline().strip() == "item-0"
+        t0 = time.time()
+        proc.wait(timeout=15)
+        assert time.time() - t0 < 3.0
+    finally:
+        proc.kill()
+        release.set()
+        srv.shutdown()

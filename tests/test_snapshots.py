@@ -14,7 +14,7 @@ def _rows(spark, ids):
 
 def test_create_append_time_travel(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    s1 = t.create(_rows(spark, range(10)))
+    s1 = t.append(_rows(spark, range(10)))
     s2 = t.append(_rows(spark, range(10, 25)))
     assert (s1, s2) == (1, 2)
     assert t.read().count() == 25
@@ -32,7 +32,7 @@ def test_delete_is_file_granular_cow(spark, tmp_path):
     # 4 files with disjoint id ranges (repartitionByRange keeps them
     # range-disjoint so a targeted delete touches one file)
     df = _rows(spark, range(40)).repartitionByRange(4, "id")
-    t.create(df)
+    t.append(df)
     before = t.manifest()["files"]
     assert len(before) == 4
     t.delete_where("id >= 35")
@@ -47,19 +47,34 @@ def test_delete_is_file_granular_cow(spark, tmp_path):
 
 def test_upsert_by_key(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    t.create(_rows(spark, range(10)))
+    t.append(_rows(spark, range(10)))
     updated = spark.createDataFrame(
         [(3, "NEW3", 99), (11, "u11", 2)],
         "id long, url string, grp long")
-    t.upsert(updated, key="id")
+    t.upsert(updated, keys=["id"])
     got = {r["id"]: r["url"] for r in t.read().collect()}
     assert len(got) == 11
     assert got[3] == "NEW3" and got[11] == "u11" and got[4] == "u4"
+    # the merge is ONE snapshot: no reader sees id 3 missing
+    assert [h["operation"] for h in t.history()] == ["create", "upsert"]
+
+
+def test_upsert_null_key_replaces_not_duplicates(spark, tmp_path):
+    """A NULL key value is a key like any other: upserting it replaces
+    the stored NULL-keyed row instead of adding a second one."""
+    schema = "id long, url string, grp long"
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(spark.createDataFrame([(None, "old", 0), (1, "u1", 1)],
+                                   schema))
+    t.upsert(spark.createDataFrame([(None, "new", 0)], schema),
+             keys=["id"])
+    got = sorted((r["id"] is None, r["url"]) for r in t.read().collect())
+    assert got == [(False, "u1"), (True, "new")]
 
 
 def test_optimistic_concurrency_conflict(spark, tmp_path):
     t1 = SnapshotTable(spark, str(tmp_path / "tbl"))
-    t1.create(_rows(spark, range(5)))
+    t1.append(_rows(spark, range(5)))
     t2 = SnapshotTable(spark, str(tmp_path / "tbl"))
     # both writers observe snapshot 1; t2 commits first
     files1 = t1.manifest()["files"]
@@ -74,7 +89,7 @@ def test_optimistic_concurrency_conflict(spark, tmp_path):
 def test_no_partial_visibility(spark, tmp_path):
     """Staged-but-unpublished files are invisible to readers."""
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    t.create(_rows(spark, range(6)))
+    t.append(_rows(spark, range(6)))
     t._stage_files(_rows(spark, range(100, 200)))  # staged, no commit
     assert t.read().count() == 6
     assert t.history()[-1]["n_rows"] == 6
@@ -126,7 +141,7 @@ def test_delete_where_null_predicate_keeps_rows(spark, tmp_path):
     # one file so the NULL row definitely sits in a rewritten file
     df = spark.createDataFrame(
         [(1, 10), (2, None), (3, 99)], "id long, val long").coalesce(1)
-    t.create(df)
+    t.append(df)
     t.delete_where(F.col("val") > 50)
     got = sorted(r["id"] for r in t.read().collect())
     assert got == [1, 2]  # id=2 (val NULL) survives, id=3 deleted
@@ -139,12 +154,12 @@ def test_read_changes_reconstructs_states(spark, tmp_path):
     from collections import Counter
 
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    t.create(_rows(spark, range(20)).repartitionByRange(4, "id"))
+    t.append(_rows(spark, range(20)).repartitionByRange(4, "id"))
     t.append(_rows(spark, range(20, 30)))
     t.delete_where("id >= 25")
     t.upsert(spark.createDataFrame([(3, "NEW3", 9)],
                                    "id long, url string, grp long"),
-             key="id")
+             keys=["id"])
     last = t.current_snapshot_id()
 
     def key(r):
@@ -171,7 +186,7 @@ def test_expire_snapshots_vacuum(spark, tmp_path):
     import os
 
     t = SnapshotTable(spark, str(tmp_path / "tbl"))
-    t.create(_rows(spark, range(20)).repartitionByRange(4, "id"))
+    t.append(_rows(spark, range(20)).repartitionByRange(4, "id"))
     t.delete_where("id < 5")     # rewrites one file; snap 2
     t.append(_rows(spark, range(20, 25)))   # snap 3
     before_cur = sorted(r["id"] for r in t.read().collect())

@@ -51,6 +51,32 @@ def test_upsert_and_delete(txn):
     assert ops[0] == "create" and "delete" in ops
 
 
+def test_upsert_items_is_one_atomic_snapshot(txn):
+    """An upsert commits ONE snapshot: every snapshot from before to
+    after it holds exactly one version of the key, so a read landing
+    at any commit never misses (or doubles) the item."""
+    before = txn.table.current_snapshot_id()
+    upd = (txn.read().where("id = 'item-0000'")
+           .withColumn("eo:cloud_cover", F.lit(77.0)))
+    txn.upsert_items(upd)
+    after = txn.table.current_snapshot_id()
+    assert after == before + 1
+    assert txn.table.manifest(after)["operation"] == "upsert"
+    for sid in range(before, after + 1):
+        assert txn.read(sid).where("id = 'item-0000'").count() == 1
+
+
+def test_upsert_item_on_empty_table_creates(spark, tmp_path):
+    """PUT on a table with no snapshot yet is its first commit."""
+    t = TransactionClient(spark, str(tmp_path / "fresh"))
+    t.upsert_item({
+        "type": "Feature", "id": "first", "collection": "c",
+        "geometry": {"type": "Point", "coordinates": [0.0, 0.0]},
+        "properties": {"datetime": "2025-01-01T00:00:00Z"}})
+    assert t.read().count() == 1
+    assert [h["operation"] for h in t.table.history()] == ["create"]
+
+
 def test_add_collection_registered_and_merged(txn):
     txn.add_collection({"id": "collection-empty",
                         "description": "registered, no items"})
