@@ -1,4 +1,4 @@
-"""Compile driver-captured geometry pieces to pure-Column predicates.
+"""Compile driver-captured geometry pieces to SQL predicate text.
 
 The spatial join's refine step evaluates exact rect x geometry
 intersects for polygon-kind queries. The numpy kernels
@@ -11,10 +11,24 @@ bench input than the same join with the Arrow refine attached).
 The spatial join captures every polygon's pieces driver-side, and a
 search has one literal geometry, so small geometries — the common
 STAC search contract: a handful of polygons with tens of vertices —
-compile into a boolean Column expression evaluated inside generated
-code: zero Python, zero Arrow, short-circuited per row.
+compile into a boolean expression evaluated inside generated code:
+zero Python, zero Arrow, short-circuited per row.
 geometry_predicate is that one predicate; spatial_join
 (compile_refine_predicate) and build_plan / CQL2 s_intersects use it.
+
+The predicate is emitted as SQL text over the caller's column
+references and handed to the plan through ONE F.expr per public
+function — building it costs milliseconds of string work instead of
+one py4j call per literal and operator. Three rules are
+load-bearing:
+- literals are exact DOUBLEs: repr(float) plus a D suffix (_lit). A
+  bare 0.1 in Spark SQL is a DECIMAL and changes the arithmetic;
+- chains are flat: `a OR b OR c`, never nested one term at a time —
+  Spark's parser balances a flat AND/OR chain, where a left-deep
+  600-term OR overflowed the JVM stack during analysis. Left-to-right
+  order is kept, so the cover accept still short-circuits first;
+- emission is deterministic: the same geometry gives the same text,
+  hence the same tree and a codegen-cache hit (see anchored).
 
 Physical form matters: a direct Column transliteration of the
 ray-cast + on-edge kernels produced ~900 expression nodes per polygon
@@ -62,7 +76,7 @@ reject-memo refine at every parallelism level (sf0.1 build+write
 interleaved A/B: local[8] 2.39 vs 3.35 s, local[16] 1.75 vs 2.62 s,
 local[32] 1.63 vs 2.75 s), with zero eager Spark jobs at plan build.
 The analysis below of WHERE generated code breaks remains
-load-bearing for any future Column geometry work.
+load-bearing for any future compiled geometry work.
 
 Two budgets gate compilation (callers fall back to the Arrow kernel
 on None): a per-geometry vertex cap (bounds per-row evaluation cost)
@@ -190,10 +204,25 @@ def ear_clip(ring) -> list[np.ndarray] | None:
     return tris if tris else None
 
 
-def sat_convex_col(verts, rx0: Column, ry0: Column,
-                   rx1: Column, ry1: Column) -> Column:
+def _lit(v) -> str:
+    """An exact DOUBLE literal: the shortest round-tripping repr plus
+    the D suffix (a bare ``0.1`` in Spark SQL is a DECIMAL)."""
+    return f"{float(v)!r}D"
+
+
+def _or(terms) -> str:
+    """A flat OR chain (the parser balances it); ``false`` if empty."""
+    terms = list(terms)
+    return " OR ".join(f"({t})" for t in terms) if terms else "false"
+
+
+def _and(terms) -> str:
+    return " AND ".join(f"({t})" for t in terms)
+
+
+def _sat_convex_sql(verts, rx0: str, ry0: str, rx1: str, ry1: str) -> str:
     """rect × convex polygon intersection as a separating-axis
-    conjunction — the Column twin of the DuckDB oracle's
+    conjunction — the SQL-text twin of the DuckDB oracle's
     _sat_convex_conds (__spark_entry__.py), same arithmetic term for
     term: rect-axis bbox overlap, then per edge normal (nx, ny) =
     (y2-y1, -(x2-x1)) an overlap test of [rmin, rmax] vs the
@@ -204,8 +233,8 @@ def sat_convex_col(verts, rx0: Column, ry0: Column,
         verts, dtype=np.float64)]
     xs = [v[0] for v in verts]
     ys = [v[1] for v in verts]
-    cond = ((rx0 <= F.lit(max(xs))) & (rx1 >= F.lit(min(xs)))
-            & (ry0 <= F.lit(max(ys))) & (ry1 >= F.lit(min(ys))))
+    conds = [f"{rx0} <= {_lit(max(xs))}", f"{rx1} >= {_lit(min(xs))}",
+             f"{ry0} <= {_lit(max(ys))}", f"{ry1} >= {_lit(min(ys))}"]
     n = len(verts)
     for i in range(n):
         x1, y1 = verts[i]
@@ -217,83 +246,66 @@ def sat_convex_col(verts, rx0: Column, ry0: Column,
         pmin, pmax = min(projs), max(projs)
         rlo_x, rhi_x = (rx0, rx1) if nx > 0 else (rx1, rx0)
         rlo_y, rhi_y = (ry0, ry1) if ny > 0 else (ry1, ry0)
-        rmin = F.lit(nx) * rlo_x + F.lit(ny) * rlo_y
-        rmax = F.lit(nx) * rhi_x + F.lit(ny) * rhi_y
-        cond = cond & (rmin <= F.lit(pmax)) & (rmax >= F.lit(pmin))
-    return cond
+        conds.append(f"{_lit(nx)} * {rlo_x} + {_lit(ny)} * {rlo_y}"
+                     f" <= {_lit(pmax)}")
+        conds.append(f"{_lit(nx)} * {rhi_x} + {_lit(ny)} * {rhi_y}"
+                     f" >= {_lit(pmin)}")
+    return " AND ".join(conds)
 
 
-def segment_hits_rect_col(x1: float, y1: float, x2: float, y2: float,
-                          rx0: Column, ry0: Column,
-                          rx1: Column, ry1: Column) -> Column:
-    """Column twin of predicates._segments_intersect_rects for one
+def _segment_hits_rect_sql(x1: float, y1: float, x2: float, y2: float,
+                           rx0: str, ry0: str, rx1: str, ry1: str) -> str:
+    """SQL-text twin of predicates._segments_intersect_rects for one
     constant segment vs per-row rects (Liang-Barsky). The p==0 /
     p<0 / p>0 branching resolves at expression-build time because the
     segment is constant."""
     dx, dy = x2 - x1, y2 - y1
-    qs = ((-dx, F.lit(x1) - rx0), (dx, rx1 - F.lit(x1)),
-          (-dy, F.lit(y1) - ry0), (dy, ry1 - F.lit(y1)))
-    ok: Column = F.lit(True)
-    t0: Column = F.lit(0.0)
-    t1: Column = F.lit(1.0)
+    qs = ((-dx, f"{_lit(x1)} - {rx0}"), (dx, f"{rx1} - {_lit(x1)}"),
+          (-dy, f"{_lit(y1)} - {ry0}"), (dy, f"{ry1} - {_lit(y1)}"))
+    conds: list[str] = []
+    t0 = [_lit(0.0)]
+    t1 = [_lit(1.0)]
     for p, q in qs:
         if p == 0:
-            ok = ok & (q >= F.lit(0.0))
+            conds.append(f"{q} >= {_lit(0.0)}")
         elif p < 0:
-            t0 = F.greatest(t0, q / F.lit(p))
+            t0.append(f"({q}) / {_lit(p)}")
         else:
-            t1 = F.least(t1, q / F.lit(p))
-    return ok & (t0 <= t1)
+            t1.append(f"({q}) / {_lit(p)}")
+    lo = t0[0] if len(t0) == 1 else f"greatest({', '.join(t0)})"
+    hi = t1[0] if len(t1) == 1 else f"least({', '.join(t1)})"
+    return " AND ".join(conds + [f"{lo} <= {hi}"])
 
 
-def _ring_sat(pts: np.ndarray, rx0, ry0, rx1, ry1
-              ) -> tuple[Column, int] | None:
-    """(intersects-expr, node estimate) for one exterior ring."""
-    if _is_convex(pts):
-        n_axes = len(pts) + 2
-        return (sat_convex_col(pts, rx0, ry0, rx1, ry1),
-                n_axes * _NODES_PER_SAT_AXIS)
-    tris = ear_clip(pts)
-    if tris is None:
-        return None
-    out: Column | None = None
-    for tri in tris:
-        t = sat_convex_col(tri, rx0, ry0, rx1, ry1)
-        out = t if out is None else out | t
-    return out, len(tris) * 5 * _NODES_PER_SAT_AXIS
+def _point_sql(x, y, rx0: str, ry0: str, rx1: str, ry1: str) -> str:
+    x, y = _lit(x), _lit(y)
+    return (f"{rx0} <= {x} AND {x} <= {rx1}"
+            f" AND {ry0} <= {y} AND {y} <= {ry1}")
 
 
-def _rect_strictly_inside_hole(pts: np.ndarray, rx0, ry0, rx1, ry1
-                               ) -> tuple[Column, int] | None:
-    """Column twin of predicates._rect_strictly_inside_ring for a
+def _convex_parts(pts: np.ndarray) -> list[np.ndarray] | None:
+    """The ring itself if convex, else its ear-clip triangles (None
+    if it cannot be triangulated): convex pieces whose union is the
+    closed ring, so a rect meets the ring iff it meets ANY part."""
+    return [pts] if _is_convex(pts) else ear_clip(pts)
+
+
+def _sat_nodes(parts) -> int:
+    return sum((len(p) + 2) * _NODES_PER_SAT_AXIS for p in parts)
+
+
+def _rect_strictly_inside_hole(pts: np.ndarray, parts,
+                               rx0: str, ry0: str, rx1: str, ry1: str) -> str:
+    """SQL-text twin of predicates._rect_strictly_inside_ring for a
     hole ring: all four rect corners inside the closed hole AND no
-    hole edge touching the rect. Corner membership is point-in-convex
-    (or point-in-any-triangle) — SAT with a degenerate rect."""
-    if _is_convex(pts):
-        regions: list[np.ndarray] | None = [pts]
-    else:
-        regions = ear_clip(pts)
-    if regions is None:
-        return None
-    corners_in: Column = F.lit(True)
-    nodes = 0
-    for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1)):
-        corner: Column | None = None
-        for reg in regions:
-            t = sat_convex_col(reg, cx, cy, cx, cy)
-            corner = t if corner is None else corner | t
-            nodes += (len(reg) + 2) * _NODES_PER_SAT_AXIS
-        corners_in = corners_in & corner
-    edge_touch: Column = F.lit(False)
+    hole edge touching the rect. Corner membership is point-in-ANY
+    convex part — SAT with a degenerate rect."""
+    corners = [_or(_sat_convex_sql(p, cx, cy, cx, cy) for p in parts)
+               for cx, cy in ((rx0, ry0), (rx1, ry0), (rx1, ry1), (rx0, ry1))]
     n = len(pts)
-    for i in range(n):
-        x1, y1 = pts[i]
-        x2, y2 = pts[(i + 1) % n]
-        edge_touch = edge_touch | segment_hits_rect_col(
-            float(x1), float(y1), float(x2), float(y2),
-            rx0, ry0, rx1, ry1)
-        nodes += _NODES_PER_SEGMENT
-    return corners_in & ~edge_touch, nodes
+    edges = [_segment_hits_rect_sql(*pts[i], *pts[(i + 1) % n],
+                                    rx0, ry0, rx1, ry1) for i in range(n)]
+    return f"{_and(corners)} AND NOT ({_or(edges)})"
 
 
 def _n_vertices(pieces) -> int:
@@ -308,56 +320,58 @@ def _n_vertices(pieces) -> int:
     return total
 
 
-def compile_pieces_predicate(pieces, rx0: Column, ry0: Column,
-                             rx1: Column, ry1: Column,
+def _pieces_terms(pieces, rect) -> tuple[list[str], int] | None:
+    """(one SQL term per piece, node estimate) — the row's rect
+    intersects the geometry iff ANY term holds; None when over
+    DEFAULT_VERTEX_BUDGET or a ring cannot be triangulated."""
+    if _n_vertices(pieces) > DEFAULT_VERTEX_BUDGET:
+        return None
+    terms: list[str] = []
+    nodes = 0
+    for kind, data in pieces:
+        if kind == "point":
+            terms.append(_point_sql(data[0], data[1], *rect))
+            nodes += _NODES_PER_POINT
+        elif kind == "line":
+            pts = np.asarray(data, dtype=np.float64)
+            if len(pts) == 1:
+                terms.append(_point_sql(pts[0][0], pts[0][1], *rect))
+                nodes += _NODES_PER_POINT
+            for i in range(len(pts) - 1):
+                terms.append(_segment_hits_rect_sql(
+                    *pts[i], *pts[i + 1], *rect))
+                nodes += _NODES_PER_SEGMENT
+        else:  # poly: rings[0] exterior, rest holes
+            rings = [_close_open(r) for r in data]
+            parts = [_convex_parts(r) for r in rings]
+            if any(p is None for p in parts):
+                return None
+            poly = [_or(_sat_convex_sql(p, *rect) for p in parts[0])]
+            nodes += _sat_nodes(parts[0])
+            for hole, hole_parts in zip(rings[1:], parts[1:]):
+                inside = _rect_strictly_inside_hole(hole, hole_parts, *rect)
+                poly.append(f"NOT ({inside})")
+                nodes += (4 * _sat_nodes(hole_parts)
+                          + len(hole) * _NODES_PER_SEGMENT)
+            terms.append(_and(poly))
+    return terms, nodes
+
+
+def compile_pieces_predicate(pieces, rx0: str, ry0: str, rx1: str, ry1: str,
                              ) -> tuple[Column, int] | None:
-    """(expr, node estimate): does the per-row rect intersect ANY
-    piece — the Column twin of predicates.rects_intersect_pieces
-    (union semantics of Multi*/GeometryCollection, search.rs:236-251).
+    """(expr, node estimate): does the per-row rect (column references
+    such as ``"bbox.xmin"``) intersect ANY piece — the compiled twin of
+    predicates.rects_intersect_pieces (union semantics of
+    Multi*/GeometryCollection, search.rs:236-251).
 
     Returns None when the geometry exceeds DEFAULT_VERTEX_BUDGET
     vertices or a ring cannot be triangulated — the caller keeps the
     Arrow kernel for that geometry.
     """
-    if _n_vertices(pieces) > DEFAULT_VERTEX_BUDGET:
+    compiled = _pieces_terms(pieces, (rx0, ry0, rx1, ry1))
+    if compiled is None:
         return None
-    out: Column = F.lit(False)
-    nodes = 0
-    for kind, data in pieces:
-        if kind == "point":
-            x, y = float(data[0]), float(data[1])
-            out = out | ((rx0 <= F.lit(x)) & (F.lit(x) <= rx1)
-                         & (ry0 <= F.lit(y)) & (F.lit(y) <= ry1))
-            nodes += _NODES_PER_POINT
-        elif kind == "line":
-            pts = np.asarray(data, dtype=np.float64)
-            if len(pts) == 1:
-                x, y = float(pts[0][0]), float(pts[0][1])
-                out = out | ((rx0 <= F.lit(x)) & (F.lit(x) <= rx1)
-                             & (ry0 <= F.lit(y)) & (F.lit(y) <= ry1))
-                nodes += _NODES_PER_POINT
-            for i in range(len(pts) - 1):
-                out = out | segment_hits_rect_col(
-                    float(pts[i][0]), float(pts[i][1]),
-                    float(pts[i + 1][0]), float(pts[i + 1][1]),
-                    rx0, ry0, rx1, ry1)
-                nodes += _NODES_PER_SEGMENT
-        else:  # poly: rings[0] exterior, rest holes
-            rings = [_close_open(r) for r in data]
-            ext = _ring_sat(rings[0], rx0, ry0, rx1, ry1)
-            if ext is None:
-                return None
-            poly, n_ext = ext
-            nodes += n_ext
-            for hole in rings[1:]:
-                h = _rect_strictly_inside_hole(hole, rx0, ry0, rx1, ry1)
-                if h is None:
-                    return None
-                inside_hole, n_hole = h
-                poly = poly & ~inside_hole
-                nodes += n_hole
-            out = out | poly
-    return out, nodes
+    return F.expr(_or(compiled[0])), compiled[1]
 
 
 def _content_key(pieces) -> str:
@@ -370,72 +384,60 @@ def _content_key(pieces) -> str:
 # comparisons per rect per row.
 _INNER_K = 3
 
-# Driver-side geometry work, memoized on geometry CONTENT (pickle
-# hash of the pieces) so an entry can never go stale. It holds:
-# - inscribed covers: the anchor-grid search costs ~6 ms of driver
-#   numpy per polygon;
-# - compiled Columns, per geometry and the join's whole refine CASE:
-#   building the SAT Column tree is thousands of py4j round trips
-#   (~4-6 s measured for the 17-polygon bench set), and even
-#   re-assembling the CASE from cached geometries is ~100 calls —
-#   pure serial cost on every plan build. A Column is an immutable
-#   expression tree, safe to splice into any number of plans.
-# Per-request callers (HTTP server, bench pass) hit it every time.
+# Inscribed covers, memoized on geometry CONTENT (pickle hash of the
+# pieces) so an entry can never go stale: the anchor-grid search costs
+# ~6 ms of driver numpy per polygon, and per-request callers (HTTP
+# server, bench pass) ask for the same geometries again and again.
 # Cleared wholesale when full and only read with .get: server threads
 # share it, and single dict operations cannot race into an exception.
-_CACHE: dict[tuple, object] = {}
+_CACHE: dict[str, list] = {}
 _CACHE_MAX = 256
-
-
-def _cached(key: tuple, build):
-    """build() memoized in _CACHE; a None result (over budget) is not
-    cached — the budget checks fail fast."""
-    out = _CACHE.get(key)
-    if out is None:
-        out = build()
-        if out is not None:
-            if len(_CACHE) >= _CACHE_MAX:
-                _CACHE.clear()
-            _CACHE[key] = out
-    return out
 
 
 def inscribed_cover(pieces) -> list[tuple]:
     """Up to _INNER_K axis-aligned rects strictly inside the geometry
     (empty unless it is one hole-free polygon): a rect wholly inside
     any of them intersects the geometry by containment."""
-    return _cached(("cover", _content_key(pieces)),
-                   lambda: inscribed_rects(pieces, _INNER_K))
+    key = _content_key(pieces)
+    out = _CACHE.get(key)
+    if out is None:
+        out = inscribed_rects(pieces, _INNER_K)
+        if len(_CACHE) >= _CACHE_MAX:
+            _CACHE.clear()
+        _CACHE[key] = out
+    return out
 
 
-def geometry_predicate(pieces, rx0: Column, ry0: Column,
-                       rx1: Column, ry1: Column,
+def _geometry_sql(pieces, rect) -> tuple[str, int] | None:
+    """geometry_predicate as SQL text: the inscribed-cover accepts,
+    then the compiled pieces, in one flat OR chain."""
+    compiled = _pieces_terms(pieces, rect)
+    if compiled is None:
+        return None
+    rx0, ry0, rx1, ry1 = rect
+    covers = [f"{rx0} >= {_lit(ir[0])} AND {ry0} >= {_lit(ir[1])}"
+              f" AND {rx1} <= {_lit(ir[2])} AND {ry1} <= {_lit(ir[3])}"
+              for ir in inscribed_cover(pieces)]
+    return _or(covers + compiled[0]), compiled[1]
+
+
+def geometry_predicate(pieces, rx0: str, ry0: str, rx1: str, ry1: str,
                        ) -> tuple[Column, int] | None:
     """(expr, node estimate): the engine's ONE rect × geometry
     intersects predicate — the multi-rect inscribed-cover accept
-    OR-ed ahead of the compiled SAT test. spatial_join's polygon
-    refine (via compile_refine_predicate) and build_plan's
-    ``intersects`` / CQL2 ``s_intersects`` refine both build it here.
+    OR-ed ahead of the compiled SAT test, over the rect's column
+    references. spatial_join's polygon refine (via
+    compile_refine_predicate) and build_plan's ``intersects`` / CQL2
+    ``s_intersects`` refine both build it here.
 
     None only when the geometry is over DEFAULT_VERTEX_BUDGET or a
     ring cannot be triangulated; the caller then keeps the Arrow
     kernel for that geometry.
     """
-    def build():
-        compiled = compile_pieces_predicate(pieces, rx0, ry0, rx1, ry1)
-        if compiled is None:
-            return None
-        expr, nodes = compiled
-        for ir in inscribed_cover(pieces):
-            inside_ir = ((rx0 >= F.lit(float(ir[0])))
-                         & (ry0 >= F.lit(float(ir[1])))
-                         & (rx1 <= F.lit(float(ir[2])))
-                         & (ry1 <= F.lit(float(ir[3]))))
-            expr = inside_ir | expr
-        return expr, nodes
-
-    return _cached((_content_key(pieces),
-                    tuple(str(c) for c in (rx0, ry0, rx1, ry1))), build)
+    compiled = _geometry_sql(pieces, (rx0, ry0, rx1, ry1))
+    if compiled is None:
+        return None
+    return F.expr(compiled[0]), compiled[1]
 
 
 def anchored(pred: Column) -> Column:
@@ -477,13 +479,14 @@ def anchored(pred: Column) -> Column:
 
 
 def compile_refine_predicate(pieces_by_qid: dict[int, list],
-                             qid: Column, kind: Column,
-                             rx0: Column, ry0: Column,
-                             rx1: Column, ry1: Column) -> Column | None:
-    """The spatial join's whole refine filter as one anchored Column,
-    or None if ANY query's geometry is out of budget (all-or-nothing:
-    a partial compile would still drag the full stream through Arrow
-    for the rest, so there is nothing to win).
+                             qid: str, kind: str,
+                             rx0: str, ry0: str, rx1: str, ry1: str,
+                             ) -> Column | None:
+    """The spatial join's whole refine filter as one anchored Column
+    over the given column references, or None if ANY query's geometry
+    is out of budget (all-or-nothing: a partial compile would still
+    drag the full stream through Arrow for the rest, so there is
+    nothing to win).
 
     Matches _mixed_refine row semantics: non-polygon kinds pass (rect
     overlap is already exact for them), polygon kinds take
@@ -494,23 +497,16 @@ def compile_refine_predicate(pieces_by_qid: dict[int, list],
     fails and Spark falls back to interpreted evaluation — slower
     than the Arrow kernel this compiler exists to beat.
     """
-    def build():
-        case: Column | None = None
-        total_nodes = 0
-        for q, pieces in pieces_by_qid.items():
-            compiled = geometry_predicate(pieces, rx0, ry0, rx1, ry1)
-            if compiled is None:
-                return None
-            expr, nodes = compiled
-            total_nodes += nodes
-            if total_nodes > DEFAULT_NODE_BUDGET:
-                return None
-            case = (F.when(qid == F.lit(q), expr) if case is None
-                    else case.when(qid == F.lit(q), expr))
-        polygon_ok = F.lit(False) if case is None else case.otherwise(
-            F.lit(False))
-        return anchored((kind != F.lit("polygon")) | polygon_ok)
-
-    return _cached((_content_key(sorted(pieces_by_qid.items())),
-                    tuple(str(c) for c in (qid, kind, rx0, ry0, rx1, ry1))),
-                   build)
+    whens: list[str] = []
+    total_nodes = 0
+    for q, pieces in pieces_by_qid.items():
+        compiled = _geometry_sql(pieces, (rx0, ry0, rx1, ry1))
+        if compiled is None:
+            return None
+        total_nodes += compiled[1]
+        if total_nodes > DEFAULT_NODE_BUDGET:
+            return None
+        whens.append(f"WHEN {int(q)} THEN {compiled[0]}")
+    polygon_ok = (f"CASE {qid} {' '.join(whens)} ELSE false END" if whens
+                  else "false")
+    return anchored(F.expr(f"{kind} != 'polygon' OR {polygon_ok}"))

@@ -186,7 +186,7 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
     broadcast query side the builder still runs ONE bounded eager
     collect (the polygon WKBs, captured driver-side so the candidate
     stream carries no per-row geometry); predicate construction adds
-    no further eager work (driver-side and content-cached).
+    no further eager work (driver-side SQL-text emission).
     Fully-lazy iterative callers should pass has_polygons=False when
     their probes are rect/point only (action-free plan building).
     """
@@ -248,8 +248,8 @@ def spatial_join(pages: DataFrame, queries: DataFrame,
         refined = None
         if pieces_by_qid is not None:
             refined = compile_refine_predicate(
-                pieces_by_qid, F.col("query_id"), F.col("kind"),
-                F.col("xmin"), F.col("ymin"), F.col("xmax"), F.col("ymax"))
+                pieces_by_qid, "query_id", "kind",
+                "xmin", "ymin", "xmax", "ymax")
         joined = (joined.where(refined) if refined is not None
                   else _mixed_refine(joined, pieces_by_qid))
     out_cols = ["query_id", "kind"] + page_cols

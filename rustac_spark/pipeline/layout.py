@@ -130,15 +130,3 @@ def with_zorder_key(df: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     from ..geo.cells import _xi, _yi
     return df.withColumn(
         "zkey", zorder_key(_xi(F.col("lon"), res), _yi(F.col("lat"), res)))
-
-
-def write_zordered(prepared: DataFrame, path: str,
-                   res: int = DEFAULT_RES,
-                   num_files: int | None = None) -> None:
-    """Range-partition + sort by the Morton key: 2-D-local files whose
-    (xmin..ymax) min/max stats are tight in BOTH axes."""
-    df = with_zorder_key(prepared, res)
-    n = num_files or max(8, df.sparkSession.sparkContext.defaultParallelism)
-    (df.repartitionByRange(n, "zkey")
-       .sortWithinPartitions("zkey")
-       .write.mode("overwrite").parquet(path))

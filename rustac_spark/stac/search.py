@@ -148,8 +148,7 @@ def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
     `pieces` is wkbio.geometry_pieces output — the row survives if
     its bbox intersects ANY piece (Multi* union semantics)."""
     compiled = geometry_predicate(
-        pieces, F.col("bbox.xmin"), F.col("bbox.ymin"),
-        F.col("bbox.xmax"), F.col("bbox.ymax"))
+        pieces, "bbox.xmin", "bbox.ymin", "bbox.xmax", "bbox.ymax")
     if compiled is not None:
         return df.where(anchored(compiled[0]))
     schema = df.schema

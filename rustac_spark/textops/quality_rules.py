@@ -117,12 +117,6 @@ def _line_ok(line: Column) -> Column:
     return ends_ok & (n_words >= C4_MIN_WORDS)
 
 
-def c4_clean(text: Column) -> Column:
-    """Cleaned text: qualifying lines re-joined with newlines."""
-    lines = F.split(text, "\n")
-    return F.array_join(F.filter(lines, _line_ok), "\n")
-
-
 def with_c4_filters(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds clean_text, n_lines_kept/total, and c4_keep (page-level
     verdict: some line survived and no boilerplate marker)."""
