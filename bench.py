@@ -3,7 +3,9 @@
 throughput (pages/sec) on the deterministic Common-Crawl-style pages
 table (BASELINE.md bench protocol).
 
-Pipeline (each stage materialized with lineage + commit markers):
+Pipeline (each stage committed as a snapshot-table snapshot, whose
+manifest holds its lineage; a stage's seconds include that commit and
+the read-back):
   prepare   scan → extract text (byte-invariant check) → geocode →
             write prepared table
   join      cell-indexed spatial join vs the 60-query probe set
@@ -16,7 +18,7 @@ Prints ONE JSON line:
    "queries": {stage: sec}, "sf": ..., "pages_per_sec": ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the host's core count).
 """
 
 from __future__ import annotations
@@ -66,7 +68,7 @@ def ensure_pages(spark, sf: str) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     sf = sf_of(sf_dir)
 
     # Pin the whole process tree (this driver, the JVM it spawns, the

@@ -212,7 +212,7 @@ Per-stage seconds (best whole pass within each invocation):
 {stage_rows}
 
 Input sizing: strong-scaling needs enough per-core work that the
-pipeline's fixed costs (stage materialization, commit markers, driver
+pipeline's fixed costs (stage materialization and commit, driver
 coordination — ~0.3-0.7 s/stage) don't dominate the high-parallelism
 leg; at 1M rows the 4N leg is ~40% fixed cost (measured eff 0.60).
 Both brackets run the SAME 10M-row (sf1.0) input — ≥2.5M rows per

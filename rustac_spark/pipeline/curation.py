@@ -8,11 +8,11 @@ a 100 TB curation job survives restarts at stage granularity.
     pii      → email/IPv4/phone redaction (narrow)
     chunks   → fixed-size token windows for training
 
-Every stage materializes parquet with per-partition lineage
+Every stage commits its output as a snapshot-table snapshot
 (pipeline/lineage.Pipeline): a crashed run resumes from the last
-committed stage, and the metrics table records per-stage row counts,
-bytes and wall time — the report is derived from the commit markers,
-not from extra count() jobs.
+committed stage, and each stage's manifest records its per-file row
+counts, bytes and wall time — the report is derived from the
+manifests, not from extra count() jobs.
 
 Scale notes: stages 1/4/5 are narrow (zero shuffle); stage 2 is one
 map-side-combined shuffle of distinct hashes; stage 3 is the bucketed
@@ -35,8 +35,8 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, run_dir: str,
                   input_rows: int | None = None,
                   ) -> tuple[DataFrame, dict]:
     """Run the five-stage curation pipeline; returns (chunks, report).
-    `report` maps stage → {rows, dropped, wall_s} from the commit
-    markers: `dropped` is the row delta vs the previous committed
+    `report` maps stage → {rows, dropped, wall_s} from the stage
+    manifests: `dropped` is the row delta vs the previous committed
     stage (dead-letter visibility — a 100 TB operator must see WHERE
     the corpus went, not just what survived). The quality stage's
     input is not a committed stage, so its `dropped` needs
@@ -67,27 +67,32 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, run_dir: str,
         return clean.join(keep, id_col, "left_semi")
     exact_kept = pipe.stage("exact_dedup", exact)
 
-    def neardup():
-        from pyspark.sql.types import IntegralType
+    from pyspark.sql.types import IntegralType
 
-        # the MinHash Arrow kernel keys on LONG ids; non-integral id
-        # columns get a deterministic xxhash64 surrogate (collision
-        # odds 2^-64 per pair — a collision could at worst drop one
-        # extra doc, the standard trade of hash-keyed dedup)
-        kept = exact_kept
-        key = id_col
-        if not isinstance(kept.schema[id_col].dataType, IntegralType):
-            key = "_sid"
-            kept = kept.withColumn(key, F.xxhash64(F.col(id_col)))
-        # pairs are checkpointed once: the emptiness probe AND the
-        # connected-components rounds both consume them, and the
-        # MinHash/LSH/verify pipeline is the stage's expensive part —
-        # it must not run twice
-        pairs = near_dup_pairs(kept, threshold=near_dup_threshold,
-                               id_col=key, text_col=text_col) \
-            .select(F.col("a"), F.col("b")) \
-            .localCheckpoint(eager=True)
-        if pairs.limit(1).count() == 0:
+    # the MinHash Arrow kernel keys on LONG ids; non-integral id
+    # columns get a deterministic xxhash64 surrogate (collision
+    # odds 2^-64 per pair — a collision could at worst drop one
+    # extra doc, the standard trade of hash-keyed dedup)
+    kept = exact_kept
+    key = id_col
+    if not isinstance(kept.schema[id_col].dataType, IntegralType):
+        key = "_sid"
+        kept = kept.withColumn(key, F.xxhash64(F.col(id_col)))
+    # pairs are cached once: the emptiness probe AND the
+    # connected-components rounds both consume them, and the
+    # MinHash/LSH/verify pipeline is the stage's expensive part — it
+    # must not run twice. persist() is lazy (nothing runs when the
+    # stage resumes), recomputes lost blocks after executor loss
+    # (unlike localCheckpoint), and is the stage's only cache
+    # (near_dup_pairs' own signature cache would outlive the run);
+    # it is released once the stage has committed
+    pairs = near_dup_pairs(kept, threshold=near_dup_threshold,
+                           id_col=key, text_col=text_col,
+                           persist=False) \
+        .select(F.col("a"), F.col("b")).persist()
+
+    def neardup():
+        if pairs.count() == 0:
             return exact_kept
         # connected_components emits (doc_id, cluster_id) — align the
         # id column to the join key name for the retention join
@@ -95,7 +100,10 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, run_dir: str,
             "doc_id", key)
         out = dedup_retain(kept, clusters, key)
         return out.drop("_sid") if key == "_sid" else out
-    retained = pipe.stage("near_dedup", neardup)
+    try:
+        retained = pipe.stage("near_dedup", neardup)
+    finally:
+        pairs.unpersist()
 
     def pii():
         return (with_pii_scrub(retained, text_col)

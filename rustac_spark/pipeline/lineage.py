@@ -1,145 +1,35 @@
 """Per-stage lineage + metrics + checkpoint-resume (north-rule
 requirement; SURVEY.md §4 "custom needed — lineage/metrics/resume").
 
-Iceberg-style semantics without the Iceberg runtime jar (not installed
-— SURVEY.md §7 "offline deps"): each pipeline stage materializes its
-output as parquet, appends per-partition lineage rows (stage,
-output_file, row_count, bytes) plus stage wall-time to a metrics
-table, and writes an atomic commit marker (write-temp + rename). On
-restart, committed stages are skipped and their outputs reused —
-resume-from-last-committed-checkpoint. Swapping this layer for real
-Iceberg snapshots is confined to this module.
+Each pipeline stage commits its output as the first snapshot of a
+``SnapshotTable`` at ``{run_dir}/{stage}.parquet`` — the engine's one
+atomic-commit mechanism (staged files, a JSON manifest, an atomically
+renamed ``CURRENT``). A stage is committed iff its table has a
+CURRENT; on restart, committed stages are skipped and their outputs
+reused — resume-from-last-committed-checkpoint.
 
-Filesystem abstraction: plain paths use the fast local backend
-(os + pyarrow footers); URIs with a scheme (hdfs://, s3a://, gs://,
-file://) go through the Hadoop FileSystem API via the JVM gateway —
-markers, listings and renames work on any FS Spark itself can write
-to, and per-file row counts come from parquet FOOTERS read through
-parquet-hadoop (no data scan, O(files) metadata ops, same as the
-local path).
+Lineage and metrics are read back from the manifests, not written
+separately: the manifest already holds one ``{rows, bytes}`` entry per
+output file (file ≙ write partition, rows from its parquet footer),
+the commit time ``ts``, and the stage's ``started`` time and
+``run_id`` in its extra fields. The stage directory holds only the
+committed files (a crashed attempt's leftovers are deleted before a
+re-run stages anything), so plain parquet readers see exactly the
+stage's rows.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .snapshots import SnapshotTable, _fs_for
 
-class _LocalFS:
-    """Fast path for plain local paths."""
-
-    def __init__(self, spark: SparkSession):
-        pass
-
-    def mkdirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def delete(self, path: str) -> None:
-        if os.path.exists(path):
-            os.remove(path)
-
-    def write_text_atomic(self, path: str, text: str) -> None:
-        tmp = path + f".tmp.{uuid.uuid4().hex[:6]}"
-        with open(tmp, "w") as f:
-            f.write(text)
-        os.rename(tmp, path)  # atomic on POSIX
-
-    def read_text(self, path: str) -> str:
-        with open(path) as f:
-            return f.read()
-
-    def list_parquet(self, path: str) -> list[tuple[str, int]]:
-        out = []
-        for fn in sorted(os.listdir(path)):
-            if fn.endswith(".parquet"):
-                full = os.path.join(path, fn)
-                out.append((full, os.path.getsize(full)))
-        return out
-
-    def parquet_rows(self, path: str) -> int:
-        import pyarrow.parquet as pq
-        return pq.ParquetFile(path).metadata.num_rows
-
-
-class _HadoopFS:
-    """Any-scheme backend through the JVM's Hadoop FileSystem —
-    the path a real multi-executor cluster uses (object stores,
-    HDFS). Row counts via parquet-hadoop footer reads."""
-
-    def __init__(self, spark: SparkSession, root: str):
-        self._jvm = spark.sparkContext._jvm
-        self._conf = spark.sparkContext._jsc.hadoopConfiguration()
-        uri = self._jvm.java.net.URI(root)
-        self._fs = self._jvm.org.apache.hadoop.fs.FileSystem.get(
-            uri, self._conf)
-
-    def _p(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
-
-    def mkdirs(self, path: str) -> None:
-        self._fs.mkdirs(self._p(path))
-
-    def exists(self, path: str) -> bool:
-        return self._fs.exists(self._p(path))
-
-    def delete(self, path: str) -> None:
-        self._fs.delete(self._p(path), False)
-
-    def write_text_atomic(self, path: str, text: str) -> None:
-        tmp = path + f".tmp.{uuid.uuid4().hex[:6]}"
-        stream = self._fs.create(self._p(tmp), True)
-        try:
-            stream.write(bytearray(text.encode("utf-8")))
-        finally:
-            stream.close()
-        # HDFS rename is atomic; object stores give copy+delete, which
-        # is still safe here because markers are write-once. rename()
-        # reports failure via its return value, not an exception
-        if not self._fs.rename(self._p(tmp), self._p(path)):
-            self._fs.delete(self._p(tmp), False)
-            raise IOError(f"commit-marker rename failed: {tmp} -> {path}")
-
-    def read_text(self, path: str) -> str:
-        stream = self._fs.open(self._p(path))
-        try:
-            # py4j passes arrays by value, so a fill-my-buffer read
-            # can't work from Python — drain JVM-side instead
-            data = self._jvm.org.apache.commons.io.IOUtils \
-                .toByteArray(stream)
-            return bytes(data).decode("utf-8")
-        finally:
-            stream.close()
-
-    def list_parquet(self, path: str) -> list[tuple[str, int]]:
-        out = []
-        for status in self._fs.listStatus(self._p(path)):
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                out.append((p.toString(), status.getLen()))
-        return sorted(out)
-
-    def parquet_rows(self, path: str) -> int:
-        hif = self._jvm.org.apache.parquet.hadoop.util.HadoopInputFile \
-            .fromPath(self._p(path), self._conf)
-        reader = self._jvm.org.apache.parquet.hadoop.ParquetFileReader \
-            .open(hif)
-        try:
-            return reader.getRecordCount()
-        finally:
-            reader.close()
-
-
-def _fs_for(spark: SparkSession, root: str):
-    if "://" in root:
-        return _HadoopFS(spark, root)
-    return _LocalFS(spark)
+_LINEAGE_SCHEMA = ("run_id string, stage string, output_file string, "
+                   "row_count long, bytes long, stage_wall_s double")
 
 
 class Pipeline:
@@ -149,52 +39,20 @@ class Pipeline:
         self.run_dir = run_dir
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.fs = _fs_for(spark, run_dir)
-        self.fs.mkdirs(f"{run_dir}/commits")
-        self.fs.mkdirs(f"{run_dir}/metrics")
         self.stage_seconds: dict[str, float] = {}
 
     # ------------------------------------------------------------ state
-    def _marker(self, stage: str) -> str:
-        return f"{self.run_dir}/commits/{stage}.json"
+    def _table(self, stage: str) -> SnapshotTable:
+        return SnapshotTable(self.spark, f"{self.run_dir}/{stage}.parquet")
 
     def is_committed(self, stage: str) -> bool:
-        return self.fs.exists(self._marker(stage))
+        return self._table(stage).current_snapshot_id() is not None
 
-    def _commit(self, stage: str, info: dict) -> None:
-        self.fs.write_text_atomic(self._marker(stage), json.dumps(info))
-
-    def committed_info(self, stage: str) -> dict:
-        return json.loads(self.fs.read_text(self._marker(stage)))
-
-    # ---------------------------------------------------------- metrics
-    def _write_lineage(self, stage: str, out_path: str,
-                       wall_s: float) -> int:
-        """Per-partition lineage: one row per output file (file ≙ write
-        partition) with row count + bytes, read from parquet footers —
-        no second Spark job per stage (pure metadata, O(files))."""
-        recs = []
-        for full, size in self.fs.list_parquet(out_path):
-            recs.append((self.run_id, stage, full,
-                         self.fs.parquet_rows(full), size, float(wall_s)))
-        lineage = self.spark.createDataFrame(
-            recs, "run_id string, stage string, output_file string, "
-            "row_count long, bytes long, stage_wall_s double")
-        (lineage.coalesce(1).write.mode("append")
-         .parquet(f"{self.run_dir}/metrics"))
-        return sum(r[3] for r in recs)
-
-    # ------------------------------------------------------------ stage
-    def stage(self, name: str, build, out_name: str | None = None,
-              ) -> DataFrame:
-        """Run (or resume) a stage. `build()` returns the stage's
-        DataFrame; it is materialized to parquet, lineage is recorded,
-        and a commit marker makes the stage skippable on restart."""
-        out_path = f"{self.run_dir}/{out_name or name}.parquet"
-        if self.is_committed(name):
-            self.stage_seconds[name] = 0.0
-            return self.spark.read.parquet(out_path)
-        t0 = time.time()
-        df = build()
+    def _commit(self, table: SnapshotTable, df: DataFrame,
+                started: float) -> None:
+        # the stage's commit step. This name and _write_lineage's are
+        # kept because perfbench's traced runs wrap both by name.
+        #
         # Stage outputs are run-scoped intermediates (written once,
         # read back by the next stage, deleted with the run dir), the
         # same I/O profile as shuffle files — so they default to
@@ -205,16 +63,51 @@ class Pipeline:
         # write alone for a 56→65 MB size difference (guide §6;
         # OPTIMIZATION_r07.md). Parameterised for clusters where
         # intermediate I/O, not CPU, is the bottleneck.
-        codec = os.environ.get("RUSTAC_STAGE_CODEC", "snappy")
-        df.write.mode("overwrite").option("compression", codec) \
-            .parquet(out_path)
-        wall = time.time() - t0
-        total = self._write_lineage(name, out_path, wall)
-        self._commit(name, {"stage": name, "run_id": self.run_id,
-                            "output": out_path, "rows": total,
-                            "wall_s": wall, "ts": time.time()})
-        self.stage_seconds[name] = wall
-        return self.spark.read.parquet(out_path)
+        table.append(df, {"run_id": self.run_id, "started": started},
+                     codec=os.environ.get("RUSTAC_STAGE_CODEC", "snappy"))
+
+    def committed_info(self, stage: str) -> dict:
+        table = self._table(stage)
+        m = table.manifest()
+        return {"stage": stage, "run_id": m["run_id"],
+                "output": table.dir, "rows": m["n_rows"],
+                "wall_s": m["ts"] - m["started"], "ts": m["ts"]}
+
+    # ---------------------------------------------------------- metrics
+    def _write_lineage(self, stage: str, manifest: dict) -> list[tuple]:
+        """Per-partition lineage rows of a committed stage: one per
+        output file with its row count and bytes, straight from the
+        manifest's per-file stats (the name is kept for the benchmark
+        tracing, see _commit)."""
+        wall = manifest["ts"] - manifest["started"]
+        return [(manifest["run_id"], stage, path, st["rows"], st["bytes"],
+                 wall) for path, st in manifest["stats"].items()]
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.run_dir}/metrics")
+        """Lineage rows of every committed stage in the run dir,
+        built on the driver from the manifests (no Spark job)."""
+        rows = []
+        for path, _ in self.fs.list_parquet(self.run_dir):
+            stage = os.path.basename(path)[:-len(".parquet")]
+            if self.is_committed(stage):
+                rows += self._write_lineage(stage,
+                                            self._table(stage).manifest())
+        return self.spark.createDataFrame(rows, _LINEAGE_SCHEMA)
+
+    # ------------------------------------------------------------ stage
+    def stage(self, name: str, build) -> DataFrame:
+        """Run (or resume) a stage. `build()` returns the stage's
+        DataFrame; it is committed as the first snapshot of the stage's
+        table, which makes the stage skippable on restart. Returns the
+        committed output."""
+        t0 = time.time()
+        table = self._table(name)
+        fresh = table.current_snapshot_id() is None
+        if fresh:
+            # whatever a crashed attempt staged is not part of the
+            # output: clear it, as an overwrite write would
+            table.fs.delete(table.dir, recursive=True)
+            self._commit(table, build(), t0)
+        out = table.read()
+        self.stage_seconds[name] = time.time() - t0 if fresh else 0.0
+        return out

@@ -6,11 +6,18 @@ Iceberg runtime jar is not installable here (SURVEY.md §7 "offline
 deps"), so this module provides the same table semantics with the
 same commit discipline, swappable for real Iceberg later:
 
-- ``meta/snap-<n>.json`` manifests list the exact data files of a
+- ``_meta/snap-<n>.json`` manifests list the exact data files of a
   snapshot (append never rewrites history — old snapshots stay
-  readable: TIME TRAVEL);
-- ``meta/CURRENT`` is an atomically-renamed pointer — readers always
-  see a complete snapshot, never a partial write;
+  readable: TIME TRAVEL), with each file's row count and byte size
+  under ``stats``. A commit reads the parquet footers of the files it
+  stages and nothing else: carried-over files take their stats from
+  the parent manifest, so every file's footer is read once, ever;
+- ``_meta/CURRENT`` is an atomically-renamed pointer — readers always
+  see a complete snapshot, never a partial write. The leading
+  underscore (Delta's ``_delta_log`` convention) makes parquet dataset
+  readers such as ``pyarrow.parquet.read_table(table_dir)`` skip the
+  manifests, so a table whose directory holds only committed files
+  reads as plain parquet;
 - commits are OPTIMISTIC: a writer stages its files, then publishes
   iff CURRENT still names its parent; a concurrent commit raises
   ``CommitConflict`` for the caller to retry (Iceberg's
@@ -25,13 +32,19 @@ same commit discipline, swappable for real Iceberg later:
   published as ONE snapshot, so no reader sees a key missing or
   doubled.
 
-Filesystem access reuses lineage's backend split: plain paths use the
-fast local path, scheme URIs go through the Hadoop FileSystem JVM API.
+Filesystem access: plain paths use the fast local backend (os +
+pyarrow footers); URIs with a scheme (hdfs://, s3a://, gs://, file://)
+go through the Hadoop FileSystem API via the JVM gateway, so
+manifests, listings and renames work on any FS Spark itself can write
+to, and per-file row counts come from parquet footers read through
+parquet-hadoop (no data scan).
 """
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import time
 import uuid
 from functools import reduce
@@ -39,7 +52,118 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
-from .lineage import _fs_for
+
+class _LocalFS:
+    """Fast path for plain local paths."""
+
+    def mkdirs(self, path: str) -> None:
+        os.makedirs(path, exist_ok=True)
+
+    def exists(self, path: str) -> bool:
+        return os.path.exists(path)
+
+    def delete(self, path: str, recursive: bool = False) -> None:
+        if recursive:
+            shutil.rmtree(path, ignore_errors=True)
+        elif os.path.exists(path):
+            os.remove(path)
+
+    def write_text_atomic(self, path: str, text: str) -> None:
+        tmp = path + f".tmp.{uuid.uuid4().hex[:6]}"
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.rename(tmp, path)  # atomic on POSIX
+
+    def read_text(self, path: str) -> str:
+        with open(path) as f:
+            return f.read()
+
+    def list_parquet(self, path: str) -> list[tuple[str, int]]:
+        out = []
+        for fn in sorted(os.listdir(path)):
+            if fn.endswith(".parquet"):
+                full = os.path.join(path, fn)
+                out.append((full, os.path.getsize(full)))
+        return out
+
+    def parquet_rows(self, path: str) -> int:
+        import pyarrow.parquet as pq
+        return pq.ParquetFile(path).metadata.num_rows
+
+
+class _HadoopFS:
+    """Any-scheme backend through the JVM's Hadoop FileSystem —
+    the path a real multi-executor cluster uses (object stores,
+    HDFS). Row counts via parquet-hadoop footer reads."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self._jvm = spark.sparkContext._jvm
+        self._conf = spark.sparkContext._jsc.hadoopConfiguration()
+        uri = self._jvm.java.net.URI(root)
+        self._fs = self._jvm.org.apache.hadoop.fs.FileSystem.get(
+            uri, self._conf)
+
+    def _p(self, path: str):
+        return self._jvm.org.apache.hadoop.fs.Path(path)
+
+    def mkdirs(self, path: str) -> None:
+        self._fs.mkdirs(self._p(path))
+
+    def exists(self, path: str) -> bool:
+        return self._fs.exists(self._p(path))
+
+    def delete(self, path: str, recursive: bool = False) -> None:
+        self._fs.delete(self._p(path), recursive)
+
+    def write_text_atomic(self, path: str, text: str) -> None:
+        tmp = path + f".tmp.{uuid.uuid4().hex[:6]}"
+        stream = self._fs.create(self._p(tmp), True)
+        try:
+            stream.write(bytearray(text.encode("utf-8")))
+        finally:
+            stream.close()
+        # HDFS rename is atomic; object stores give copy+delete, which
+        # is still safe for write-once files such as manifests.
+        # rename() reports failure via its return value, not an
+        # exception
+        if not self._fs.rename(self._p(tmp), self._p(path)):
+            self._fs.delete(self._p(tmp), False)
+            raise IOError(f"atomic rename failed: {tmp} -> {path}")
+
+    def read_text(self, path: str) -> str:
+        stream = self._fs.open(self._p(path))
+        try:
+            # py4j passes arrays by value, so a fill-my-buffer read
+            # can't work from Python — drain JVM-side instead
+            data = self._jvm.org.apache.commons.io.IOUtils \
+                .toByteArray(stream)
+            return bytes(data).decode("utf-8")
+        finally:
+            stream.close()
+
+    def list_parquet(self, path: str) -> list[tuple[str, int]]:
+        out = []
+        for status in self._fs.listStatus(self._p(path)):
+            p = status.getPath()
+            if p.getName().endswith(".parquet"):
+                out.append((p.toString(), status.getLen()))
+        return sorted(out)
+
+    def parquet_rows(self, path: str) -> int:
+        hif = self._jvm.org.apache.parquet.hadoop.util.HadoopInputFile \
+            .fromPath(self._p(path), self._conf)
+        reader = self._jvm.org.apache.parquet.hadoop.ParquetFileReader \
+            .open(hif)
+        try:
+            return reader.getRecordCount()
+        finally:
+            reader.close()
+
+
+def _fs_for(spark: SparkSession, root: str):
+    if "://" in root:
+        return _HadoopFS(spark, root)
+    return _LocalFS()
 
 
 class CommitConflict(RuntimeError):
@@ -48,7 +172,7 @@ class CommitConflict(RuntimeError):
 
 
 def _meta(table_dir: str) -> str:
-    return f"{table_dir}/meta"
+    return f"{table_dir}/_meta"
 
 
 def _data(table_dir: str) -> str:
@@ -154,10 +278,7 @@ class SnapshotTable:
         if not parts:
             return (self.read(to_id).limit(0)
                     .withColumn("_change_type", F.lit("insert")))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     # -------------------------------------------------- maintenance
 
@@ -173,11 +294,7 @@ class SnapshotTable:
         Returns {"expired_snapshots": [...], "deleted_files": n}."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
-        chain = []
-        sid = self.current_snapshot_id()
-        while sid is not None:
-            chain.append(sid)
-            sid = self.manifest(sid)["parent"]
+        chain = [h["snapshot_id"] for h in reversed(self.history())]
         keep, expire = chain[:keep_last], chain[keep_last:]
         if not expire:
             return {"expired_snapshots": [], "deleted_files": 0}
@@ -193,8 +310,7 @@ class SnapshotTable:
         for s in expire:
             self.fs.delete(f"{_meta(self.dir)}/snap-{s}.json")
         # oldest retained snapshot becomes the chain root
-        root = json.loads(self.fs.read_text(
-            f"{_meta(self.dir)}/snap-{keep[-1]}.json"))
+        root = self.manifest(keep[-1])
         root["parent"] = None
         self.fs.write_text_atomic(
             f"{_meta(self.dir)}/snap-{keep[-1]}.json",
@@ -204,31 +320,38 @@ class SnapshotTable:
 
     # ------------------------------------------------------- writing
 
-    def _stage_files(self, df: DataFrame) -> list[str]:
-        """Write df's rows as new immutable data files; returns their
-        paths. Files are invisible until a manifest referencing them
-        is published."""
+    def _stage_files(self, df: DataFrame,
+                     codec: str | None = None) -> dict[str, dict]:
+        """Write df's rows as new immutable data files (in the
+        session's parquet codec unless `codec` is given); returns each
+        file's {"rows", "bytes"} by path, rows from its footer. Files
+        are invisible until a manifest referencing them is
+        published."""
         batch = uuid.uuid4().hex[:12]
         out = f"{_data(self.dir)}/batch-{batch}"
-        df.write.mode("error").parquet(out)
-        return [p for p, _ in self.fs.list_parquet(out)]
+        w = df.write.mode("error")
+        (w.option("compression", codec) if codec else w).parquet(out)
+        return {p: {"rows": self.fs.parquet_rows(p), "bytes": size}
+                for p, size in self.fs.list_parquet(out)}
 
-    def _publish(self, parent: int | None, files: list[str],
+    def _publish(self, parent: int | None, files: dict[str, dict],
                  operation: str, extra: dict | None = None) -> int:
         """Compare-and-swap commit: write snap-N, then move CURRENT —
-        iff CURRENT still equals `parent`."""
+        iff CURRENT still equals `parent`. `files` maps every file of
+        the snapshot to its {"rows", "bytes"} stats."""
         if self.current_snapshot_id() != parent:
             raise CommitConflict(
                 f"{self.dir}: CURRENT moved past snapshot {parent}")
         sid = (parent or 0) + 1
-        n_rows = sum(self.fs.parquet_rows(p) for p in files)
+        paths = sorted(files)
         self.fs.mkdirs(_meta(self.dir))
         self.fs.write_text_atomic(
             f"{_meta(self.dir)}/snap-{sid}.json",
             json.dumps({"snapshot_id": sid, "parent": parent,
-                        "operation": operation, "files": sorted(files),
-                        "n_rows": n_rows, "ts": time.time(),
-                        **(extra or {})}))
+                        "operation": operation, "files": paths,
+                        "stats": {p: files[p] for p in paths},
+                        "n_rows": sum(files[p]["rows"] for p in paths),
+                        "ts": time.time(), **(extra or {})}))
         # the pointer flip is the commit point (atomic rename)
         if self.current_snapshot_id() != parent:
             raise CommitConflict(
@@ -238,7 +361,8 @@ class SnapshotTable:
 
     def _commit(self, operation: str, drop: Column | None = None,
                 add: DataFrame | None = None,
-                extra: dict | None = None) -> int:
+                extra: dict | None = None,
+                codec: str | None = None) -> int:
         """The one write path. Reads CURRENT once as the parent, drops
         the parent's rows where `drop` is TRUE (file-granular
         copy-on-write: only files holding such rows are rewritten, the
@@ -248,9 +372,10 @@ class SnapshotTable:
         with no CURRENT is its first snapshot ("create")."""
         parent = self.current_snapshot_id()
         if parent is None and add is not None:
-            return self._publish(None, self._stage_files(add), "create",
-                                 extra)
-        keep = self.manifest(parent)["files"]  # no CURRENT: raises
+            return self._publish(None, self._stage_files(add, codec),
+                                 "create", extra)
+        stats = self.manifest(parent)["stats"]  # no CURRENT: raises
+        keep = sorted(stats)
         cur = self.spark.read.parquet(*keep)
         parts = []
         if drop is not None:
@@ -273,13 +398,17 @@ class SnapshotTable:
                              .where(F.coalesce(~drop, F.lit(True))))
         if add is not None:
             parts.append(_align(add, cur.schema))
-        staged = (self._stage_files(reduce(DataFrame.unionByName, parts))
-                  if parts else [])
-        return self._publish(parent, keep + staged, operation, extra)
+        staged = (self._stage_files(reduce(DataFrame.unionByName, parts),
+                                    codec) if parts else {})
+        return self._publish(parent, {**{p: stats[p] for p in keep},
+                                      **staged}, operation, extra)
 
-    def append(self, df: DataFrame, extra: dict | None = None) -> int:
-        """Add df's rows (the first commit creates the table)."""
-        return self._commit("append", add=df, extra=extra)
+    def append(self, df: DataFrame, extra: dict | None = None,
+               codec: str | None = None) -> int:
+        """Add df's rows (the first commit creates the table); `extra`
+        rides in the manifest, `codec` overrides the session's parquet
+        codec for the new files."""
+        return self._commit("append", add=df, extra=extra, codec=codec)
 
     def delete_where(self, condition) -> int:
         """Copy-on-write delete of the rows where `condition` (a Column

@@ -1,7 +1,8 @@
 """SparkSession factory with the engine's standard configuration.
 
-Scale posture (100 TB / 1000-executor design point, tested on
-local[32]):
+Scale posture (100 TB / 1000-executor design point; the local
+master defaults to one thread per host core, ``SPARK_GRAFT_CPUS``
+overrides it):
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing),
 - Arrow transfer on (all Python UDFs are pandas/Arrow-batched),
 - session timezone pinned to UTC (STAC datetime semantics are UTC,
@@ -39,7 +40,7 @@ def package_zip() -> str:
 def get_spark(app: str = "rustac-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra: dict | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(os.environ.get(
         "RUSTAC_SHUFFLE_PARTITIONS", str(2 * int(cpus) if cpus.isdigit() else 64)))

@@ -22,11 +22,10 @@ separately-maintained extent rows to drift out of sync.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline.snapshots import SnapshotTable
+from ..pipeline.snapshots import SnapshotTable, _meta
 from .api import collections as derive_collections
 from .search import Search, build_plan
 
@@ -43,7 +42,7 @@ class TransactionClient:
     def __init__(self, spark: SparkSession, table_dir: str):
         self.spark = spark
         self.table = SnapshotTable(spark, table_dir)
-        self._collections_meta = f"{table_dir}/_meta/collections.json"
+        self._collections_meta = f"{_meta(table_dir)}/collections.json"
         # collections() memo: (snapshot_id, registered-json) → result.
         # The snapshot id IS the invalidation key — every item write
         # commits a new snapshot, and registration changes alter the
@@ -151,20 +150,16 @@ class TransactionClient:
                 F.col("collection") == collection_id)
 
     def _write_registered(self, reg: dict) -> None:
-        d = os.path.dirname(self._collections_meta)
-        os.makedirs(d, exist_ok=True)
-        tmp = f"{self._collections_meta}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f)
-        os.replace(tmp, self._collections_meta)
+        self.table.fs.mkdirs(_meta(self.table.dir))
+        self.table.fs.write_text_atomic(self._collections_meta,
+                                        json.dumps(reg))
 
     # ------------------------------------------------------ plumbing
 
     def _registered(self) -> dict:
-        if not os.path.exists(self._collections_meta):
+        if not self.table.fs.exists(self._collections_meta):
             return {}
-        with open(self._collections_meta) as f:
-            return json.load(f)
+        return json.loads(self.table.fs.read_text(self._collections_meta))
 
     def _items_df(self, items: list[dict]) -> DataFrame:
         return items_dataframe(self.spark, items)

@@ -4,6 +4,7 @@ PII → chunking, with lineage/resume (pipeline/curation)."""
 from pyspark.sql import functions as F
 
 from rustac_spark.pipeline.curation import curate_corpus
+from rustac_spark.pipeline.snapshots import SnapshotTable
 
 
 def _corpus(spark):
@@ -28,8 +29,18 @@ def _corpus(spark):
     return docs.unionByName(extra)
 
 
+def _cached_rdds(spark) -> set:
+    """Ids of the persisted RDDs that are caches, not the
+    localCheckpoint tables connected_components leaves for Spark's
+    ContextCleaner to reclaim."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keySet().toArray()
+            if not rdds.get(k).rdd().isLocallyCheckpointed()}
+
+
 def test_curate_corpus_end_to_end(spark, tmp_path):
     docs = _corpus(spark)
+    before = _cached_rdds(spark)
     out, report = curate_corpus(spark, docs, str(tmp_path / "run"),
                                 near_dup_threshold=0.5,
                                 chunk_size=40, chunk_overlap=8)
@@ -38,18 +49,19 @@ def test_curate_corpus_end_to_end(spark, tmp_path):
     # monotone row counts through the dedup stages
     assert report["quality"]["rows"] >= report["exact_dedup"]["rows"] \
         >= report["near_dedup"]["rows"]
+    # the curation run leaves no cache behind: a long-lived session
+    # would otherwise leak one per run
+    assert _cached_rdds(spark) <= before
     # the exact duplicate lost to the minimum id
-    pii_ids = {r["doc_id"] for r in
-               spark.read.parquet(f"{tmp_path}/run/pii.parquet")
-               .select("doc_id").collect()}
+    pii = SnapshotTable(spark, f"{tmp_path}/run/pii.parquet").read()
+    pii_ids = {r["doc_id"] for r in pii.select("doc_id").collect()}
     assert 900001 not in pii_ids
     # near-duplicate of doc 0 also dropped (if doc 0 survived quality)
     if 0 in pii_ids:
         assert 900002 not in pii_ids
     # PII redacted in the surviving text
     if 900003 in pii_ids:
-        t = (spark.read.parquet(f"{tmp_path}/run/pii.parquet")
-             .where("doc_id = 900003").collect()[0]["text"])
+        t = pii.where("doc_id = 900003").collect()[0]["text"]
         assert "<EMAIL>" in t and "<PHONE>" in t
         assert "someone@example.org" not in t
     # chunks reference only surviving docs

@@ -54,7 +54,7 @@ def test_pipeline_hadoop_fs_backend(spark, tmp_path):
     """Same resume/lineage semantics through the Hadoop FileSystem API
     (the real-cluster path) — exercised with a file:// URI, which
     routes through the JVM FS exactly like hdfs:// or s3a:// would."""
-    from rustac_spark.pipeline.lineage import _HadoopFS
+    from rustac_spark.pipeline.snapshots import _HadoopFS
     run_dir = f"file://{tmp_path}/run_hfs"
     calls = {"n": 0}
 
@@ -75,6 +75,73 @@ def test_pipeline_hadoop_fs_backend(spark, tmp_path):
     m = p1.metrics().where(F.col("stage") == "s1").collect()
     assert sum(r["row_count"] for r in m) == 50
     assert all(r["bytes"] > 0 for r in m)
+
+
+def test_stage_dir_reads_as_plain_parquet(spark, tmp_path, monkeypatch):
+    """External readers (pyarrow) read a stage's directory as exactly
+    the stage's rows: the manifests sit under `_meta/`, which dataset
+    readers skip, and a re-run after a commit that failed once its
+    files were staged first clears the failed attempt's files."""
+    import pyarrow.parquet as pq
+
+    from rustac_spark.pipeline.snapshots import SnapshotTable
+
+    def build():
+        return spark.range(40).withColumn("v", F.col("id") * 2)
+
+    def ids(run_dir):
+        t = pq.read_table(f"{run_dir}/s1.parquet")
+        return sorted(t.column("id").to_pylist())
+
+    run_dir = str(tmp_path / "run")
+    Pipeline(spark, run_dir).stage("s1", build)
+    assert ids(run_dir) == list(range(40))
+
+    publish = SnapshotTable._publish
+    failed = []
+
+    def fail_once(self, *a, **kw):
+        if not failed:
+            failed.append(1)
+            raise IOError("simulated crash after staging")
+        return publish(self, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "_publish", fail_once)
+    crash_dir = str(tmp_path / "crash")
+    with pytest.raises(IOError):
+        Pipeline(spark, crash_dir).stage("s1", build)
+    p = Pipeline(spark, crash_dir)
+    assert not p.is_committed("s1")
+    assert p.stage("s1", build).count() == 40
+    assert ids(crash_dir) == list(range(40))
+
+
+def test_stage_runs_no_lineage_job(spark, tmp_path):
+    """A stage's commit is its output write plus the read-back: the
+    same Spark jobs as writing and reading the frame by hand, and no
+    further job to record lineage."""
+    sc = spark.sparkContext
+
+    def build():
+        return spark.range(100).withColumn("v", F.col("id") * 2)
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def by_hand():
+        build().write.parquet(str(tmp_path / "by_hand"))
+        spark.read.parquet(str(tmp_path / "by_hand"))
+
+    pipe = Pipeline(spark, str(tmp_path / "run"))
+    staged = jobs_in("pipeline-stage-jobs",
+                     lambda: pipe.stage("s1", build))
+    assert staged == jobs_in("plain-write-jobs", by_hand)
 
 
 def test_salted_join_preserves_multiplicity(spark):

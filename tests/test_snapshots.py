@@ -212,3 +212,46 @@ def test_expire_snapshots_vacuum(spark, tmp_path):
     assert t.read().count() == 25
     # idempotent when nothing to expire beyond the horizon
     assert t.expire_snapshots(keep_last=10)["deleted_files"] == 0
+
+
+def test_manifest_file_stats(spark, tmp_path, monkeypatch):
+    """Every manifest holds per-file rows/bytes whose rows sum to
+    n_rows == read().count(), and a commit reads the footers of only
+    the files it staged: carried files take the parent's stats."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    calls = []
+    orig = t.fs.parquet_rows
+
+    def counted(path):
+        calls.append(path)
+        return orig(path)
+
+    monkeypatch.setattr(t.fs, "parquet_rows", counted)
+
+    def check():
+        m = t.manifest()
+        assert sorted(m["stats"]) == m["files"]
+        assert all(s["bytes"] > 0 for s in m["stats"].values())
+        assert sum(s["rows"] for s in m["stats"].values()) \
+            == m["n_rows"] == t.read().count()
+        return m
+
+    steps = [
+        lambda: t.append(_rows(spark, range(20)).repartitionByRange(4, "id")),
+        lambda: t.append(_rows(spark, range(20, 30))),
+        lambda: t.delete_where("id >= 25"),
+        lambda: t.upsert(spark.createDataFrame(
+            [(3, "NEW3", 9)], "id long, url string, grp long"), keys=["id"]),
+    ]
+    for step in steps:
+        parent = (set(t.manifest()["files"])
+                  if t.current_snapshot_id() else set())
+        calls.clear()
+        step()
+        new = set(t.manifest()["files"]) - parent
+        assert sorted(calls) == sorted(new)
+        check()
+    calls.clear()
+    t.expire_snapshots(keep_last=2)
+    assert calls == []
+    check()
