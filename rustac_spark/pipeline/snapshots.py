@@ -30,7 +30,15 @@ same commit discipline, swappable for real Iceberg later:
 - every write goes through one commit routine: an upsert's rewritten
   survivors and its new rows are staged in one parquet write and
   published as ONE snapshot, so no reader sees a key missing or
-  doubled.
+  doubled;
+- ``read()`` memoizes the DataFrame of the last snapshot it read,
+  keyed by the snapshot's file tuple. Data files are uuid-named and
+  never rewritten in place, so an equal tuple means equal contents:
+  the key needs no invalidation, and a server that reads CURRENT per
+  request re-plans the table only after a commit. A new file list is
+  read with the previous entry's schema instead of inferring one (a
+  Spark job per read): no commit changes the schema, since every
+  write is aligned to its parent's schema by ``_align``.
 
 Filesystem access: plain paths use the fast local backend (os +
 pyarrow footers); URIs with a scheme (hdfs://, s3a://, gs://, file://)
@@ -213,6 +221,10 @@ class SnapshotTable:
         self.spark = spark
         self.dir = table_dir
         self.fs = _fs_for(spark, table_dir)
+        # read() memo: (file tuple, DataFrame) of the last snapshot read.
+        # No lock: server threads that miss together each build a frame
+        # for their file list, and whichever entry lands last is valid.
+        self._last_read: tuple[tuple[str, ...], DataFrame] | None = None
 
     # ------------------------------------------------------- reading
 
@@ -232,11 +244,26 @@ class SnapshotTable:
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """DataFrame over a snapshot's exact file list (defaults to
-        CURRENT) — time travel is just reading an older manifest."""
-        files = self.manifest(snapshot_id)["files"]
+        CURRENT) — time travel is just reading an older manifest.
+
+        Reading the snapshot read last returns the same DataFrame and
+        runs no Spark job: the memo is keyed by the file tuple, which
+        names immutable files. Any other snapshot is read with the
+        memoized frame's schema, so only the first read of this
+        SnapshotTable infers one; the create commit clears the memo,
+        so a table re-created through this object infers afresh."""
+        files = tuple(self.manifest(snapshot_id)["files"])
         if not files:
             raise ValueError("empty snapshot")
-        return self.spark.read.parquet(*files)
+        last = self._last_read
+        if last is not None and last[0] == files:
+            return last[1]
+        reader = self.spark.read
+        if last is not None:
+            reader = reader.schema(last[1].schema)
+        df = reader.parquet(*files)
+        self._last_read = (files, df)
+        return df
 
     def history(self) -> list[dict]:
         out = []
@@ -372,11 +399,12 @@ class SnapshotTable:
         with no CURRENT is its first snapshot ("create")."""
         parent = self.current_snapshot_id()
         if parent is None and add is not None:
+            self._last_read = None  # a new table may have a new schema
             return self._publish(None, self._stage_files(add, codec),
                                  "create", extra)
         stats = self.manifest(parent)["stats"]  # no CURRENT: raises
         keep = sorted(stats)
-        cur = self.spark.read.parquet(*keep)
+        cur = self.read(parent)
         parts = []
         if drop is not None:
             # input_file_name returns URIs (file:///…); manifests hold
@@ -394,7 +422,8 @@ class SnapshotTable:
                 # survive. `~drop` alone would drop NULL-evaluating
                 # rows (and only in touched files — file-layout-
                 # dependent), so keep NOT TRUE explicitly.
-                parts.append(self.spark.read.parquet(*rewrite)
+                parts.append(self.spark.read.schema(cur.schema)
+                             .parquet(*rewrite)
                              .where(F.coalesce(~drop, F.lit(True))))
         if add is not None:
             parts.append(_align(add, cur.schema))
@@ -421,9 +450,11 @@ class SnapshotTable:
         drops every row whose key appears in df and adds df, so no
         reader ever sees the key missing or doubled. The drop is ONE
         flat isin (Catalyst InSet) over the batch's distinct keys: a
-        10k-row batch stays an O(1)-depth plan."""
+        10k-row batch stays an O(1)-depth plan. The keys are collected
+        as they are and deduplicated here, which saves the shuffle
+        job of a Spark-side distinct (a composite key is never NULL)."""
         key = _key_column(keys)
-        batch = [r[0] for r in df.select(key).distinct().collect()]
+        batch = sorted({r[0] for r in df.select(key).collect()})
         return self._commit("upsert", drop=key.isin(batch), add=df)
 
     # ---------------------------------------------- streaming sink

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, functions as F
 
 from .search import Search, _q, build_plan, parse_sortby
@@ -26,18 +27,46 @@ class Page:
     prev_token: dict | None = None
 
 
+def _count_beside(plan: DataFrame, page: DataFrame) -> tuple[int, list]:
+    """(plan.count(), page.collect()) with the two jobs submitted at
+    once: the count runs on an ``InheritableThread`` while this thread
+    collects the page. The thread copies the caller's Spark local
+    properties, so the count carries the request's job group and
+    description (and a cancel of that group reaches both jobs). The
+    count is joined before anything returns or raises; an exception
+    from either job propagates, the page's first."""
+    out: dict = {}
+
+    def count() -> None:
+        try:
+            out["n"] = plan.count()
+        except Exception as e:  # re-raised on the caller's thread
+            out["err"] = e
+
+    t = InheritableThread(target=count)
+    t.start()
+    try:
+        rows = page.collect()
+    finally:
+        t.join()
+    if "err" in out:
+        raise out["err"]
+    return out["n"], rows
+
+
 def search_page(df: DataFrame, search: Search,
                 skip: int = 0) -> Page:
     """Paged search with the memory backend's skip/take token scheme.
     Deterministic pagination requires a total order: when the search
-    has no sortby, a tie-break sort on id is injected (SURVEY §2.6)."""
+    has no sortby, a tie-break sort on id is injected (SURVEY §2.6).
+    numberMatched is counted beside the page, both jobs at once
+    (``_count_beside``)."""
     limit = search.limit if search.limit is not None else DEFAULT_LIMIT
     base = Search(**{**search.__dict__, "limit": None, "offset": None})
     if not base.sortby:
         base.sortby = "id"
     plan = build_plan(df, base)
-    matched = plan.count()
-    rows = plan.offset(skip).limit(limit).collect()
+    matched, rows = _count_beside(plan, plan.offset(skip).limit(limit))
     nxt = {"skip": skip + limit} if skip + limit < matched else None
     prv = {"skip": max(0, skip - limit)} if skip > 0 else None
     return Page(rows=rows, number_matched=matched,
@@ -58,7 +87,8 @@ def search_page_keyset(df: DataFrame, search: Search,
     concurrent appends (no page drift, unlike OFFSET). The id
     tie-break column is always the final sort key, so the tuple is a
     total order. numberMatched costs a full count — off by default
-    (the reference's context extension also makes it optional)."""
+    (the reference's context extension also makes it optional); with
+    ``count_matched`` it runs beside the page (``_count_beside``)."""
     limit = search.limit if search.limit is not None else DEFAULT_LIMIT
     base = Search(**{**search.__dict__, "limit": None, "offset": None})
     keys = parse_sortby(base.sortby) if base.sortby else []
@@ -66,7 +96,7 @@ def search_page_keyset(df: DataFrame, search: Search,
         keys = keys + [("id", True)]
     base.sortby = keys
     plan = build_plan(df, base)
-    matched = plan.count() if count_matched else -1
+    page = plan
     if after:
         vals = after["keys"]
         if len(vals) != len(keys):
@@ -102,8 +132,10 @@ def search_page_keyset(df: DataFrame, search: Search,
             cmp = _after(keys[i][0], keys[i][1], vals[i])
             branch = cmp if branch is None else (branch & cmp)
             pred = branch if pred is None else (pred | branch)
-        plan = plan.where(pred)
-    rows = plan.limit(limit + 1).collect()
+        page = plan.where(pred)
+    page = page.limit(limit + 1)
+    matched, rows = (_count_beside(plan, page) if count_matched
+                     else (-1, page.collect()))
     has_more = len(rows) > limit
     rows = rows[:limit]
     nxt = ({"keys": [rows[-1][f] for f, _ in keys]}
@@ -193,9 +225,13 @@ def queryables(df: DataFrame) -> dict:
 
 def get_item(df: DataFrame, collection_id: str, item_id: str):
     """Item lookup by (collection, id) — the default trait impl
-    `search with both filters, take 1` (core/src/api/client.rs:33-55)."""
+    `search with both filters, take 1` (core/src/api/client.rs:33-55).
+    The matches are collected whole and the first is taken here: a
+    (collection, id) pair matches one row (a few if POSTs repeated an
+    id), and a Spark LIMIT would scan the files in rounds (three jobs
+    on a 28-file table) where this scans them in one."""
     rows = build_plan(df, Search(
-        ids=[item_id], collections=[collection_id], limit=1)).collect()
+        ids=[item_id], collections=[collection_id])).collect()
     return rows[0] if rows else None
 
 

@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import logging
 import threading
+import time
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -57,6 +58,7 @@ from .search import (QueryNotImplemented, Search, SearchValidationError)
 
 _GEOJSON = "application/geo+json"
 _JSON = "application/json"
+_log = logging.getLogger(__name__)
 
 
 class StacApp:
@@ -314,7 +316,21 @@ def _params_to_search(params: dict) -> Search:
 class _Handler(BaseHTTPRequestHandler):
     app: StacApp = None  # type: ignore[assignment]
 
-    def log_message(self, *a):  # quiet test output
+    def handle_one_request(self) -> None:
+        self._t0 = time.perf_counter()
+        super().handle_one_request()
+
+    def log_request(self, code="-", size="-") -> None:
+        """One INFO record per request on this module's logger —
+        method, route, status, ms from the request line to the status
+        line — instead of http.server's stderr line. Logging that is
+        left unconfigured drops it at the level check."""
+        _log.info("%s %s %s %.1f ms", self.command,
+                  urllib.parse.urlparse(getattr(self, "path", "")).path,
+                  getattr(code, "value", code),
+                  (time.perf_counter() - self._t0) * 1000.0)
+
+    def log_message(self, *a):  # http.server's own stderr lines
         pass
 
     def _send(self, obj, status: int = 200, ctype: str = _JSON) -> None:
@@ -412,8 +428,7 @@ class _Handler(BaseHTTPRequestHandler):
         except Exception as e:
             # an engine failure must still answer, never drop the
             # connection
-            logging.getLogger(__name__).exception(
-                "%s %s failed", method, self.path)
+            _log.exception("%s %s failed", method, self.path)
             self._error(500, f"{type(e).__name__}: {e}")
 
     def do_GET(self):
@@ -451,10 +466,18 @@ def serve(items: DataFrame | None = None, txn=None,
     startup feedback, since their return-value base arrives only
     after shutdown.
 
+    Each request leaves one INFO record (method, route, status, ms) on
+    the ``rustac_spark.stac.server`` logger; configure a handler to
+    see them.
+
     Spark note: handler threads share the one SparkSession — Spark
     sessions are thread-safe for concurrent job submission, and the
     FAIR scheduler can be enabled for latency isolation between
-    concurrent searches."""
+    concurrent searches. With ``txn=``, every request reads CURRENT,
+    and ``SnapshotTable.read`` hands back the same DataFrame until a
+    commit moves it, so a request plans only its query; a skip-paged
+    search counts numberMatched on a second thread beside its page,
+    under the request's job group and description."""
     handler = type("BoundHandler", (_Handler,), {})
     srv = ThreadingHTTPServer((host, port), handler)
     base = f"http://{host}:{srv.server_address[1]}"

@@ -256,5 +256,10 @@ def items_dataframe(spark: SparkSession, items: list[dict]) -> DataFrame:
                     r[k] = float(r[k])
         fields.append(StructField(k, t, True))
     schema = StructType(fields)
-    return spark.createDataFrame(
-        [tuple(r.get(k) for k in keys) for r in rows], schema)
+    # one slice: spread over the default parallelism (4 at local[4]),
+    # a 100-item POST would commit 4 files of 25 rows, and every later
+    # scan of the table pays a task per file (past 32 files, also a
+    # listing job per new file list). coalesce(1) would run the
+    # slices' Python conversions one after another in one task.
+    return spark.createDataFrame(spark.sparkContext.parallelize(
+        [tuple(r.get(k) for k in keys) for r in rows], 1), schema)

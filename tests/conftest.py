@@ -17,6 +17,23 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """spark_jobs(group, fn) → (number of Spark jobs `fn` ran, its
+    result), counted under the job group `group`."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def stac_items(spark):
     return spark.read.parquet(f"{DATA_DIR}/stac_items.parquet")
 

@@ -3,6 +3,7 @@ end-to-end (crates/server/src/routes.rs:104-114), incl. paging links
 consumed by the repo's own api_client, plus transaction routes."""
 
 import json
+import logging
 import urllib.request
 
 import pytest
@@ -345,3 +346,25 @@ def test_put_delete_collection_roundtrip(spark, stac_items, tmp_path):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_one_log_record_per_request(server, caplog):
+    """Every request leaves exactly one INFO record on the server's
+    logger: method, route, status, ms — errors included."""
+    caplog.set_level(logging.INFO, logger="rustac_spark.stac.server")
+    _get(f"{server}/conformance")
+    _post(f"{server}/search?limit=2", {"limit": 2})
+    with pytest.raises(urllib.error.HTTPError):
+        _get(f"{server}/no/such/route")
+    with pytest.raises(urllib.error.HTTPError):
+        urllib.request.urlopen(urllib.request.Request(
+            f"{server}/search", data=b"{not json", method="POST",
+            headers={"Content-Type": "application/json"}), timeout=10)
+    recs = [r for r in caplog.records
+            if r.name == "rustac_spark.stac.server"]
+    assert [r.levelno for r in recs] == [logging.INFO] * 4
+    got = [r.getMessage().split() for r in recs]
+    assert [g[:3] for g in got] == [
+        ["GET", "/conformance", "200"], ["POST", "/search", "200"],
+        ["GET", "/no/such/route", "404"], ["POST", "/search", "400"]]
+    assert all(g[4] == "ms" and float(g[3]) >= 0 for g in got)

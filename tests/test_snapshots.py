@@ -1,6 +1,8 @@
 """Iceberg-style snapshot tables: time travel, file-granular COW,
 optimistic concurrency, atomic visibility."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,6 +72,41 @@ def test_upsert_null_key_replaces_not_duplicates(spark, tmp_path):
              keys=["id"])
     got = sorted((r["id"] is None, r["url"]) for r in t.read().collect())
     assert got == [(False, "u1"), (True, "new")]
+
+
+def test_read_unchanged_snapshot_is_memoized(spark, spark_jobs, tmp_path):
+    """A second read of an unchanged snapshot hands back the same
+    DataFrame and runs no Spark job (no schema inference, no file
+    index rebuild)."""
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(_rows(spark, range(30)).repartitionByRange(5, "id"))
+    first = t.read()
+    n, second = spark_jobs("read-memo-same", t.read)
+    assert n == 0 and second is first
+
+
+def test_read_after_commit_carries_schema(spark, spark_jobs, tmp_path):
+    """After a commit, read() sees the new rows without inferring the
+    schema again: the new file list is read with the memoized schema,
+    which equals what inference over the new files gives. A table
+    re-created through the same object infers its new schema."""
+    d = str(tmp_path / "tbl")
+    t = SnapshotTable(spark, d)
+    t.append(_rows(spark, range(20)).repartitionByRange(4, "id"))
+    t.read()
+    t.append(_rows(spark, range(20, 25)))
+    n, df = spark_jobs("read-memo-append", t.read)
+    assert n == 0
+    files = t.manifest()["files"]
+    assert len(files) < 32  # past 32 paths Spark lists them in a job
+    assert df.schema == spark.read.parquet(*files).schema
+    assert sorted(r["id"] for r in df.collect()) == list(range(25))
+    # time travel reads the older file list with the same schema
+    assert t.read(snapshot_id=1).count() == 20
+    shutil.rmtree(d)
+    t.append(spark.createDataFrame([("a", 1.5)], "k string, v double"))
+    assert t.read().columns == ["k", "v"]
+    assert t.read().collect()[0]["v"] == 1.5
 
 
 def test_optimistic_concurrency_conflict(spark, tmp_path):

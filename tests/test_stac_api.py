@@ -1,8 +1,11 @@
 """Pagination / lookup / collections() / IO helpers."""
 
+import threading
+
 import pytest
 
-from rustac_spark.stac.api import collections, get_item, search_page
+from rustac_spark.stac.api import (collections, get_item, search_page,
+                                   search_page_keyset)
 from rustac_spark.stac.io import (
     Format, absolutize, format_from_str, infer_from_href, relativize,
 )
@@ -27,6 +30,61 @@ def test_get_item(stac_items):
     r = get_item(stac_items, "collection-a", "item-0042")
     assert r is not None and r["id"] == "item-0042"
     assert get_item(stac_items, "nope", "item-0042") is None
+
+
+def test_get_item_is_one_job(spark, spark_jobs, stac_items, tmp_path):
+    """Item lookup scans the table in one job even when the item is
+    not in the first file read (a LIMIT would scan in rounds)."""
+    path = str(tmp_path / "items")
+    stac_items.repartitionByRange(6, "id").write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 6
+    n, row = spark_jobs("get-item-one-job",
+                        lambda: get_item(df, "collection-a", "item-0099"))
+    assert n == 1 and row["id"] == "item-0099"
+
+
+def test_search_page_counts_beside_page(spark, spark_jobs, stac_items,
+                                        monkeypatch):
+    """numberMatched is counted on a second thread while the page is
+    collected, and every job of the request carries the caller's job
+    group (the thread inherits the Spark local properties)."""
+    sc = spark.sparkContext
+    frame = type(stac_items)
+    orig = frame.count
+    counted_on = []
+
+    def count(self):
+        counted_on.append(threading.get_ident())
+        return orig(self)
+
+    monkeypatch.setattr(frame, "count", count)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    n, page = spark_jobs("page-beside",
+                         lambda: search_page(stac_items, Search(limit=10)))
+    assert page.number_matched == 100 and page.number_returned == 10
+    assert counted_on and counted_on[0] != threading.get_ident()
+    assert n >= 2  # the count and the page
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    n, kp = spark_jobs("keyset-beside", lambda: search_page_keyset(
+        stac_items, Search(limit=10), count_matched=True))
+    assert kp.number_matched == 100 and kp.number_returned == 10
+    assert len(counted_on) == 2 and n >= 2
+
+
+@pytest.mark.parametrize("failing", ["count", "collect"])
+def test_search_page_job_errors_propagate(stac_items, monkeypatch,
+                                          failing):
+    """An exception in the count or in the page reaches the caller,
+    and the count thread has ended by then."""
+    def boom(self, *a, **k):
+        raise RuntimeError(f"{failing} failed")
+
+    before = set(threading.enumerate())
+    monkeypatch.setattr(type(stac_items), failing, boom)
+    with pytest.raises(RuntimeError, match=f"{failing} failed"):
+        search_page(stac_items, Search(limit=10))
+    assert set(threading.enumerate()) <= before
 
 
 def test_collections(stac_items):

@@ -2,11 +2,15 @@
 add_item/add_items/add_collection over SnapshotTable storage —
 roundtrip, time travel, upsert, delete, extent refresh."""
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
+from rustac_spark.stac.api import search_page
 from rustac_spark.stac.search import Search
-from rustac_spark.stac.transactions import TransactionClient
+from rustac_spark.stac.transactions import (TransactionClient,
+                                            items_dataframe)
 
 
 @pytest.fixture()
@@ -51,14 +55,18 @@ def test_upsert_and_delete(txn):
     assert ops[0] == "create" and "delete" in ops
 
 
-def test_upsert_items_is_one_atomic_snapshot(txn):
+def test_upsert_items_is_one_atomic_snapshot(txn, spark_jobs):
     """An upsert commits ONE snapshot: every snapshot from before to
     after it holds exactly one version of the key, so a read landing
     at any commit never misses (or doubles) the item."""
     before = txn.table.current_snapshot_id()
     upd = (txn.read().where("id = 'item-0000'")
            .withColumn("eo:cloud_cover", F.lit(77.0)))
-    txn.upsert_items(upd)
+    n, _ = spark_jobs("upsert-jobs", lambda: txn.upsert_items(upd))
+    # batch keys 1 + files holding them 2 (distinct: shuffle, result)
+    # + the one write 1; the parent frame and the rewritten files are
+    # read with the table's memoized schema, so no inference job
+    assert n == 4
     after = txn.table.current_snapshot_id()
     assert after == before + 1
     assert txn.table.manifest(after)["operation"] == "upsert"
@@ -110,6 +118,20 @@ def test_add_item_json_integer_for_double_column(txn):
                        "eo:cloud_cover": 50}})
     row = txn.search(Search(ids=["item-int"])).collect()[0]
     assert row["eo:cloud_cover"] == 50.0
+
+
+def test_posted_batch_commits_one_file(txn):
+    """A POSTed FeatureCollection commits one data file, not one per
+    default-parallelism slice: every later scan pays a task per file."""
+    before = set(txn.table.manifest()["files"])
+    txn.add_item_dicts([
+        {"type": "Feature", "id": f"post-{i}", "collection": "c-post",
+         "geometry": {"type": "Point", "coordinates": [float(i), 0.0]},
+         "properties": {"datetime": "2025-02-02T00:00:00Z"}}
+        for i in range(8)])
+    added = set(txn.table.manifest()["files"]) - before
+    assert len(added) == 1
+    assert txn.read().where("collection = 'c-post'").count() == 8
 
 
 def test_upsert_large_batch_flat_plan(txn):
@@ -196,3 +218,76 @@ def test_update_and_delete_collection(spark, txn):
     txn.delete_collection("c-up")
     assert txn.read().count() == n_before - n_a
     assert "c-up" not in {c["id"] for c in txn.collections()}
+
+
+def test_concurrent_reads_see_each_key_once_at_one_version(spark,
+                                                           tmp_path):
+    """A reader racing a writer's upserts sees every key exactly once,
+    all at one version, NULL collection included: an upsert is one
+    snapshot, and a read is one file list, so neither a search page
+    nor an aggregate can land between a key's delete and its add."""
+    t = TransactionClient(spark, str(tmp_path / "race"))
+    keys = [("c-race", f"k{i}") for i in range(6)] + [(None, "k-null")]
+    ids = [iid for _, iid in keys]
+
+    def batch(version: int):
+        return items_dataframe(spark, [
+            {"type": "Feature", "id": iid, "collection": cid,
+             "geometry": {"type": "Point",
+                          "coordinates": [float(i), 0.0]},
+             "properties": {"datetime": "2025-01-01T00:00:00Z",
+                            "eo:cloud_cover": float(version)}}
+            for i, (cid, iid) in enumerate(keys)])
+
+    t.add_items(batch(0))
+    versions = 4
+    done = threading.Event()
+    seen: list[tuple] = []
+    errors: list[BaseException] = []
+
+    def writer():
+        try:
+            for v in range(1, versions + 1):
+                t.upsert_items(batch(v))
+        except BaseException as e:
+            errors.append(e)
+        finally:
+            done.set()
+
+    def reader():
+        try:
+            while not done.is_set():
+                page = search_page(t.read(),
+                                   Search(ids=ids, limit=len(ids) + 1))
+                got = sorted(r["id"] for r in page.rows)
+                vs = {r["eo:cloud_cover"] for r in page.rows}
+                seen.append(("page", page.number_matched, got, vs))
+                agg = (t.read().groupBy("collection", "id")
+                       .agg(F.count("*").alias("n"),
+                            F.min("eo:cloud_cover").alias("v"))
+                       .collect())
+                seen.append(("agg", len(agg),
+                             {(r["collection"], r["id"], r["n"])
+                              for r in agg},
+                             {r["v"] for r in agg}))
+        except BaseException as e:
+            errors.append(e)
+
+    threads = [threading.Thread(target=f) for f in (writer, reader)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for kind, n, got, vs in seen:
+        assert n == len(keys), kind
+        if kind == "page":
+            assert got == sorted(ids)
+        else:
+            assert got == {(c, i, 1) for c, i in keys}
+        assert len(vs) == 1, (kind, vs)  # one version per read
+    assert len(seen) >= 2
+    final = t.read().collect()
+    assert sorted(r["id"] for r in final) == sorted(ids)
+    assert {r["eo:cloud_cover"] for r in final} == {float(versions)}
