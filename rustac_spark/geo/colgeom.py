@@ -13,8 +13,10 @@ search has one literal geometry, so small geometries — the common
 STAC search contract: a handful of polygons with tens of vertices —
 compile into a boolean expression evaluated inside generated code:
 zero Python, zero Arrow, short-circuited per row.
-geometry_predicate is that one predicate; spatial_join
-(compile_refine_predicate) and build_plan / CQL2 s_intersects use it.
+geometry_predicate is that one predicate: spatial_join uses it through
+compile_refine_predicate, and search ``intersects`` and every CQL2
+``s_intersects`` through intersects_column, which makes any geometry
+one boolean Column over the item bbox struct.
 
 The predicate is emitted as SQL text over the caller's column
 references and handed to the plan through ONE F.expr per public
@@ -94,9 +96,12 @@ import hashlib
 import pickle
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import Column, functions as F
 
-from .predicates import inscribed_rects
+from .predicates import (inscribed_rects, is_axis_aligned_rect_ring,
+                         rects_intersect_pieces)
+from .wkbio import geometry_pieces, parse_wkb, wkb_bounds
 
 # Per-query vertex cap: past this, per-row evaluation cost stops
 # paying for itself against the Arrow kernel's vectorized batches.
@@ -220,6 +225,14 @@ def _and(terms) -> str:
     return " AND ".join(f"({t})" for t in terms)
 
 
+def _overlap_sql(x0, y0, x1, y1, rx0: str, ry0: str, rx1: str,
+                 ry1: str) -> str:
+    """Inclusive overlap of the row's rect with the constant rect
+    [x0, x1] x [y0, y1] (a point is the degenerate rect)."""
+    return (f"{rx0} <= {_lit(x1)} AND {rx1} >= {_lit(x0)}"
+            f" AND {ry0} <= {_lit(y1)} AND {ry1} >= {_lit(y0)}")
+
+
 def _sat_convex_sql(verts, rx0: str, ry0: str, rx1: str, ry1: str) -> str:
     """rect × convex polygon intersection as a separating-axis
     conjunction — the SQL-text twin of the DuckDB oracle's
@@ -233,8 +246,8 @@ def _sat_convex_sql(verts, rx0: str, ry0: str, rx1: str, ry1: str) -> str:
         verts, dtype=np.float64)]
     xs = [v[0] for v in verts]
     ys = [v[1] for v in verts]
-    conds = [f"{rx0} <= {_lit(max(xs))}", f"{rx1} >= {_lit(min(xs))}",
-             f"{ry0} <= {_lit(max(ys))}", f"{ry1} >= {_lit(min(ys))}"]
+    conds = [_overlap_sql(min(xs), min(ys), max(xs), max(ys),
+                          rx0, ry0, rx1, ry1)]
     n = len(verts)
     for i in range(n):
         x1, y1 = verts[i]
@@ -275,12 +288,6 @@ def _segment_hits_rect_sql(x1: float, y1: float, x2: float, y2: float,
     lo = t0[0] if len(t0) == 1 else f"greatest({', '.join(t0)})"
     hi = t1[0] if len(t1) == 1 else f"least({', '.join(t1)})"
     return " AND ".join(conds + [f"{lo} <= {hi}"])
-
-
-def _point_sql(x, y, rx0: str, ry0: str, rx1: str, ry1: str) -> str:
-    x, y = _lit(x), _lit(y)
-    return (f"{rx0} <= {x} AND {x} <= {rx1}"
-            f" AND {ry0} <= {y} AND {y} <= {ry1}")
 
 
 def _convex_parts(pts: np.ndarray) -> list[np.ndarray] | None:
@@ -330,12 +337,12 @@ def _pieces_terms(pieces, rect) -> tuple[list[str], int] | None:
     nodes = 0
     for kind, data in pieces:
         if kind == "point":
-            terms.append(_point_sql(data[0], data[1], *rect))
+            terms.append(_overlap_sql(*data, *data, *rect))
             nodes += _NODES_PER_POINT
         elif kind == "line":
             pts = np.asarray(data, dtype=np.float64)
             if len(pts) == 1:
-                terms.append(_point_sql(pts[0][0], pts[0][1], *rect))
+                terms.append(_overlap_sql(*pts[0], *pts[0], *rect))
                 nodes += _NODES_PER_POINT
             for i in range(len(pts) - 1):
                 terms.append(_segment_hits_rect_sql(
@@ -427,11 +434,11 @@ def geometry_predicate(pieces, rx0: str, ry0: str, rx1: str, ry1: str,
     intersects predicate — the multi-rect inscribed-cover accept
     OR-ed ahead of the compiled SAT test, over the rect's column
     references. spatial_join's polygon refine (via
-    compile_refine_predicate) and build_plan's ``intersects`` / CQL2
-    ``s_intersects`` refine both build it here.
+    compile_refine_predicate) and intersects_column (search
+    ``intersects``, CQL2 ``s_intersects``) both build it here.
 
     None only when the geometry is over DEFAULT_VERTEX_BUDGET or a
-    ring cannot be triangulated; the caller then keeps the Arrow
+    ring cannot be triangulated; the caller then keeps the numpy
     kernel for that geometry.
     """
     compiled = _geometry_sql(pieces, (rx0, ry0, rx1, ry1))
@@ -476,6 +483,84 @@ def anchored(pred: Column) -> Column:
     """
     anchor = F.exists(F.array(F.rand(42)), lambda x: x >= F.lit(-1.0))
     return (pred | (F.spark_partition_id() < F.lit(0))) & anchor
+
+
+# The item table's bbox struct covering index
+# (crates/core/src/geoparquet.rs:397-435): search predicates compile
+# against its fields so Catalyst pushes them into the parquet scan.
+_BBOX = ("bbox.xmin", "bbox.ymin", "bbox.xmax", "bbox.ymax")
+
+
+def bbox_overlap_col(x0, y0, x1, y1) -> Column:
+    """Inclusive overlap of the item bbox with a rect. NULL bbox ⇒
+    NULL ⇒ filtered (null-geometry-never-matches,
+    crates/core/src/item.rs:461-467)."""
+    return F.expr(_overlap_sql(x0, y0, x1, y1, *_BBOX))
+
+
+def _degenerate_sql(pieces) -> str | None:
+    """Points and axis-aligned rects as plain bbox compares (an OR over
+    the pieces), or None if any piece needs the exact predicate."""
+    terms = []
+    for kind, data in pieces:
+        if kind == "point":
+            terms.append(_overlap_sql(*data, *data, *_BBOX))
+        elif (kind == "poly" and len(data) == 1
+              and is_axis_aligned_rect_ring(data[0])):
+            r = data[0]
+            terms.append(_overlap_sql(r[:, 0].min(), r[:, 1].min(),
+                                      r[:, 0].max(), r[:, 1].max(), *_BBOX))
+        else:
+            return None
+    return _or(terms)
+
+
+def _kernel_column(pieces) -> Column:
+    """predicates.rects_intersect_pieces as a scalar Arrow UDF over the
+    four bbox fields — for geometries colgeom cannot compile. A row
+    with a NULL bbox field gets NULL, like the compiled compares."""
+    @F.pandas_udf("boolean")
+    def hits(x0: pd.Series, y0: pd.Series, x1: pd.Series,
+             y1: pd.Series) -> pd.Series:
+        null = (x0.isna() | y0.isna() | x1.isna() | y1.isna()).to_numpy()
+        out = np.zeros(len(x0), dtype=bool)
+        ok = ~null
+        out[ok] = rects_intersect_pieces(
+            x0.to_numpy()[ok], y0.to_numpy()[ok],
+            x1.to_numpy()[ok], y1.to_numpy()[ok], pieces)
+        return pd.Series(pd.arrays.BooleanArray(out, null))
+
+    return hits(*[F.col(c) for c in _BBOX])
+
+
+def intersects_column(wkb: bytes) -> Column:
+    """Does the item bbox intersect this geometry — one boolean Column
+    over the bbox struct, valid anywhere in a filter (under AND, OR
+    and NOT, with SQL three-valued logic: NULL bbox ⇒ NULL). Search
+    ``intersects`` and CQL2 ``s_intersects`` both compile here:
+
+    - points and axis-aligned rects: plain bbox compares, which push
+      into the scan and stay deterministic;
+    - an empty geometry intersects nothing: NULL for a NULL bbox,
+      else false;
+    - any other geometry: the bbox prefilter on its bounds AND the
+      exact test — the anchored geometry_predicate, or past
+      DEFAULT_VERTEX_BUDGET (or for a ring ear_clip cannot
+      triangulate) the numpy kernel as a scalar Arrow UDF. Under a
+      top-level AND, Spark evaluates the UDF above the pushed
+      prefilter.
+    """
+    pieces = geometry_pieces(parse_wkb(wkb))
+    if not pieces:
+        return F.expr(f"CASE WHEN {_BBOX[0]} IS NULL THEN NULL ELSE false END")
+    simple = _degenerate_sql(pieces)
+    if simple is not None:
+        return F.expr(simple)
+    prefilter = bbox_overlap_col(*wkb_bounds(wkb))
+    compiled = geometry_predicate(pieces, *_BBOX)
+    if compiled is not None:
+        return prefilter & anchored(compiled[0])
+    return prefilter & _kernel_column(pieces)
 
 
 def compile_refine_predicate(pieces_by_qid: dict[int, list],

@@ -12,15 +12,12 @@ crates/duckdb/src/client.rs:386-394):
   [NOT] IN ; [NOT] LIKE ; BETWEEN ; casei() → lower() ;
   accenti() → accent folding (fixed Latin map, pure Column) ;
   t_before/t_after (strict < / > on instants) / t_intersects ;
-  s_intersects(geometry, <WKT | BBOX(...) | GeoJSON dict>) — the
-  reference compiles spatial CQL2 ops to DuckDB ST_Intersects
-  (crates/duckdb/src/client.rs:386-394); here they compile to the
-  engine's bbox-overlap Column (point / axis-aligned-rect literals,
-  valid anywhere in the boolean tree) or, for general geometries, a
-  bbox prefilter Column + exact refine (colgeom's compiled predicate;
-  Arrow-batched only past its budget). General-geometry
-  s_intersects must sit in a conjunctive (top-level AND) position —
-  refines are conjunctive; under OR/NOT the compiler raises.
+  s_intersects(geometry, <WKT | BBOX(...) | GeoJSON dict>), literal
+  in either argument position — the reference compiles spatial CQL2
+  ops to DuckDB ST_Intersects (crates/duckdb/src/client.rs:386-394);
+  here each compiles to the one Column of colgeom.intersects_column
+  (bbox compares for points and rects, else a bbox prefilter AND the
+  exact predicate), valid anywhere under AND, OR and NOT.
 - Plan-time empty-result short-circuit: if any referenced property is
   not a column, the whole query returns empty
   (expr_properties_match, crates/duckdb/src/client.rs:433-455).
@@ -38,12 +35,10 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
-from ..geo.colpreds import bbox_overlap_col, pieces_column_pred
-from ..geo.predicates import rects_intersect_pieces
-from ..geo.wkbio import (bbox_polygon_wkb, geojson_to_wkb, geometry_pieces,
-                         linestring_wkb, multilinestring_wkb, multipoint_wkb,
-                         multipolygon_wkb, parse_wkb, point_wkb, polygon_wkb,
-                         wkb_bounds)
+from ..geo.colgeom import intersects_column
+from ..geo.wkbio import (bbox_polygon_wkb, geojson_to_wkb, linestring_wkb,
+                         multilinestring_wkb, multipoint_wkb,
+                         multipolygon_wkb, point_wkb, polygon_wkb)
 from .datetime_parse import parse_rfc3339
 
 
@@ -475,12 +470,18 @@ def _col(name: str):
     return F.col(f"`{name}`") if ("." in name or ":" in name) else F.col(name)
 
 
-def _s_intersects_column(geom: Geom):
-    """Pure-Column s_intersects for point / axis-aligned-rect literals
-    (valid anywhere in the boolean tree) — shared fast path in
-    geo/colpreds. Returns None when the geometry needs the exact
-    refine kernel; an empty geometry compiles to constant false."""
-    return pieces_column_pred(geometry_pieces(parse_wkb(geom.wkb)))
+def s_intersects_literal(args) -> Geom:
+    """The geometry literal of ``s_intersects(geometry, <literal>)``,
+    accepted in either argument order. The other argument must be the
+    item ``geometry`` property: the bbox struct the predicate tests
+    covers the item footprint only."""
+    if len(args) == 2:
+        prop, geom = args if isinstance(args[1], Geom) else args[::-1]
+        if (isinstance(geom, Geom) and isinstance(prop, Prop)
+                and prop.name == "geometry"):
+            return geom
+    raise Cql2Error("s_intersects takes the `geometry` property and one "
+                    "geometry literal")
 
 
 def to_column(ast):
@@ -539,16 +540,7 @@ def to_column(ast):
         if op == "t_intersects":
             return to_column(a[0]) == to_column(a[1])
         if op == "s_intersects":
-            if not isinstance(a[1], Geom):
-                raise Cql2Error(
-                    "s_intersects needs a geometry literal second arg")
-            col = _s_intersects_column(a[1])
-            if col is None:
-                raise Cql2Error(
-                    "s_intersects with a non-rectangular geometry must be "
-                    "in a top-level AND position (compile_filter handles "
-                    "it there via bbox prefilter + exact refine)")
-            return col
+            return intersects_column(s_intersects_literal(a).wkb)
         if op == "isNull":
             return to_column(a[0]).isNull()
         if op == "in":
@@ -570,170 +562,14 @@ def to_column(ast):
     raise Cql2Error(f"cannot compile node {ast!r}")
 
 
-def evaluate(ast, item: dict):
-    """Row-level evaluation of a CQL2 expression against one flat item
-    dict — the reference's single-item `expr.matches(flat_item_json)`
-    (crates/core/src/item.rs:619-622, 706-713). SQL three-valued
-    logic: missing/None propagates to None, filtered as non-match."""
-    if isinstance(ast, Prop):
-        return item.get(ast.name)
-    if isinstance(ast, Lit):
-        return ast.value
-    if isinstance(ast, list):  # array literal
-        return [evaluate(x, item) for x in ast]
-    op, a = ast.op, ast.args
-
-    def ev(n):
-        return evaluate(n, item)
-
-    if op in ("and", "or"):
-        l, r = ev(a[0]), ev(a[1])
-        if op == "and":
-            return (False if l is False or r is False
-                    else None if l is None or r is None else True)
-        return (True if l is True or r is True
-                else None if l is None or r is None else False)
-    if op == "not":
-        v = ev(a[0])
-        return None if v is None else not v
-    if op == "isNull":
-        return ev(a[0]) is None
-    if op == "casei":
-        v = ev(a[0])
-        return v.lower() if isinstance(v, str) else v
-    if op == "accenti":
-        v = ev(a[0])
-        if not isinstance(v, str):
-            return v
-        return v.translate(str.maketrans(_ACCENTS, _ACCENTS_FOLDED))
-    if op == "in":
-        v = ev(a[0])
-        if v is None:
-            return None
-        return v in [x.value if isinstance(x, Lit) else ev(x) for x in a[1]]
-    if op == "like":
-        import re as _re
-        v = ev(a[0])
-        if v is None:
-            return None
-        pat = "^" + _re.escape(a[1].value).replace("%", ".*") \
-            .replace("_", ".") + "$"
-        return bool(_re.match(pat, v))
-    if op == "between":
-        v, lo, hi = ev(a[0]), ev(a[1]), ev(a[2])
-        if v is None or lo is None or hi is None:
-            return None
-        return lo <= v <= hi
-    if op == "s_intersects":
-        import numpy as np
-        geom_val = ev(a[0])
-        if geom_val is None:
-            return None
-        lit = a[1]
-        if isinstance(lit, Geom):
-            lit_wkb = lit.wkb
-        elif isinstance(lit, dict):
-            lit_wkb = geojson_to_wkb(lit)
-        else:
-            lit_wkb = bytes(lit)
-        if isinstance(geom_val, dict):
-            geom_val = geojson_to_wkb(geom_val)
-        pieces = geometry_pieces(parse_wkb(lit_wkb))
-        # empty geometries (GeoJSON-legal empty collections) intersect
-        # nothing, on either side
-        if not pieces or not geometry_pieces(parse_wkb(bytes(geom_val))):
-            return False
-        # item side evaluated on its bounding box — the same covering
-        # discipline the Column path uses (bbox struct ≙ the item)
-        gx0, gy0, gx1, gy1 = wkb_bounds(bytes(geom_val))
-        return bool(rects_intersect_pieces(
-            np.array([gx0]), np.array([gy0]),
-            np.array([gx1]), np.array([gy1]), pieces)[0])
-    l, r = ev(a[0]), ev(a[1])
-    if l is None or r is None:
-        return None
-    # item timestamps are naive-UTC (session TZ pinned UTC); CQL2
-    # TIMESTAMP() literals parse tz-aware — normalize both to naive-UTC
-    import datetime as _dt
-    if isinstance(l, _dt.datetime) and isinstance(r, _dt.datetime):
-        if l.tzinfo is not None:
-            l = l.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        if r.tzinfo is not None:
-            r = r.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    if op == "=" or op == "t_intersects":
-        return l == r
-    if op == "<>":
-        return l != r
-    if op == "a_equals":
-        return sorted(l) == sorted(r)
-    if op == "a_contains":
-        return set(r) <= set(l)
-    if op == "a_containedby":
-        return set(l) <= set(r)
-    if op == "a_overlaps":
-        return bool(set(l) & set(r))
-    if op == "+":
-        return l + r
-    if op == "-":
-        return l - r
-    if op == "*":
-        return l * r
-    if op == "/":
-        return l / r
-    if op == "%":
-        return l % r
-    # strict temporal BEFORE/AFTER (CQL2 instants)
-    if op == "<" or op == "t_before":
-        return l < r
-    if op == "<=":
-        return l <= r
-    if op == ">" or op == "t_after":
-        return l > r
-    if op == ">=":
-        return l >= r
-    raise Cql2Error(f"cannot evaluate op {op!r}")
-
-
-def matches(filt, item: dict) -> bool:
-    """True iff the item matches the CQL2 filter (None → False)."""
-    return evaluate(parse(filt), item) is True
-
-
-def _conjuncts(ast) -> list:
-    """Flatten a top-level AND chain into its conjuncts."""
-    if isinstance(ast, Op) and ast.op == "and":
-        return _conjuncts(ast.args[0]) + _conjuncts(ast.args[1])
-    return [ast]
-
-
 def compile_filter(filt, columns: list[str]):
-    """→ (Column | None, short_circuit: bool, refines: list[pieces]).
+    """→ (Column | None, short_circuit: bool).
 
     short_circuit=True ⇒ a referenced property is not a column of the
     table: the whole query must return empty (plan-time anti-join
     against the schema, client.rs:386-394).
-
-    refines: for each top-level-AND s_intersects conjunct whose
-    geometry is not point/rect, the Column part carries only its bbox
-    prefilter; build_plan applies the exact rect×geometry refine
-    (colgeom.geometry_predicate) with the returned pieces.
     """
     ast = parse(filt)
-    missing = properties(ast) - set(columns)
-    if missing:
-        return None, True, []
-
-    col = None
-    refines: list[list] = []
-    for conj in _conjuncts(ast):
-        if (isinstance(conj, Op) and conj.op == "s_intersects"
-                and isinstance(conj.args[1], Geom)
-                and _s_intersects_column(conj.args[1]) is None):
-            # general geometry: bbox prefilter now, exact refine later
-            pieces = geometry_pieces(parse_wkb(conj.args[1].wkb))
-            c = bbox_overlap_col(*wkb_bounds(conj.args[1].wkb))
-            refines.append(pieces)
-        else:
-            c = to_column(conj)
-        col = c if col is None else (col & c)
-    return col, False, refines
+    if properties(ast) - set(columns):
+        return None, True
+    return to_column(ast), False

@@ -27,23 +27,21 @@ Spark-first notes: every predicate is a Column expression, so
 Catalyst pushes it into the parquet scan (bbox-struct min/max column
 stats ⇒ row-group skipping — the covering-index effect of the
 reference's GeoParquet `covering` metadata, geoparquet.rs:397-435).
-Non-rectangular `intersects` geometries add a compiled Column refine
-after the bbox prefilter (Arrow-batched only past colgeom's budget).
+An `intersects` geometry, like a CQL2 `s_intersects` literal, is one
+Column from colgeom.intersects_column: the bbox prefilter plus the
+exact predicate.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
-from typing import Iterator
+from functools import reduce
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..geo.colgeom import anchored, geometry_predicate
-from ..geo.colpreds import bbox_overlap_col, pieces_column_pred
-from ..geo.predicates import rects_intersect_pieces
-from ..geo.wkbio import geojson_to_wkb, geometry_pieces, parse_wkb, wkb_bounds
+from ..geo.colgeom import bbox_overlap_col, intersects_column
+from ..geo.wkbio import geojson_to_wkb
 from . import cql2
 from .datetime_parse import parse_interval
 
@@ -141,61 +139,29 @@ def _geojson_to_wkb(g: dict) -> bytes:
         raise SearchValidationError(str(e)) from e
 
 
-def _geometry_refine(df: DataFrame, pieces: list) -> DataFrame:
-    """Exact refine of the bbox struct against a geometry:
-    colgeom.geometry_predicate as an anchored Filter, or — only for a
-    geometry over colgeom's budget — the Arrow-batched numpy kernel.
-    `pieces` is wkbio.geometry_pieces output — the row survives if
-    its bbox intersects ANY piece (Multi* union semantics)."""
-    compiled = geometry_predicate(
-        pieces, "bbox.xmin", "bbox.ymin", "bbox.xmax", "bbox.ymax")
-    if compiled is not None:
-        return df.where(anchored(compiled[0]))
-    schema = df.schema
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            b = pdf["bbox"]
-            keep = rects_intersect_pieces(
-                np.array([v["xmin"] for v in b]),
-                np.array([v["ymin"] for v in b]),
-                np.array([v["xmax"] for v in b]),
-                np.array([v["ymax"] for v in b]),
-                pieces)
-            yield pdf[keep]
-
-    return df.mapInPandas(refine, schema=schema)
-
-
 def build_plan(df: DataFrame, search: Search) -> DataFrame:
     """Compile a Search into a lazy DataFrame plan.
 
-    Point and axis-aligned-rect ``intersects`` geometries (and CQL2
-    ``s_intersects`` literals) compile to bbox-struct Columns. Any
-    other geometry gets a pushdown bbox prefilter, then the exact
-    refine: colgeom.geometry_predicate — the same compiled predicate
-    spatial_join uses — and mapInPandas only for a geometry over its
-    budget. Compiled verdicts use closed-set separating-axis math, so
-    an item bbox separated from the geometry by less than 1e-12 is
-    rejected, where the numpy kernel's on-edge tolerance shell
-    accepts it (the join's round-5 change); only rects within 1e-12
-    of the geometry can see the difference.
+    The ``intersects`` geometry and every CQL2 ``s_intersects`` literal
+    compile through colgeom.intersects_column to one boolean Column
+    over the bbox struct: plain compares for points and axis-aligned
+    rects, else a pushdown bbox prefilter AND the exact test
+    (colgeom.geometry_predicate — the predicate spatial_join uses —
+    or, past its budget, the numpy kernel as an Arrow UDF). Compiled
+    verdicts use closed-set separating-axis math, so an item bbox
+    separated from the geometry by less than 1e-12 is rejected, where
+    the numpy kernel's on-edge tolerance shell accepts it (the join's
+    round-5 change); only rects within 1e-12 of the geometry can see
+    the difference.
     """
     search.validate()
-    columns = df.columns
-    refines: list[list] = []  # each entry: geometry pieces to refine on
 
     # --- plan-time CQL2 short-circuit (before anything else) ---------
     filter_col = None
     if search.filter is not None:
-        filter_col, short, filter_refines = cql2.compile_filter(
-            search.filter, columns)
+        filter_col, short = cql2.compile_filter(search.filter, df.columns)
         if short:
             df = df.where(F.lit(False))
-        refines.extend(filter_refines)
 
     preds = []
     if search.ids:
@@ -210,13 +176,7 @@ def build_plan(df: DataFrame, search: Search) -> DataFrame:
     if search.intersects is not None:
         wkb = (search.intersects if isinstance(search.intersects, bytes)
                else _geojson_to_wkb(search.intersects))
-        pieces = geometry_pieces(parse_wkb(wkb))
-        col = pieces_column_pred(pieces)
-        if col is not None:
-            preds.append(col)
-        else:
-            preds.append(bbox_overlap_col(*wkb_bounds(wkb)))  # prefilter
-            refines.append(pieces)
+        preds.append(intersects_column(wkb))
     if search.datetime is not None:
         start, end = parse_interval(search.datetime)
         item_start = F.coalesce(F.col("start_datetime"), F.col("datetime"))
@@ -228,11 +188,11 @@ def build_plan(df: DataFrame, search: Search) -> DataFrame:
     if filter_col is not None:
         preds.append(filter_col)
 
-    for p in preds:  # AND-combined (client.rs:396-399)
-        df = df.where(p)
-
-    for pieces in refines:
-        df = _geometry_refine(df, pieces)
+    if preds:
+        # AND-combined (client.rs:396-399) in ONE Filter: Spark pushes
+        # every deterministic conjunct of it into the scan, including
+        # those after an anchored (nondeterministic) geometry term
+        df = df.where(reduce(operator.and_, preds))
 
     if search.fields:
         include, exclude = parse_fields(search.fields)

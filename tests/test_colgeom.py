@@ -23,7 +23,7 @@ from rustac_spark.geo.colgeom import (DEFAULT_NODE_BUDGET,
 from rustac_spark.geo.join import spatial_join
 from rustac_spark.geo.predicates import rects_intersect_pieces
 from rustac_spark.geo.wkbio import (geometrycollection_wkb, linestring_wkb,
-                                    point_wkb, polygon_wkb)
+                                    point_wkb, polygon_wkb, wkb_bounds)
 from rustac_spark.geocode import with_geocode
 from rustac_spark.stac.search import Search, build_plan
 
@@ -425,3 +425,30 @@ def test_compiled_predicate_matches_kernel_property(spark, data):
     # accept it once grown by the shell width
     assert np.all(got[diff, 2]), rects[diff & ~got[:, 2]]
     assert np.all(rects_intersect_pieces(*grown, pieces)[diff])
+
+
+@given(st.data())
+@settings(max_examples=15, deadline=None)
+def test_search_intersects_equals_join_refine_property(spark, data):
+    """Search ``intersects`` and the spatial join's refine accept the
+    same item rects for the same generated geometry — points, lines,
+    in-budget polygons and the over-budget circle (join: _mixed_refine,
+    search: the Arrow UDF Column) included."""
+    pieces = data.draw(st.one_of(_geometries, st.just(CIRCLE)))
+    rects, _ = data.draw(_rect_soup(pieces))
+    pages = spark.createDataFrame(
+        [(i, *map(float, r)) for i, r in enumerate(rects)],
+        "rid int, xmin double, ymin double, xmax double, ymax double")
+    wkb = _pieces_wkb(pieces)
+    kind = "point" if pieces[0][0] == "point" else "polygon"
+    queries = spark.createDataFrame(
+        [(1, kind, *wkb_bounds(wkb), bytearray(wkb))],
+        "query_id long, kind string, qxmin double, qymin double, "
+        "qxmax double, qymax double, geometry binary")
+    joined = {r["rid"] for r in spatial_join(
+        pages, queries, res=5, page_cols=["rid"]).collect()}
+    items = pages.select("rid", F.struct("xmin", "ymin", "xmax", "ymax")
+                         .alias("bbox"))
+    searched = {r["rid"] for r in build_plan(
+        items, Search(intersects=wkb)).collect()}
+    assert searched == joined

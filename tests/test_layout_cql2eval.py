@@ -8,7 +8,7 @@ from rustac_spark import DATA_DIR
 from rustac_spark.geo.join import spatial_join
 from rustac_spark.geocode import with_geocode
 from rustac_spark.pipeline.layout import file_cell_ranges, write_clustered
-from rustac_spark.stac.cql2 import matches
+from cql2_oracle import matches
 
 
 @pytest.fixture(scope="module")

@@ -79,26 +79,52 @@ def test_spatial_join_is_broadcast_and_single_scan(spark, queries_df):
     assert "Exchange hashpartitioning" not in plan
 
 
+HEXAGON = {"type": "Polygon", "coordinates": [[
+    [-106.10, 40.55], [-106.05, 40.50], [-105.98, 40.52],
+    [-105.97, 40.58], [-106.04, 40.62], [-106.10, 40.55]]]}
+
+
+def _s_intersects(geometry) -> dict:
+    return {"op": "s_intersects",
+            "args": [{"property": "geometry"}, geometry]}
+
+
 def test_intersects_polygon_refine_is_python_free_in_budget(stac_items):
     # an in-budget polygon (search intersects and CQL2 s_intersects)
-    # refines through the compiled Column predicate: no Python stage
-    hexagon = {"type": "Polygon", "coordinates": [[
-        [-106.10, 40.55], [-106.05, 40.50], [-105.98, 40.52],
-        [-105.97, 40.58], [-106.04, 40.62], [-106.10, 40.55]]]}
-    for s in (Search(intersects=hexagon),
-              Search(filter={"op": "s_intersects", "args": [
-                  {"property": "geometry"}, hexagon]})):
+    # refines through the compiled Column predicate: no Python stage,
+    # and in AND position its bbox prefilter reaches the scan
+    for s in (Search(intersects=HEXAGON),
+              Search(filter=_s_intersects(HEXAGON))):
         plan = _physical(build_plan(stac_items, s))
         assert "MapInPandas" not in plan and "Python" not in plan
         assert "bbox.xmin" in plan.split("PushedFilters")[1][:400]
-    # an over-budget one (120 vertices) keeps the Arrow kernel
+    # an over-budget one (120 vertices) keeps the numpy kernel, as an
+    # Arrow UDF evaluated above the pushed prefilter Filter
     import math
     ring = [[-106.0 + 0.05 * math.cos(2 * math.pi * i / 120),
              40.55 + 0.05 * math.sin(2 * math.pi * i / 120)]
             for i in range(120)]
     circle = {"type": "Polygon", "coordinates": [ring + [ring[0]]]}
     plan = _physical(build_plan(stac_items, Search(intersects=circle)))
-    assert "MapInPandas" in plan
+    assert "ArrowEvalPython" in plan and "MapInPandas" not in plan
+    assert "bbox.xmin" in plan.split("PushedFilters")[1][:400]
+    lines = plan.splitlines()
+    python = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
+    prefilter = next(i for i, l in enumerate(lines)
+                     if "Filter" in l and ".xmin <= " in l)
+    assert python < prefilter  # printed top-down: the UDF sits above
+
+
+def test_s_intersects_under_or_and_not_has_no_python_stage(stac_items):
+    """A polygon term under OR or NOT compiles in place to the same
+    Column: no Python stage, no refine pass."""
+    for filt in ({"op": "or", "args": [
+                     _s_intersects(HEXAGON),
+                     {"op": "=", "args": [{"property": "id"}, "nope"]}]},
+                 {"op": "not", "args": [_s_intersects(HEXAGON)]}):
+        plan = _physical(build_plan(stac_items, Search(filter=filt)))
+        assert "MapInPandas" not in plan and "Python" not in plan
+        assert "bbox" in plan.split("Filter")[1].split("\n")[0]
 
 
 def test_tiles_is_narrow_until_aggregation(spark):
