@@ -1546,7 +1546,8 @@ def oracle_sql() -> dict[str, str]:
                      CASE WHEN p.run + s.n_tokens > 256
                           THEN s.n_tokens ELSE p.run + s.n_tokens END
               FROM seq s JOIN packs p
-                ON s.source = p.source AND s.rn = p.rn + 1)
+                ON s.source IS NOT DISTINCT FROM p.source
+               AND s.rn = p.rn + 1)
             SELECT b.doc_id, b.source, b.n_tokens, b.n_bpe, b.fp,
                    b.n_contam, p.pack_id, p.pack_pos
             FROM base b JOIN packs p ON p.doc_id = b.doc_id

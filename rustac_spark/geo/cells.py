@@ -38,19 +38,6 @@ def encode(res: int, x: Column, y: Column) -> Column:
     return base + F.shiftleft(y.cast("long"), _Y_SHIFT) + x.cast("long")
 
 
-def encode_py(res: int, x: int, y: int) -> int:
-    """Driver-side scalar twin of ``encode`` (tests/diagnostics)."""
-    return (res << _RES_SHIFT) | (y << _Y_SHIFT) | x
-
-
-def decode_py(cell: int) -> tuple[int, int, int]:
-    """(res, x, y) — driver-side helper for tests/diagnostics."""
-    res = cell >> _RES_SHIFT
-    y = (cell >> _Y_SHIFT) & ((1 << _Y_SHIFT) - 1)
-    x = cell & ((1 << _Y_SHIFT) - 1)
-    return res, x, y
-
-
 def _xi(lon: Column, res: int) -> Column:
     n = _n(res)
     i = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))

@@ -15,7 +15,7 @@ Scale design (10^12 pages, 1000 executors):
   shuffles). For query sets too big to broadcast, pass
   ``broadcast_queries=False`` to fall back to a hash-partitioned
   shuffle join on cell, where AQE's skew-join splitting handles hot
-  cells (salting helpers in pipeline/skew.py);
+  cells (hot-cell subdivision in pipeline/skew.py);
 - duplicate candidates (a pair sharing several cells) are eliminated
   WITHOUT a distinct-shuffle via the reference-point technique: a pair
   is counted only in the cell that contains the top-left corner of the

@@ -53,15 +53,6 @@ def encode(level: int, face: int, i: Column, j: Column) -> Column:
     return base + F.shiftleft(j.cast("long"), _J_SHIFT) + i.cast("long")
 
 
-def decode_py(cell: int) -> tuple[int, int, int, int]:
-    """(level, face, i, j) — driver-side helper for tests."""
-    level = cell >> _LEVEL_SHIFT
-    face = (cell >> _FACE_SHIFT) & 0xF
-    j = (cell >> _J_SHIFT) & ((1 << _J_SHIFT) - 1)
-    i = cell & ((1 << _J_SHIFT) - 1)
-    return level, face, i, j
-
-
 def _axis_index(coord: Column, lo: float, hi: float, n: int) -> Column:
     idx = F.floor((coord - F.lit(lo)) / F.lit(hi - lo) * F.lit(float(n)))
     return F.greatest(F.lit(0), F.least(F.lit(n - 1), idx.cast("long")))
@@ -151,10 +142,3 @@ def children(cell: Column, res: int) -> Column:
                        + F.shiftleft(F.shiftleft(j, 1) + dy, _J_SHIFT)
                        + F.shiftleft(i, 1) + dx)
     return F.array(*out)
-
-
-def parent_py(cell: int) -> int:
-    """Driver-side parent (level-1) — hierarchy tests."""
-    level, face, i, j = decode_py(cell)
-    return ((level - 1) << _LEVEL_SHIFT) | (face << _FACE_SHIFT) \
-        | ((j >> 1) << _J_SHIFT) | (i >> 1)

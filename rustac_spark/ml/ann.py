@@ -1,13 +1,13 @@
-"""Similarity search over embedding columns (north-rule training-data
-operator): brute-force cosine top-k baseline + LSH-bucketed scale path.
+"""Similarity over embedding columns (north-rule training-data
+operators): exact cosine top-k, semantic dedup and cosine near-dup
+pairs.
 
-Brute force is pure Column math — F.zip_with/F.aggregate dot products
-in whole-stage codegen, broadcast query side, per-query top-k window.
-Exact, and the correctness oracle for the approximate variant.
-
-The scale path buckets vectors by random-hyperplane signs (deterministic
-planes from sha256) so only same/neighbor-bucket pairs are scored —
-the IVF/LSH shape that survives 10^12 rows.
+Everything is pure Column math — F.zip_with/F.aggregate dot products
+in whole-stage codegen. Top-k broadcasts the query side and ranks per
+query with a window. The dedup operators block the candidate pairs,
+by label, by spherical k-means cluster, or by random-hyperplane sign
+bucket (deterministic planes from sha256), so only same-block pairs
+are scored.
 """
 
 from __future__ import annotations
@@ -77,32 +77,6 @@ def lsh_bucket_col(vec_col, planes: np.ndarray):
     return bucket
 
 
-def knn_lsh(vectors: DataFrame, queries: DataFrame, k: int = 5,
-            nbits: int = 4, dim: int = 64,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            qid_col: str = "query_id", qvec_col: str = "qvec") -> DataFrame:
-    """Approximate top-k: score only vectors in the query's sign bucket
-    (plus 1-bit-flip neighbor buckets for recall)."""
-    planes = _hyperplanes(dim, nbits)
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    v = v.withColumn("bucket", lsh_bucket_col(F.col("v"), planes))
-    q = queries.select(F.col(qid_col), _as_double(F.col(qvec_col)).alias("q"))
-    q = q.withColumn("qbucket", lsh_bucket_col(F.col("q"), planes))
-    # probe own bucket + all 1-bit flips (multi-probe LSH)
-    probes = F.array(*([F.col("qbucket")] +
-                       [F.col("qbucket").bitwiseXOR(F.lit(1 << i))
-                        for i in range(nbits)]))
-    q = F.broadcast(q.withColumn("bucket", F.explode(probes)).drop("qbucket"))
-    cand = (v.join(q, "bucket")
-            .where(F.col(id_col) != F.col(qid_col))
-            .withColumn("cosine_sim", F.round(cosine(F.col("v"), F.col("q")), 6)))
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, "rank", id_col, "cosine_sim"))
-
-
 def _assign_centroids(vcol, cents: np.ndarray, n_best: int):
     """Top-n_best centroid ids by dot product — pure Column."""
     scores = F.array(*[
@@ -129,9 +103,7 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, dim: int,
     ``train_cap`` bounds the TRAINING set with a deterministic hash
     sample (the standard faiss/IVF practice — centroid quality needs
     ~100-1000 points per centroid, not the full corpus): without it,
-    Lloyd pays iters full-corpus passes and IVF training can cost
-    more than the brute-force scan it is meant to avoid (measured at
-    10^6 vectors: 59 s IVF vs 31 s brute). Pass None to train on
+    Lloyd pays iters full-corpus passes. Pass None to train on
     everything."""
     cents = _hyperplanes(dim, n_centroids)
     cents = cents / np.linalg.norm(cents, axis=1, keepdims=True)
@@ -161,71 +133,6 @@ def kmeans_centroids(vectors: DataFrame, n_centroids: int, dim: int,
         cents = new
     v.unpersist()
     return cents
-
-
-def build_ivf_index(vectors: DataFrame, centroids: np.ndarray,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """One-time inverted-list assignment: (id, v, centroid). Persist
-    or write this once and pass it to knn_ivf as ``index`` — the
-    assignment is a full n_corpus × n_centroids dot-product pass, so
-    paying it per query batch erases IVF's advantage (measured at
-    10^6 vectors / 64 centroids: assignment alone costs ≥ a 20-query
-    brute-force scan). Repartitioning by centroid co-locates each
-    list so a probe touches few partitions."""
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("v"))
-    v = v.withColumn("centroid", F.element_at(
-        _assign_centroids(F.col("v"), centroids, 1), 1))
-    return v.repartition("centroid")
-
-
-def knn_ivf(vectors: DataFrame, queries: DataFrame, k: int = 5,
-            n_centroids: int = 16, n_probe: int = 3, dim: int = 64,
-            kmeans_iters: int = 0,
-            centroids: np.ndarray | None = None,
-            index: DataFrame | None = None,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            qid_col: str = "query_id", qvec_col: str = "qvec") -> DataFrame:
-    """IVF-flat approximate top-k: vectors are assigned to their
-    nearest coarse centroid; queries probe their n_probe nearest
-    centroid lists.
-
-    Centroids: pass `centroids`, or set `kmeans_iters > 0` to fit
-    spherical k-means on the vector table (kmeans_centroids), or leave
-    both unset for the deterministic pseudo-random fallback.
-
-    Scale shape: the inverted-list assignment is one narrow pass;
-    the search touches ~n_probe/n_centroids of the data. Recall vs the
-    exact baseline is asserted in tests.
-    """
-    if centroids is not None:
-        cents = centroids
-    elif kmeans_iters > 0:
-        cents = kmeans_centroids(vectors, n_centroids, dim,
-                                 iters=kmeans_iters, vec_col=vec_col)
-    else:
-        cents = _hyperplanes(dim, n_centroids)  # rows ≈ random unit dirs
-
-    def _assign(vcol, n_best: int):
-        return _assign_centroids(vcol, cents, n_best)
-
-    if index is not None:
-        v = index
-    else:
-        v = vectors.select(F.col(id_col),
-                           _as_double(F.col(vec_col)).alias("v"))
-        v = v.withColumn("centroid",
-                         F.element_at(_assign(F.col("v"), 1), 1))
-    q = queries.select(F.col(qid_col), _as_double(F.col(qvec_col)).alias("q"))
-    q = q.withColumn("centroid", F.explode(_assign(F.col("q"), n_probe)))
-    cand = (v.join(F.broadcast(q), "centroid")
-            .where(F.col(id_col) != F.col(qid_col))
-            .withColumn("cosine_sim", F.round(cosine(F.col("v"), F.col("q")), 6)))
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc())
-    return (cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, "rank", id_col, "cosine_sim"))
 
 
 def _grouped_pairs(members: DataFrame, id_col: str, group_col: str,

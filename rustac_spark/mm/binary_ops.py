@@ -1,13 +1,11 @@
 """Multimodal column plumbing (north-rule training-data operators).
 
-Images/audio/video are opaque ``binary`` columns with typed metadata.
+Images and audio are opaque ``binary`` columns with typed metadata.
 Every still-image format decodes with REAL from-scratch kernels
 (mm/codecs.py + mm/jpeg.py): PPM P6, 24-bit BMP, baseline PNG
 (zlib + unfilter), GIF (hand-written LZW), and baseline JPEG
-(DCT/Huffman, 4:4:4 + 4:2:0). Only video frame sampling stays
-STUBBED behind a deterministic fake (needs ffmpeg) — its Spark-side
-plumbing (schema, Arrow batch shape, partitioning) is real, so adding
-pyav later is a one-function change.
+(DCT/Huffman, 4:4:4 + 4:2:0); WAV/PCM audio decodes with the
+pure-numpy kernel in mm/codecs.py.
 """
 
 from __future__ import annotations
@@ -17,7 +15,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .codecs import decode_image, image_features, ppm_encode, resize_nearest
+from .codecs import decode_image, image_features
 
 MAGIC = {
     b"<html>": "text/html",
@@ -102,151 +100,3 @@ def extract_audio_features(df: DataFrame, bin_col: str = "payload",
 
     return df.select(url_col, bin_col).mapInPandas(gen,
                                                    schema=AUDIO_SCHEMA)
-
-
-def sample_frames_stub(data: bytes, every_n: int = 30,
-                       max_frames: int = 8) -> list[bytes]:
-    """STUB — deterministic fake video frame sampling (real impl:
-    ffmpeg/pyav). Emits ≤max_frames chunks keyed off payload bytes;
-    an empty/null payload yields no frames."""
-    if not data:
-        return []
-    n = min(max_frames, max(1, len(data) // max(1, every_n)))
-    return [bytes([data[i % len(data)]]) * 4 for i in range(n)]
-
-
-def resize_images(df: DataFrame, width: int = 256, height: int = 256,
-                  bin_col: str = "payload", url_col: str = "url",
-                  ) -> DataFrame:
-    """Batch resize: decode → vectorized nearest-neighbor resample →
-    re-encode as PPM. Real kernels for PPM/BMP inputs; unsupported
-    formats yield a null row."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, data in zip(pdf[url_col], pdf[bin_col]):
-                try:
-                    arr = resize_nearest(decode_image(bytes(data)),
-                                         width, height)
-                    rows.append((url, ppm_encode(arr), width, height))
-                except (NotImplementedError, ValueError, TypeError):
-                    rows.append((url, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "url", "resized", "width", "height"])
-
-    return df.select(url_col, bin_col).mapInPandas(
-        gen, schema="url string, resized binary, width int, height int")
-
-
-def sample_video_frames(df: DataFrame, bin_col: str = "payload",
-                        url_col: str = "url", every_n: int = 30,
-                        max_frames: int = 8) -> DataFrame:
-    """Frame sampling: one output row per sampled frame (binary video
-    column → exploded frame binaries + frame index).
-
-    REAL for MJPEG-in-AVI (the one video container that needs no
-    external codec): the RIFF 'movi' list is walked and every
-    `every_n`-th JPEG frame is emitted as standalone JPEG bytes —
-    decodable downstream by extract_image_features via the
-    from-scratch mm/jpeg decoder. Other containers (H.264 etc.) fall
-    back to the labeled deterministic stub (need ffmpeg/pyav)."""
-    from .codecs import avi_mjpeg_frames
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, data in zip(pdf[url_col], pdf[bin_col]):
-                data = bytes(data) if data is not None else b""
-                try:
-                    frames = avi_mjpeg_frames(data)
-                except ValueError:
-                    frames = []
-                # a valid AVI whose streams are not MJPEG (e.g.
-                # H.264-in-AVI) parses cleanly but yields no frames;
-                # fall through to the stub rather than silently
-                # dropping the row
-                if frames:
-                    sampled = (frames[::max(1, every_n)][:max_frames]
-                               or frames[:1])
-                    for i, f in enumerate(sampled):
-                        rows.append((url, i, f))
-                    continue
-                for i, frame in enumerate(
-                        sample_frames_stub(data, every_n)):
-                    rows.append((url, i, frame))
-            yield pd.DataFrame(rows, columns=["url", "frame_idx", "frame"])
-
-    return df.select(url_col, bin_col).mapInPandas(
-        gen, schema="url string, frame_idx int, frame binary")
-
-
-def phash64(data: bytes) -> int:
-    """64-bit perceptual image hash (classic pHash recipe): decode →
-    grayscale → nearest-neighbor 32×32 → 2-D DCT (the same orthonormal
-    DCT-II kernel the from-scratch JPEG codec uses, mm/jpeg.py:95) →
-    keep the 8×8 low-frequency corner → threshold the 63 AC terms
-    against their median. The hash is 63 bits wide (DC is excluded —
-    it only encodes overall brightness); bit 63 is always 0.
-    Visually-similar images land within a few Hamming bits; raises on
-    undecodable payloads (caller decides the dead-letter policy)."""
-    import numpy as np
-
-    from .codecs import decode_image, resize_nearest
-
-    arr = resize_nearest(decode_image(data), 32, 32).astype(np.float64)
-    gray = arr @ np.array([0.299, 0.587, 0.114])
-    # 32-point orthonormal DCT-II basis, the same construction as the
-    # JPEG codec's 8-point basis (mm/jpeg.py:95) generalized to n=32
-    n = 32
-    k = np.arange(n)
-    c32 = np.sqrt(2.0 / n) * np.cos((2 * k[None, :] + 1)
-                                    * k[:, None] * np.pi / (2 * n))
-    c32[0, :] = np.sqrt(1.0 / n)
-    freq = c32 @ gray @ c32.T
-    low = freq[:8, :8].flatten()
-    ac = low[1:]
-    bits = (ac > np.median(ac)).astype(np.uint64)
-    h = np.uint64(0)
-    for b in bits:
-        h = (h << np.uint64(1)) | b
-    return int(h)
-
-
-def with_phash(df: DataFrame, bin_col: str = "payload",
-               url_col: str = "url") -> DataFrame:
-    """Arrow-batched pHash column: (url, phash long); undecodable
-    payloads yield NULL (kept — dead-letter rows stay visible)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, data in zip(pdf[url_col], pdf[bin_col]):
-                if data is None:  # null payload cell → null hash
-                    out.append((url, None))
-                    continue
-                try:
-                    # 63-bit hash fits the Spark signed long directly
-                    out.append((url, phash64(bytes(data))))
-                except (NotImplementedError, ValueError):
-                    out.append((url, None))
-            yield pd.DataFrame(out, columns=["url", "phash"])
-
-    return df.select(url_col, bin_col).mapInPandas(
-        gen, schema="url string, phash long")
-
-
-def near_dup_images(df: DataFrame, bin_col: str = "payload",
-                    url_col: str = "url", max_distance: int = 3,
-                    max_bucket: int = 10_000) -> DataFrame:
-    """Image near-dup pairs: pHash + the SAME 4-chunk pigeonhole
-    banding machinery the text simhash path uses (exact for Hamming ≤
-    3) — cross-modal reuse of the engine's dedup physics. → (a, b,
-    hamming_dist)."""
-    from ..textops.simhash import _pairs_from_hashes
-
-    hashed = with_phash(df, bin_col, url_col).where(
-        F.col("phash").isNotNull())
-    return _pairs_from_hashes(hashed, id_col="url", hash_col="phash",
-                              max_distance=max_distance,
-                              max_bucket=max_bucket)

@@ -6,9 +6,8 @@ no codec at all; PNG needs only stdlib zlib, so a from-scratch
 baseline decoder lives here too (8-bit depth, all 5 scanline filters,
 color types 0/2/3/4/6, non-interlaced — the overwhelming majority of
 real-world PNGs); GIF87a/89a decodes via a hand-written LZW
-(mm/codecs); baseline JPEG decodes/encodes via the from-scratch
-DCT/Huffman codec in mm/jpeg.py. Only video frame sampling remains a
-labeled stub in binary_ops (needs ffmpeg).
+(mm/codecs); baseline JPEG decodes via the from-scratch DCT/Huffman
+decoder in mm/jpeg.py.
 """
 
 from __future__ import annotations
@@ -461,61 +460,6 @@ def audio_features(samples: np.ndarray, rate: int) -> list[float]:
     return [float(dur), rms, peak, zc]
 
 
-# ------------------------------------------------- AVI (MJPEG) frames
-
-def avi_mjpeg_frames(data: bytes) -> list[bytes]:
-    """RIFF/AVI container walk → the raw JPEG bytes of every MJPEG
-    video frame ('..dc'/'..db' chunks inside the 'movi' LIST). Pure
-    chunk arithmetic — pairs with jpeg_decode for REAL video frame
-    sampling of the one video container that needs no external codec."""
-    if not data.startswith(b"RIFF") or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI file")
-    frames: list[bytes] = []
-
-    def walk(pos: int, end: int) -> None:
-        while pos + 8 <= end:
-            cid = data[pos:pos + 4]
-            (clen,) = struct.unpack_from("<I", data, pos + 4)
-            body_start = pos + 8
-            if cid == b"LIST":
-                ltype = data[body_start:body_start + 4]
-                if ltype in (b"movi", b"rec "):
-                    walk(body_start + 4, body_start + clen)
-            elif cid[2:4] in (b"dc", b"db") and clen >= 3:
-                payload = data[body_start:body_start + clen]
-                if payload[:3] == b"\xff\xd8\xff":
-                    frames.append(payload)
-            pos = body_start + clen + (clen & 1)  # word-aligned
-
-    walk(12, len(data))
-    return frames
-
-
-def avi_mjpeg_encode(frames: list[bytes], width: int, height: int,
-                     fps: int = 30) -> bytes:
-    """Minimal MJPEG-AVI writer (RIFF + avih/strh/strf headers + movi
-    LIST) for tests/pipelines — every frame is a standalone JPEG."""
-    def chunk(cid: bytes, payload: bytes) -> bytes:
-        pad = b"\x00" if len(payload) & 1 else b""
-        return cid + struct.pack("<I", len(payload)) + payload + pad
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
-
-    avih = struct.pack("<14I", 1_000_000 // fps, 0, 0, 0x10,
-                       len(frames), 0, 1, 0, width, height, 0, 0, 0, 0)
-    strh = (b"vids" + b"MJPG" + struct.pack("<IHHIIIIIIIII", 0, 0, 0,
-            0, 1, fps, 0, len(frames), 0, 0, 0, 0))
-    strf = struct.pack("<IiiHH4sIiiII", 40, width, height, 1, 24,
-                       b"MJPG", width * height * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh)
-                     + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 # ------------------------------------------------------ shared kernels
 
 def decode_image(data: bytes) -> np.ndarray:
@@ -546,15 +490,6 @@ def decode_image(data: bytes) -> np.ndarray:
     raise NotImplementedError(
         "unrecognized image format (PPM/BMP/PNG/GIF/baseline-JPEG "
         "decode from scratch; anything else needs Pillow)")
-
-
-def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Vectorized nearest-neighbor resize (the real kernel behind
-    binary_ops.resize_images)."""
-    h, w = arr.shape[:2]
-    yi = np.minimum((np.arange(height) * h) // height, h - 1)
-    xi = np.minimum((np.arange(width) * w) // width, w - 1)
-    return arr[yi[:, None], xi[None, :]]
 
 
 def image_features(arr: np.ndarray) -> list[float]:

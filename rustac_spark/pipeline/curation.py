@@ -83,12 +83,10 @@ def curate_corpus(spark: SparkSession, docs: DataFrame, run_dir: str,
     # MinHash/LSH/verify pipeline is the stage's expensive part — it
     # must not run twice. persist() is lazy (nothing runs when the
     # stage resumes), recomputes lost blocks after executor loss
-    # (unlike localCheckpoint), and is the stage's only cache
-    # (near_dup_pairs' own signature cache would outlive the run);
-    # it is released once the stage has committed
+    # (unlike localCheckpoint), and is the stage's only cache; it is
+    # released once the stage has committed
     pairs = near_dup_pairs(kept, threshold=near_dup_threshold,
-                           id_col=key, text_col=text_col,
-                           persist=False) \
+                           id_col=key, text_col=text_col) \
         .select(F.col("a"), F.col("b")).persist()
 
     def neardup():

@@ -3,17 +3,12 @@ shuffle / skew handled explicitly").
 
 The broadcast join needs none of this (the big side never shuffles).
 When BOTH sides are large (broadcast_queries=False), hot cells — zipf
-domains cluster pages into few cells — skew the hash partitions. Two
-levers, composable with AQE's skew-join splitting:
-
-- salting: append salt = pmod(xxhash64(url), n) to the big side's key
-  and explode the small side across all n salts (replication preserves
-  join correctness);
-- adaptive cell subdivision: cells whose row count exceeds a threshold
-  re-cover their footprints at res+1 (children), spreading one hot
-  partition over ≤4; the query side re-covers the same cells so the
-  equi-join keys still align (both sides use the identical rule ⇒
-  correctness preserved).
+domains cluster pages into few cells — skew the hash partitions. The
+lever, composable with AQE's skew-join splitting, is adaptive cell
+subdivision: cells whose row count exceeds a threshold re-cover their
+footprints at res+1 (children), spreading one hot partition over ≤4;
+the query side re-covers the same cells so the equi-join keys still
+align (both sides use the identical rule ⇒ correctness preserved).
 """
 
 from __future__ import annotations
@@ -21,18 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..geo.cells import DEFAULT_RES, children, cover_bbox
-
-
-def salted_join(big: DataFrame, small: DataFrame, key: str,
-                nsalts: int = 8, big_id: str = "url") -> DataFrame:
-    """Equi-join big ⋈ small on `key` with salted partitioning.
-    `small` is exploded nsalts× (replication), so result multiplicity
-    is unchanged."""
-    b = big.withColumn("_salt", F.pmod(F.xxhash64(F.col(big_id)),
-                                       F.lit(nsalts)).cast("int"))
-    s = small.withColumn("_salt", F.explode(F.array(
-        *[F.lit(i) for i in range(nsalts)])))
-    return b.join(s, [key, "_salt"]).drop("_salt")
 
 
 def hot_cells(pages_cells: DataFrame, threshold: int,

@@ -456,39 +456,3 @@ class SnapshotTable:
         key = _key_column(keys)
         batch = sorted({r[0] for r in df.select(key).collect()})
         return self._commit("upsert", drop=key.isin(batch), add=df)
-
-    # ---------------------------------------------- streaming sink
-
-    def append_batch_exactly_once(self, df: DataFrame,
-                                  batch_id: int) -> int | None:
-        """foreachBatch sink body with EXACTLY-ONCE table commits:
-        the manifest records the streaming batch id, so a replayed
-        micro-batch (after a crash between the table commit and the
-        checkpoint advance) is recognized and skipped. Returns the new
-        snapshot id, or None if this batch was already committed."""
-        sid = self.current_snapshot_id()
-        while sid is not None:
-            m = self.manifest(sid)
-            if m.get("batch_id") == batch_id:
-                return None  # replay of an already-committed batch
-            sid = m["parent"]
-        # the batch id rides IN the manifest, written before the
-        # pointer flip — no crash window between commit and stamp
-        return self.append(df, {"batch_id": batch_id})
-
-
-def stream_to_table(prepared: DataFrame, table_dir: str,
-                    checkpoint_dir: str, once: bool = True):
-    """writeStream → SnapshotTable with exactly-once batch commits.
-    Each micro-batch becomes one table snapshot; readers time-travel
-    over the ingest history."""
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        SnapshotTable(batch_df.sparkSession, table_dir) \
-            .append_batch_exactly_once(batch_df, batch_id)
-
-    w = (prepared.writeStream
-         .foreachBatch(sink)
-         .option("checkpointLocation", checkpoint_dir))
-    if once:
-        w = w.trigger(availableNow=True)
-    return w.start()

@@ -37,6 +37,17 @@ def package_zip() -> str:
     return out
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory in whole GiB, at least 1g and at
+    most 16g: a 48g heap measured 2-10x slower on an earlier, larger VM
+    (first-touch page faults + G1 young-gen sizing stall multi-sec)."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf names
+        return "16g"
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_spark(app: str = "rustac-spark", master: str | None = None,
               shuffle_partitions: int | None = None,
               extra: dict | None = None) -> SparkSession:
@@ -56,9 +67,8 @@ def get_spark(app: str = "rustac-spark", master: str | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # 16g, NOT bigger: a 48g heap measured 2-10x slower on this VM
-        # (first-touch page faults + G1 young-gen sizing stall multi-sec)
-        .config("spark.driver.memory", os.environ.get("RUSTAC_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("RUSTAC_DRIVER_MEM") or default_driver_memory())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: all executor threads share one JVM — heap and GC
         # must be sized for the thread count, and shuffle/spill goes to

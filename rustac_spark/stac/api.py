@@ -74,8 +74,7 @@ def search_page(df: DataFrame, search: Search,
 
 
 def search_page_keyset(df: DataFrame, search: Search,
-                       after: dict | None = None,
-                       count_matched: bool = False) -> Page:
+                       after: dict | None = None) -> Page:
     """Keyset (cursor) pagination — the 100 TB twin of search_page's
     skip tokens: instead of OFFSET (which scans and discards `skip`
     rows — O(offset) per page at 10^12 rows), the next page filters
@@ -86,9 +85,9 @@ def search_page_keyset(df: DataFrame, search: Search,
     {"keys": [...last sort values...]}. Tokens stay valid under
     concurrent appends (no page drift, unlike OFFSET). The id
     tie-break column is always the final sort key, so the tuple is a
-    total order. numberMatched costs a full count — off by default
-    (the reference's context extension also makes it optional); with
-    ``count_matched`` it runs beside the page (``_count_beside``)."""
+    total order. numberMatched would cost a full count, so it is not
+    counted (-1); the reference's context extension makes it
+    optional."""
     limit = search.limit if search.limit is not None else DEFAULT_LIMIT
     base = Search(**{**search.__dict__, "limit": None, "offset": None})
     keys = parse_sortby(base.sortby) if base.sortby else []
@@ -134,13 +133,12 @@ def search_page_keyset(df: DataFrame, search: Search,
             pred = branch if pred is None else (pred | branch)
         page = plan.where(pred)
     page = page.limit(limit + 1)
-    matched, rows = (_count_beside(plan, page) if count_matched
-                     else (-1, page.collect()))
+    rows = page.collect()
     has_more = len(rows) > limit
     rows = rows[:limit]
     nxt = ({"keys": [rows[-1][f] for f, _ in keys]}
            if has_more and rows else None)
-    return Page(rows=rows, number_matched=matched,
+    return Page(rows=rows, number_matched=-1,
                 number_returned=len(rows), next_token=nxt,
                 prev_token=None)
 

@@ -12,12 +12,11 @@ Pipeline (the standard shingle → minhash → band → bucket shape):
 3. candidates: ONE map-side-combined groupBy on the band key with
    in-bucket pair explosion (bounded by max_bucket, the dedup
    analogue of ngram's max_df skew cap) — no big self-join;
-4. verify: exact Jaccard over the shingle-hash SETS cached at
+4. verify: exact Jaccard over the shingle-hash SETS emitted at
    signature time (precision = 1 by construction; recall governed by
    (b, r)). The verify join moves only (id, sig, shingle-hash array)
-   rows — the raw corpus text is scanned exactly once and never
-   shuffled; the Jaccard itself is pure Column math
-   (array_intersect/size), no second Python pass.
+   rows — the raw corpus text is never shuffled; the Jaccard itself
+   is pure Column math (array_intersect/size).
 
 Determinism: splitmix64 seeds derived from sha256 of the permutation
 index — stable across processes and partitionings.
@@ -113,10 +112,6 @@ def _shingle_hashes_np(text: str, n: int = 5,
     return np.unique(h)
 
 
-def shingles(text: str, n: int = 5, mode: str = "word") -> set[int]:
-    return set(_shingle_hashes_np(text, n, mode).tolist())
-
-
 def _sig_from_hashes(h: np.ndarray, k: int, _tables={}) -> np.ndarray:
     if k not in _tables:
         _tables[k] = _perm_tables(k)
@@ -125,12 +120,6 @@ def _sig_from_hashes(h: np.ndarray, k: int, _tables={}) -> np.ndarray:
         return np.full(k, np.iinfo(np.uint64).max, dtype=np.uint64)
     m = _splitmix64(h[None, :] ^ seeds[:, None])  # (k, |sh|)
     return m.min(axis=1)
-
-
-def minhash_signature(text: str, k: int = 64, n: int = 5) -> np.ndarray:
-    sh = shingles(text, n)
-    return _sig_from_hashes(
-        np.fromiter(sh, dtype=np.uint64, count=len(sh)), k)
 
 
 def with_signatures(df: DataFrame, text_col: str = "text",
@@ -227,23 +216,18 @@ def candidate_pairs(sigs: DataFrame, id_col: str = "doc_id",
 def near_dup_pairs(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id", threshold: float = 0.8,
                    k: int = 64, bands: int = 16, rows: int = 4,
-                   n: int = 5, persist: bool = True) -> DataFrame:
+                   n: int = 5) -> DataFrame:
     """Full pipeline → (a, b, jaccard) verified pairs ≥ threshold.
 
-    The corpus text is read exactly once (the signature pass also
-    caches each doc's distinct shingle-hash set); candidates and the
+    The corpus text feeds only the signature pass, which also emits
+    each doc's distinct shingle-hash set; candidates and the
     exact-Jaccard verify operate on that compact (id, sig, sh) table —
     at 100 TB the verify joins shuffle shingle-hash arrays, never the
-    corpus. `persist` keeps the one Python pass from re-running for
-    the candidate and verify branches; the cached (id, sig, sh) table
-    stays pinned for the session (Spark evicts LRU under pressure) —
-    callers invoking this repeatedly in one long-lived session should
-    pass persist=False or persist the input themselves and unpersist
-    when done."""
+    corpus. Nothing is cached, so no table outlives the call; the
+    candidate branch and both verify joins each run the signature
+    pass."""
     sigs = with_signatures(df, text_col, id_col, k, n,
                            include_shingles=True)
-    if persist:
-        sigs = sigs.persist()
     cands = candidate_pairs(sigs.select(id_col, "sig"), id_col, bands, rows)
     sets = sigs.select(F.col(id_col), F.col("sh"))
     joined = (cands

@@ -160,80 +160,3 @@ def contaminated_gram_counts(docs: DataFrame, benchmark: DataFrame,
     return (doc_grams.join(F.broadcast(bench_grams), "g")
             .groupBy(id_col)
             .agg(F.count("*").alias("n_contam_grams")))
-
-
-def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                  mode: str = "drop", id_col: str = "doc_id",
-                  text_col: str = "text",
-                  bench_text_col: str = "text") -> DataFrame:
-    """Drop (mode="drop") or annotate (mode="flag") corpus docs that
-    share any token n-gram with a held-out benchmark/eval set — the
-    standard pre-training decontamination pass. "flag" keeps every
-    row and adds (contaminated: bool, n_contam_grams: long); "drop"
-    returns the clean subset with the original schema.
-
-    The contaminated-id set is assumed small (benchmark overlap is
-    rare by construction), so it broadcasts back onto the corpus:
-    no corpus reshuffle in either mode.
-    """
-    if mode not in ("drop", "flag"):
-        raise ValueError(f"mode must be 'drop' or 'flag', got {mode!r}")
-    hits = contaminated_gram_counts(docs, benchmark, n=n, id_col=id_col,
-                                    text_col=text_col,
-                                    bench_text_col=bench_text_col)
-    if mode == "drop":
-        return docs.join(F.broadcast(hits), id_col, "left_anti")
-    return (docs.join(F.broadcast(hits), id_col, "left")
-            .withColumn("contaminated", F.col("n_contam_grams").isNotNull())
-            .withColumn("n_contam_grams",
-                        F.coalesce(F.col("n_contam_grams"), F.lit(0))
-                        .cast("long")))
-
-
-def with_dup_span_fraction(docs: DataFrame, n: int = 10,
-                           min_count: int = 2, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           hashed: bool = True) -> DataFrame:
-    """Per-doc duplicated-token fraction — the RefinedWeb-style
-    "what share of this document is corpus-duplicated text" filter
-    signal, derived from dup_ngram_spans: covered tokens / total
-    tokens (0.0 for docs with no duplicated span or fewer than n
-    tokens). One left join of the span summary back onto the corpus;
-    docs themselves are never reshuffled."""
-    from pyspark.sql import Window
-
-    spans = dup_ngram_spans(docs, n=n, min_count=min_count,
-                            id_col=id_col, text_col=text_col,
-                            hashed=hashed)
-    # spans can OVERLAP in token range: dup_ngram_spans splits runs on
-    # position gaps > 1, but each position covers n tokens, so two runs
-    # whose dup positions differ by 2..n-1 cover overlapping ranges
-    # (n=10, positions {0,2} → spans [0,9] and [2,11]). Summing raw
-    # lengths double-counts the overlap and can push the fraction past
-    # 1.0 — merge intervals per doc first: a span opens a new merged
-    # interval iff its start exceeds the running max end of all prior
-    # spans (ordered by start) + 1.
-    w = Window.partitionBy(id_col).orderBy("span_start", "span_end")
-    prev_end = F.max("span_end").over(
-        w.rowsBetween(Window.unboundedPreceding, -1))
-    merged = (spans
-              .withColumn("_new", F.when(
-                  prev_end.isNull()
-                  | (F.col("span_start") > prev_end + 1), 1).otherwise(0))
-              .withColumn("_grp", F.sum("_new").over(
-                  w.rowsBetween(Window.unboundedPreceding, 0)))
-              .groupBy(id_col, "_grp")
-              .agg((F.max("span_end") - F.min("span_start")
-                    + F.lit(1)).alias("_len")))
-    covered = (merged.groupBy(id_col)
-               .agg(F.sum("_len").alias("_dup_tokens")))
-    tk = F.split(F.trim(F.col(text_col)), r"\s+")
-    out = (docs.join(covered, id_col, "left")
-           .withColumn("n_tokens_total", F.size(tk))
-           .withColumn(
-               "dup_span_fraction",
-               F.round(F.coalesce(F.col("_dup_tokens"), F.lit(0))
-                       / F.greatest(F.col("n_tokens_total"), F.lit(1)),
-                       6))
-           .drop("_dup_tokens"))
-    return out

@@ -24,44 +24,26 @@ per-group recursive CTE (the DuckDB oracle in __spark_entry__.py).
 
 from __future__ import annotations
 
-from functools import reduce
-
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
 
 def pack_documents(docs: DataFrame, budget: int,
                    group_cols: tuple[str, ...] | list[str] = ("source",),
                    id_col: str = "doc_id",
-                   token_col: str = "n_tokens",
-                   buckets: int | None = None) -> DataFrame:
+                   token_col: str = "n_tokens") -> DataFrame:
     """Assign each document a ``pack_id`` (0-based per group) and
     ``pack_pos`` (0-based position inside its pack) by greedy in-order
     token-budget packing. Returns the projected input columns
     (group_cols + id_col + token_col) plus the two pack columns.
 
     A group is one sequential applyInPandas task, so a caller-chosen
-    group key with one dominant group caps parallelism at that group
-    (the round-6 verdict's one flagged scale surface). ``buckets=N``
-    opts into SUB-SHARD packing for that shape: documents are spread
-    over N deterministic hash buckets of ``id_col`` (guide §2.5 —
-    derived, never random), packing runs greedy-in-id-order
-    INDEPENDENTLY per (group, bucket) — N parallel tasks per group —
-    and pack ids are made unique and ordered per group by offsetting
-    each bucket with the cumulative DOC COUNT of earlier buckets (an
-    upper bound on their pack counts from one tiny count agg, so no
-    second packing pass). Bucketed semantics differ from the default
-    by construction (each bucket starts a fresh pack and ids are not
-    contiguous); it is a documented mode, not a drop-in equivalence —
-    the default path is unchanged.
+    group key with one dominant group caps parallelism at that group.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     group_cols = list(group_cols)
-    if buckets is not None and buckets > 1:
-        return _pack_documents_bucketed(docs, budget, group_cols,
-                                        id_col, token_col, buckets)
     slim = docs.select(*group_cols, id_col, token_col)
     out_schema = StructType(list(slim.schema.fields) + [
         StructField("pack_id", LongType(), False),
@@ -87,58 +69,3 @@ def pack_documents(docs: DataFrame, budget: int,
         return pdf
 
     return slim.groupBy(*group_cols).applyInPandas(pack, out_schema)
-
-
-def _pack_documents_bucketed(docs: DataFrame, budget: int,
-                             group_cols: list[str], id_col: str,
-                             token_col: str, buckets: int) -> DataFrame:
-    """Sub-shard packing: greedy per (group, hash-bucket of id), pack
-    ids offset per bucket so they stay unique and ascending within
-    the group. See pack_documents docstring."""
-    bucket_col = F.pmod(F.xxhash64(F.col(id_col)),
-                        F.lit(buckets)).cast("long")
-    slim = (docs.select(*group_cols, id_col, token_col)
-            .withColumn("_bucket", bucket_col))
-    local = pack_documents(slim, budget,
-                           group_cols=group_cols + ["_bucket"],
-                           id_col=id_col, token_col=token_col)
-    # one tiny agg: cumulative doc counts of earlier buckets within
-    # the group — a deterministic upper bound on their pack counts
-    # (>= 1 pack per doc never holds in reverse), so offsets can be
-    # computed WITHOUT a second packing pass
-    w = Window.partitionBy(*group_cols).orderBy("_bucket")
-    offs = (slim.groupBy(*group_cols, "_bucket")
-            .agg(F.count("*").alias("_n"))
-            .withColumn("_off", F.coalesce(
-                F.sum("_n").over(w) - F.col("_n"), F.lit(0)))
-            .select(*group_cols, "_bucket", "_off")).alias("o")
-    loc = local.alias("l")
-    cond = reduce(lambda a, b: a & b,
-                  [loc[g].eqNullSafe(offs[g]) for g in group_cols]
-                  + [loc["_bucket"] == offs["_bucket"]])
-    return (loc.join(F.broadcast(offs), cond)
-            .select(*[loc[g] for g in group_cols], loc[id_col],
-                    loc[token_col],
-                    (loc["pack_id"] + offs["_off"]).alias("pack_id"),
-                    loc["pack_pos"]))
-
-
-def pack_documents_py(rows: list[tuple], budget: int) -> list[tuple]:
-    """Driver-side reference implementation (tests): rows are
-    (group, id, tokens) tuples; returns (group, id, tokens, pack_id,
-    pack_pos) with identical semantics to :func:`pack_documents`."""
-    out = []
-    by_group: dict = {}
-    for g, i, t in rows:
-        by_group.setdefault(g, []).append((i, t))
-    for g, docs in by_group.items():
-        docs.sort()
-        cur, run, pos = 0, 0, 0
-        for i, t in docs:
-            t = int(t)
-            if pos > 0 and run + t > budget:
-                cur, run, pos = cur + 1, 0, 0
-            out.append((g, i, t, cur, pos))
-            run += t
-            pos += 1
-    return out

@@ -29,13 +29,6 @@ def sample_bucket(key: Column, salt: str = "") -> Column:
             .cast("bigint") % _DENOM)
 
 
-def deterministic_sample(df: DataFrame, key_col: str, rate: float,
-                         salt: str = "") -> DataFrame:
-    """Keep ≈rate of rows, chosen by hash gate on key_col."""
-    return df.where(sample_bucket(F.col(key_col), salt)
-                    < int(rate * _DENOM))
-
-
 def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
                       rates: dict[str, float], default_rate: float = 0.0,
                       salt: str = "") -> DataFrame:

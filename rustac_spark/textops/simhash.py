@@ -79,11 +79,6 @@ def simhash_batch(texts) -> np.ndarray:
     return out
 
 
-def simhash64(text: str) -> int:
-    """Single-doc convenience wrapper (tests / driver-side oracles)."""
-    return int(simhash_batch([text])[0])
-
-
 def with_simhash(df: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id") -> DataFrame:
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -125,9 +120,7 @@ def _pairs_from_hashes(hashed: DataFrame, id_col: str, hash_col: str,
                        max_distance: int = 3,
                        max_bucket: int = 10_000) -> DataFrame:
     """(id, 64-bit hash) → (a, b, dist) Hamming pairs via the 4-chunk
-    pigeonhole + capped in-bucket pairwise compare. Hash-agnostic —
-    the text simhash path and the image pHash path
-    (mm.binary_ops.near_dup_images) share this exact machinery."""
+    pigeonhole + capped in-bucket pairwise compare."""
     assert max_distance <= 3
     sh = hashed.select(F.col(id_col),
                        F.col(hash_col).alias("simhash"))

@@ -1,5 +1,4 @@
-"""Clustered layout stats + subdivided-join equality + single-item
-CQL2 evaluation."""
+"""Subdivided-join equality + single-item CQL2 evaluation."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,7 +6,6 @@ from pyspark.sql import functions as F
 from rustac_spark import DATA_DIR
 from rustac_spark.geo.join import spatial_join
 from rustac_spark.geocode import with_geocode
-from rustac_spark.pipeline.layout import file_cell_ranges, write_clustered
 from cql2_oracle import matches
 
 
@@ -18,20 +16,6 @@ def pages_geo(spark):
     ).drop("html", "text")
     df.cache().count()
     return df
-
-
-def test_clustered_write_has_tight_stats(spark, pages_geo, tmp_path):
-    path = str(tmp_path / "clustered")
-    write_clustered(pages_geo, path, num_files=8)
-    ranges = sorted(file_cell_ranges(path), key=lambda r: r[1])
-    assert len(ranges) >= 4
-    # range partitioning ⇒ files cover (near-)disjoint cell ranges:
-    # total overlap between consecutive files is at most boundary cells
-    for (_, _, amax), (_, bmin, _) in zip(ranges, ranges[1:]):
-        assert bmin >= amax - 1
-    # vs the global span, each file's span must be a small slice
-    global_span = ranges[-1][2] - ranges[0][1]
-    assert sum(r[2] - r[1] for r in ranges) <= global_span + len(ranges)
 
 
 def test_subdivided_join_equals_plain(spark, pages_geo, queries_df):

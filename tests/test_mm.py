@@ -1,16 +1,14 @@
-"""Multimodal plumbing: sniff, real PPM/BMP decode/resize kernels,
-frame-sample stub."""
+"""Multimodal plumbing: sniff and the real image/audio decode kernels."""
 
 import numpy as np
 import pytest
 
 from rustac_spark.mm.binary_ops import (
-    extract_image_features, resize_images, sample_video_frames,
-    with_binary_meta,
+    extract_image_features, with_binary_meta,
 )
 from rustac_spark.mm.codecs import (
     bmp_decode, bmp_encode, decode_image, image_features, ppm_decode,
-    ppm_encode, resize_nearest,
+    ppm_encode,
 )
 
 
@@ -49,16 +47,6 @@ def test_codec_roundtrips():
     assert len(feats) == 4 and all(0.0 <= f <= 1.0 for f in feats)
 
 
-def test_resize_nearest_exact():
-    arr = _checker(8, 8)
-    half = resize_nearest(arr, 4, 4)
-    assert half.shape == (4, 4, 3)
-    # nearest with integer ratio picks every second pixel
-    assert np.array_equal(half, arr[::2, ::2])
-    up = resize_nearest(arr, 16, 16)
-    assert np.array_equal(up[::2, ::2], arr)
-
-
 def test_decode_resize_framesample_plumbing(spark):
     from rustac_spark.mm.codecs import png_encode
     ppm = ppm_encode(_checker(6, 4))
@@ -77,22 +65,9 @@ def test_decode_resize_framesample_plumbing(spark):
     assert abs(feats["bmp"]["features"][3] - 100 / 255) < 1e-6
     assert (feats["png"]["width"], feats["png"]["height"]) == (2, 7)
     assert abs(feats["png"]["features"][3] - 40 / 255) < 1e-6
-    assert feats["jpg"]["width"] is None  # honest stub: needs Pillow
+    assert feats["jpg"]["width"] is None  # corrupt JPEG: dead-letter row
+    assert feats["vid"]["width"] is None  # a RIFF payload is no image
     assert feats["bad"]["width"] is None  # graceful non-image handling
-
-    res = {r["url"]: r for r in resize_images(df, 128, 96).collect()}
-    assert res["ppm"]["width"] == 128 and res["ppm"]["resized"] is not None
-    # resized output is a decodable PPM of the target size
-    out = ppm_decode(bytes(res["ppm"]["resized"]))
-    assert out.shape == (96, 128, 3)
-    assert res["bad"]["resized"] is None
-
-    frames = sample_video_frames(df).collect()
-    by_url = {}
-    for r in frames:
-        by_url.setdefault(r["url"], []).append(r["frame_idx"])
-    assert len(by_url["vid"]) >= 2
-    assert by_url["vid"] == sorted(by_url["vid"])
 
 
 def _png_filter_forward(arr, ftype):
@@ -316,71 +291,12 @@ def test_gif_decode_lzw_and_interlace():
         gif_decode(b"GIF89a" + b"\x00" * 20)
 
 
-def test_video_non_mjpeg_avi_falls_back_to_stub(spark):
-    """A valid RIFF/AVI whose movi payloads are not JPEG (e.g.
-    H.264-in-AVI) parses cleanly but yields zero MJPEG frames; the row
-    must fall through to the deterministic stub instead of being
-    silently dropped from the output."""
-    from rustac_spark.mm.binary_ops import sample_video_frames
-    from rustac_spark.mm.codecs import avi_mjpeg_encode, avi_mjpeg_frames
-
-    fake_h264 = avi_mjpeg_encode([b"\x00\x00\x00\x01gibberish" * 8],
-                                 4, 4)
-    assert avi_mjpeg_frames(fake_h264) == []   # precondition
-    df = spark.createDataFrame([("u1", bytearray(fake_h264))],
-                               "url string, payload binary")
-    out = sample_video_frames(df).collect()
-    assert len(out) >= 1 and out[0]["url"] == "u1"
-
-
-def test_phash_near_dup_images(spark):
-    """Perceptual hash: a lightly-perturbed image pairs with its
-    original (small Hamming distance); a structurally different image
-    does not — cross-modal reuse of the simhash banding machinery."""
-    import numpy as np
-
-    from rustac_spark.mm.binary_ops import near_dup_images, phash64
-    from rustac_spark.mm.codecs import ppm_encode
-
-    # textured images (rich low-frequency content keeps the AC signs
-    # stable under small edits; smooth gradients would leave most ACs
-    # near zero and noise-flippable)
-    h, w = 48, 64
-    rng = np.random.default_rng(11)
-    tex = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-    # low-pass it so low frequencies dominate (block-average 8x8)
-    tex = tex.reshape(h // 8, 8, w // 8, 8, 3).mean(axis=(1, 3))
-    tex = np.repeat(np.repeat(tex, 8, axis=0), 8, axis=1) \
-        .astype(np.uint8)
-    perturbed = tex.copy()
-    perturbed[5:8, 5:8] = 255 - perturbed[5:8, 5:8]  # small local edit
-    other = rng.integers(0, 256, (h // 8, w // 8, 3))
-    other = np.repeat(np.repeat(other, 8, axis=0), 8, axis=1) \
-        .astype(np.uint8)
-
-    a, b, c = (ppm_encode(x) for x in (tex, perturbed, other))
-    d_ab = bin(phash64(a) ^ phash64(b)).count("1")
-    d_ac = bin(phash64(a) ^ phash64(c)).count("1")
-    assert d_ab <= 3 < d_ac  # precondition: the recipe separates them
-
-    df = spark.createDataFrame(
-        [("A", bytearray(a)), ("B", bytearray(b)), ("C", bytearray(c)),
-         ("bad", bytearray(b"not an image"))],
-        "url string, payload binary")
-    pairs = {(r["a"], r["b"]): r["dist"]
-             for r in near_dup_images(df).collect()}
-    assert ("A", "B") in pairs and pairs[("A", "B")] == d_ab
-    assert all("C" not in p for p in pairs)
-    assert all("bad" not in p for p in pairs)  # dead-letter row silent
-
-
 def test_corrupt_and_null_payloads_dead_letter(spark):
     """Truncated payloads that pass the magic sniff (struct/zlib-level
     failures) and NULL payload cells must produce NULL rows, not kill
     the Arrow task."""
     from rustac_spark.mm.binary_ops import (extract_audio_features,
-                                            extract_image_features,
-                                            with_phash)
+                                            extract_image_features)
 
     rows = [("trunc-bmp", bytearray(b"BM" + b"\x01" * 10)),
             ("trunc-png", bytearray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 12)),
@@ -391,8 +307,6 @@ def test_corrupt_and_null_payloads_dead_letter(spark):
             for r in extract_image_features(df).collect()}
     assert imgs == {"trunc-bmp": None, "trunc-png": None,
                     "trunc-gif": None, "null": None}
-    ph = {r["url"]: r["phash"] for r in with_phash(df).collect()}
-    assert set(ph.values()) == {None}
     wav = spark.createDataFrame(
         [("trunc-wav", bytearray(b"RIFF\x10\x00\x00\x00WAVE"
                                  b"fmt \x02\x00\x00\x00\x01\x00")),

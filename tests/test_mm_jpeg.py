@@ -8,9 +8,8 @@ against hand-computed closed forms, and only THEN lossy roundtrips."""
 import numpy as np
 import pytest
 
-from rustac_spark.mm.jpeg import (
-    STD_LUMA_Q, ZIGZAG, _scaled_q, dct2, idct2, jpeg_decode, jpeg_encode,
-)
+from jpeg_encoder import STD_LUMA_Q, _scaled_q, dct2, jpeg_encode
+from rustac_spark.mm.jpeg import ZIGZAG, idct2, jpeg_decode
 
 
 def test_dct_against_cosine_sum_oracle():
@@ -132,44 +131,10 @@ def test_420_subsampling_roundtrip():
     assert np.abs(got2.astype(int) - solid.astype(int)).max() <= 4
 
 
-def test_mjpeg_avi_frame_sampling(spark):
-    """REAL video frame sampling: MJPEG-AVI container walk + JPEG
-    frames end-to-end through the Spark operator."""
-    from rustac_spark.mm.binary_ops import (extract_image_features,
-                                            sample_video_frames)
-    from rustac_spark.mm.codecs import avi_mjpeg_encode, avi_mjpeg_frames
-
-    frames = []
-    for i in range(6):
-        img = np.full((16, 8, 3), (i * 40) % 256, dtype=np.uint8)
-        frames.append(jpeg_encode(img, quality=90))
-    avi = avi_mjpeg_encode(frames, 8, 16, fps=10)
-    assert avi_mjpeg_frames(avi) == frames
-
-    df = spark.createDataFrame(
-        [("clip", bytearray(avi)),
-         ("notavi", bytearray(b"RIFF\x08\x00\x00\x00WAVE1234"))],
-        ["url", "payload"])
-    got = sample_video_frames(df, every_n=2, max_frames=4).collect()
-    clip = sorted((r["frame_idx"], bytes(r["frame"]))
-                  for r in got if r["url"] == "clip")
-    assert [f for _, f in clip] == frames[::2][:4]
-    # sampled frames are real JPEGs: decodable downstream
-    feats = extract_image_features(
-        spark.createDataFrame(
-            [(str(i), bytearray(f)) for i, f in clip],
-            ["url", "payload"])).collect()
-    assert all(r["width"] == 8 and r["height"] == 16 for r in feats)
-    # non-AVI RIFF falls back to the stub (still yields rows)
-    assert any(r["url"] == "notavi" for r in got)
-
-
 def test_restart_interval_decode():
     """DRI/RSTn handling: inject a restart interval by re-encoding the
     entropy stream in two chunks separated by RST0 with a DRI marker."""
     import struct as _s
-
-    from rustac_spark.mm.jpeg import jpeg_decode, jpeg_encode
 
     img = np.zeros((8, 24, 3), dtype=np.uint8)  # 3 MCUs at 4:4:4
     img[:, :8] = 200
@@ -179,15 +144,14 @@ def test_restart_interval_decode():
 
     # build the same scan with DRI=1: re-encode each MCU separately
     # and join with RST markers, resetting DC predictors
-    from rustac_spark.mm.jpeg import (
-        STD_AC_CHROMA, STD_AC_LUMA, STD_DC_CHROMA, STD_DC_LUMA,
-        _BitWriter, _HuffTable, _encode_block, _scaled_q, ZIGZAG,
-        STD_CHROMA_Q, STD_LUMA_Q,
+    from jpeg_encoder import (
+        STD_AC_CHROMA, STD_AC_LUMA, STD_CHROMA_Q, STD_DC_CHROMA,
+        STD_DC_LUMA, _BitWriter, _encode_block, huff_codes,
     )
     ql = _scaled_q(STD_LUMA_Q, 90)[ZIGZAG]
     qc = _scaled_q(STD_CHROMA_Q, 90)[ZIGZAG]
-    dc_l, ac_l = _HuffTable(*STD_DC_LUMA), _HuffTable(*STD_AC_LUMA)
-    dc_c, ac_c = _HuffTable(*STD_DC_CHROMA), _HuffTable(*STD_AC_CHROMA)
+    dc_l, ac_l = huff_codes(*STD_DC_LUMA), huff_codes(*STD_AC_LUMA)
+    dc_c, ac_c = huff_codes(*STD_DC_CHROMA), huff_codes(*STD_AC_CHROMA)
     pieces = []
     arr = img.astype(np.float64)
     r, g, b = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]

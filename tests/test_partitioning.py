@@ -1,56 +1,13 @@
-"""Hive-partitioned spatial layout: partition pruning evidence."""
+"""Z-order (Morton) layout key: Column == scalar twin, and Morton
+clustering gives 2-D-local files."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from rustac_spark import DATA_DIR
-from rustac_spark.geocode import with_geocode
-from rustac_spark.pipeline.layout import (
-    partition_pruned_read, write_partitioned,
-)
-
-
-@pytest.fixture(scope="module")
-def part_path(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("part") / "pages_part")
-    geo = with_geocode(
-        spark.read.parquet(f"{DATA_DIR}/pages_sf0.001.parquet")
-    ).drop("html", "text")
-    write_partitioned(geo, path)
-    return path
-
-
-def test_partition_pruning_in_plan(spark, part_path):
-    df = partition_pruned_read(spark, part_path, 147.0, 31.0, 149.0, 33.0)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scan = plan.split("Scan parquet")[1]
-    # PartitionFilters carry the pcell predicate — directories are
-    # pruned before file listing
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters:")[1].splitlines()[0]
-    assert "pcell" in pf and pf.strip() != "[]"
-
-
-def test_pruned_read_correctness(spark, part_path):
-    # pruned read + exact bbox filter == full-scan + exact bbox filter
-    q = (147.0, 31.0, 149.0, 33.0)
-    pred = ((F.col("xmin") <= q[2]) & (F.col("xmax") >= q[0])
-            & (F.col("ymin") <= q[3]) & (F.col("ymax") >= q[1]))
-    pruned = {r["url"] for r in partition_pruned_read(
-        spark, part_path, *q).where(pred).collect()}
-    full = {r["url"] for r in spark.read.parquet(part_path)
-            .where(pred).collect()}
-    assert pruned == full and len(full) > 0
-
-
-def test_partition_count_bounded(spark, part_path):
-    import os
-    parts = [d for d in os.listdir(part_path) if d.startswith("pcell=")]
-    assert 1 < len(parts) <= 256
+from scalar_oracles import zorder_key_py
 
 
 def test_zorder_key_matches_python_twin(spark):
-    from rustac_spark.pipeline.layout import zorder_key, zorder_key_py
+    from rustac_spark.pipeline.layout import zorder_key
 
     df = spark.createDataFrame(
         [(x, y) for x in (0, 1, 5, 255, 1023, 65535)
@@ -70,9 +27,8 @@ def test_zorder_files_are_2d_local(spark, tmp_path):
     """Evidence: Morton clustering yields tighter per-file bboxes than
     row-major cell clustering for the same file count — the property
     that makes square queries touch fewer files at 10^12 rows."""
-    import itertools
-    from rustac_spark.pipeline.layout import (
-        with_anchor_cell, with_zorder_key)
+    from rustac_spark.geo.cells import _xi, _yi, cell_of_point
+    from rustac_spark.pipeline.layout import zorder_key
 
     # uniform 64×64 grid of points over a square region
     pts = [(i, -10 + 20 * (i % 64) / 63.0, -10 + 20 * (i // 64) / 63.0)
@@ -102,6 +58,10 @@ def test_zorder_files_are_2d_local(spark, tmp_path):
                      and y0 <= qy1 and y1 >= qy0)
         return n
 
-    z = touches(file_boxes(with_zorder_key(df, res=12), "zkey"))
-    rm = touches(file_boxes(with_anchor_cell(df, res=12), "cell"))
+    lon, lat = F.col("lon"), F.col("lat")
+    z = touches(file_boxes(
+        df.withColumn("zkey", zorder_key(_xi(lon, 12), _yi(lat, 12))),
+        "zkey"))
+    rm = touches(file_boxes(
+        df.withColumn("cell", cell_of_point(lon, lat, 12)), "cell"))
     assert z < rm * 0.7, f"zorder touches {z} not < 0.7 × row-major {rm}"

@@ -9,7 +9,7 @@ from rustac_spark import DATA_DIR
 from rustac_spark.geo.join import explode_page_cells, spatial_join
 from rustac_spark.geocode import with_geocode
 from rustac_spark.pipeline.lineage import Pipeline
-from rustac_spark.pipeline.skew import hot_cells, salted_join, subdivide_cover
+from rustac_spark.pipeline.skew import hot_cells, subdivide_cover
 
 
 @pytest.fixture(scope="module")
@@ -142,15 +142,6 @@ def test_stage_runs_no_lineage_job(spark, tmp_path):
     staged = jobs_in("pipeline-stage-jobs",
                      lambda: pipe.stage("s1", build))
     assert staged == jobs_in("plain-write-jobs", by_hand)
-
-
-def test_salted_join_preserves_multiplicity(spark):
-    big = spark.createDataFrame(
-        [(f"u{i}", i % 3) for i in range(300)], ["url", "k"])
-    small = spark.createDataFrame([(0, "a"), (1, "b"), (0, "c")], ["k", "tag"])
-    plain = big.join(small, "k").groupBy("tag").count().collect()
-    salted = salted_join(big, small, "k").groupBy("tag").count().collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
 
 
 def test_shuffle_join_path_matches_broadcast(spark, pages_geo, queries_df):

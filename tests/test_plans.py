@@ -165,26 +165,15 @@ def test_polygon_free_join_runs_zero_jobs(spark, queries_df):
     sc.setJobGroup(None, None)
 
 
-def test_sketches_single_shuffle_no_python(spark):
-    """HLL/CMS state builds are one map-side-combined shuffle of the
-    bounded register/bucket table — zero Python, zero extra passes."""
-    from rustac_spark.textops.sketches import cms_table, hll_registers
-    df = spark.range(1000).select(F.col("id").cast("string").alias("u"))
-    for sketch in (hll_registers(df, "u"), cms_table(df, "u")):
-        plan = _physical(sketch)
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "HashAggregate" in plan
-        assert "Python" not in plan and "mapInPandas" not in plan
-
-
 def test_hot_cell_membership_is_inset_not_literal_array(spark):
     """O(10^4) hot cells must compile to a single InSet lookup, not a
     10^4-element literal array scanned per row (round-2 VERDICT
     What's-wrong #5 / Next-round #6)."""
-    from rustac_spark.geo.cells import DEFAULT_RES, encode_py
+    from rustac_spark.geo.cells import DEFAULT_RES
+    from scalar_oracles import cell_encode_py
     from rustac_spark.pipeline.skew import subdivide_cover
 
-    hot = {encode_py(DEFAULT_RES, x, y)
+    hot = {cell_encode_py(DEFAULT_RES, x, y)
            for x in range(100) for y in range(100)}
     assert len(hot) == 10_000
     df = spark.range(100).select(
@@ -314,28 +303,17 @@ def test_canonical_url_dedup_no_python_single_shuffle_pair(spark):
     assert "LeftSemi" in plan
 
 
-def test_dup_span_fraction_no_python(spark):
-    """Span detection + interval-merge coverage is windows and
-    groupBys over hashed 8-byte keys — zero Python."""
-    from rustac_spark.textops.ngram import with_dup_span_fraction
-    df = spark.range(50).select(
-        F.col("id").alias("doc_id"),
-        F.lit("a b c d e f g h i j k l").alias("text"))
-    plan = _physical(with_dup_span_fraction(df, n=10))
-    assert "Python" not in plan and "mapInPandas" not in plan
-
-
-def test_decontaminate_broadcasts_grams_no_corpus_shuffle(spark):
+def test_contaminated_gram_counts_broadcasts_grams_no_corpus_shuffle(spark):
     """The benchmark gram set broadcasts; the corpus is scanned once
     and never hash-partitioned — only the (small) hit rows aggregate
-    by doc id; the contaminated-id set broadcasts back (left_anti)."""
-    from rustac_spark.textops.ngram import decontaminate
+    by doc id."""
+    from rustac_spark.textops.ngram import contaminated_gram_counts
     docs = spark.range(100).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("tok"), F.col("id").cast("string"),
                  F.lit(" a b c d e f g h i")).alias("text"))
     bench = docs.where(F.col("doc_id") % 10 == 0).select("text")
-    plan = _physical(decontaminate(docs, bench, n=8))
+    plan = _physical(contaminated_gram_counts(docs, bench, n=8))
     assert "Python" not in plan and "mapInPandas" not in plan
     assert plan.count("BroadcastHashJoin") >= 1
     assert "SortMergeJoin" not in plan

@@ -1,15 +1,14 @@
-"""Microsecond-exact sessionize gap parity: batch == DuckDB == stream.
+"""Microsecond-exact sessionize gap parity: batch == DuckDB.
 
 All fixture gaps sit within a second of the 30-minute threshold
 (1799.9 / 1800.0 / 1800.000001 / 1800.9 s). Whole-second epoch
 truncation (the round-2 latent bug) reads a 1800.000001 s gap as 1800
-and misses the session break; this test pins the boundary on all three
-implementations: events.sessionize (batch windows), the DuckDB oracle
-formulation (epoch_us), and streaming.sessionize_stream (stateful).
+and misses the session break; this test pins the boundary on both
+implementations: events.sessionize (batch windows) and the DuckDB
+oracle formulation (epoch_us).
 """
 
 import datetime
-import os
 
 import duckdb
 import pandas as pd
@@ -68,46 +67,3 @@ def test_duckdb_oracle_boundary(tmp_path):
     """).fetchall()
     assert [n for _, n in rows] == EXPECTED_N_EVENTS
     assert all(isinstance(sid, int) for sid, _ in rows)
-
-
-def test_stream_boundary(spark, tmp_path):
-    """The stateful streaming twin makes identical gap decisions."""
-    from rustac_spark.streaming import sessionize_stream
-
-    indir, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ck"))
-    os.makedirs(indir)
-    rows = _events()
-    # far-future sentinel pushes the watermark past every quiet period
-    rows.append((99, T0 + datetime.timedelta(days=2), 0.0))
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts", "value"])
-    pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
-    schema = pa.schema([("user_id", pa.int64()),
-                        ("ts", pa.timestamp("us", tz="UTC")),
-                        ("value", pa.float64())])
-    pq.write_table(pa.Table.from_pandas(pdf[:5], schema=schema),
-                   f"{indir}/f1.parquet")
-    pq.write_table(pa.Table.from_pandas(pdf[5:], schema=schema),
-                   f"{indir}/f2.parquet")
-    t = os.path.getmtime(f"{indir}/f1.parquet")
-    os.utime(f"{indir}/f2.parquet", (t + 10, t + 10))
-
-    events = (spark.readStream
-              .schema("user_id long, ts timestamp, value double")
-              .option("maxFilesPerTrigger", "1").parquet(indir))
-    q = (sessionize_stream(events, gap_minutes=30,
-                           watermark="1 minute")
-         .writeStream.outputMode("append")
-         .option("checkpointLocation", ckpt)
-         .format("parquet").option("path", out)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    got = sorted((r["n_events"], str(r["session_start"]))
-                 for r in spark.read.parquet(out)
-                 .where("user_id = 1").collect())
-    # sub-second session starts survive (unit=us state)
-    ev = _events()
-    e3, e4 = ev[3][1], ev[4][1]
-    assert [n for n, _ in got] == sorted(EXPECTED_N_EVENTS)
-    starts = {s for _, s in got}
-    assert str(e3) in starts and str(e4) in starts

@@ -132,44 +132,6 @@ def test_no_partial_visibility(spark, tmp_path):
     assert t.history()[-1]["n_rows"] == 6
 
 
-def test_stream_to_table_exactly_once(spark, tmp_path):
-    """Streaming micro-batches become table snapshots; a replayed
-    batch id is recognized and skipped (exactly-once)."""
-    import os
-    import numpy as np
-
-    from rustac_spark.pipeline.snapshots import stream_to_table
-    from rustac_spark.streaming import PAGES_SCHEMA
-    from rustac_spark.synth import pages_batch
-
-    indir = str(tmp_path / "in")
-    tdir = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ck")
-    os.makedirs(indir)
-    pdf = pages_batch(np.arange(400))
-    spark.createDataFrame(pdf[:200]).write.parquet(f"{indir}/d1")
-    q = stream_to_table(
-        spark.readStream.schema(PAGES_SCHEMA).parquet(f"{indir}/*"),
-        tdir, ckpt)
-    q.awaitTermination(120)
-    t = SnapshotTable(spark, tdir)
-    assert t.read().count() == 200
-    # second drop → incremental batch → one more snapshot
-    spark.createDataFrame(pdf[200:]).write.parquet(f"{indir}/d2")
-    q = stream_to_table(
-        spark.readStream.schema(PAGES_SCHEMA).parquet(f"{indir}/*"),
-        tdir, ckpt)
-    q.awaitTermination(120)
-    assert t.read().count() == 400
-    ops = [h["operation"] for h in t.history()]
-    assert ops[0] == "create" and "append" in ops
-    # simulate a replay: re-committing an already-seen batch id is a
-    # no-op
-    some = spark.createDataFrame(pdf[:5])
-    assert t.append_batch_exactly_once(some, batch_id=0) is None
-    assert t.read().count() == 400
-
-
 def test_delete_where_null_predicate_keeps_rows(spark, tmp_path):
     """SQL/Iceberg DELETE removes only rows where the condition is
     TRUE — a NULL-evaluating row must survive, including in files that

@@ -13,6 +13,7 @@ from rustac_spark.geo.knn import knn_bruteforce, knn_cells
 from rustac_spark.geo.tiles import explode_tiles
 from rustac_spark.geo.wkbio import parse_wkb
 from rustac_spark.geocode import with_geocode
+from scalar_oracles import cell_decode_py
 
 PAGES = f"{DATA_DIR}/pages_sf0.001.parquet"
 GEO = f"{DATA_DIR}/pages_geo_sf0.001.parquet"
@@ -48,7 +49,7 @@ def test_cell_cover_contains_point_cell(spark):
                          F.col("x") + 0.5, F.col("y") + 0.5).alias("cov"),
     ).collect()[0]
     assert row["pc"] in row["cov"]
-    res, x, y = cells.decode_py(row["pc"])
+    res, x, y = cell_decode_py(row["pc"])
     assert res == cells.DEFAULT_RES
 
 
@@ -62,7 +63,7 @@ def test_k_ring_and_children(spark):
     assert len(row["ring"]) == 9 and row["c"] in row["ring"]
     assert len(row["kids"]) == 4
     for kid in row["kids"]:
-        r, x, y = cells.decode_py(kid)
+        r, x, y = cell_decode_py(kid)
         assert r == cells.DEFAULT_RES + 1
 
 
